@@ -23,7 +23,7 @@ import tempfile
 import time
 
 from .config import GeneratorConfig, engine_config_from_env
-from .session import get_spark
+from .session import get_spark, start_stream
 from .sources.generator import generate_events
 from .sources.rate_stream import message_rate_stream
 from .streaming.detector import detect_undelivered
@@ -50,14 +50,14 @@ def dry_run(args: argparse.Namespace) -> None:
     ecfg = engine_config_from_env()
     timeout_ms = ecfg.timeout_s * 1000
     stream = read_event_stream_from_files(spark, events_dir)
-    q = (
+    q = start_stream(
         detect_undelivered(stream, timeout_ms, watermark_delay=f"{ecfg.watermark_delay_s} seconds")
         .writeStream.format("memory")
         .queryName("demo_out")
         .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        spark,
     )
     q.awaitTermination(300)
     if q.isActive:
@@ -93,12 +93,12 @@ def live(args: argparse.Namespace) -> None:
     )
     det = detect_undelivered(stream, timeout_ms=60_000, watermark_delay="5 seconds")
     ckpt = tempfile.mkdtemp(prefix="demo-live-ckpt-")
-    q = (
+    q = start_stream(
         det.writeStream.format("memory")
         .queryName("demo_live_out")
         .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
+        .option("checkpointLocation", ckpt),
+        spark,
     )
     print(f"== live: {args.rate} events/s for {args.seconds}s (Ctrl-C to stop) ==")
     deadline = time.time() + args.seconds

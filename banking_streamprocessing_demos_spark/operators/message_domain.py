@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import GeneratorConfig
+from ..session import start_stream
 from ..sources.generator import generate_events
 from .snapshot import carrier_active_counts, messages_snapshot, timeout_alerts_batch
 from . import Registry
@@ -247,13 +248,13 @@ def st1_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_event_stream_from_files(spark, events_dir)
     detected = detect_undelivered(stream, TIMEOUT_MS, watermark_delay="30 seconds")
     name = f"st1_out_{uuid.uuid4().hex[:8]}"
-    q = (
+    q = start_stream(
         detected.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        spark,
     )
     q.awaitTermination(240)
     if q.isActive:

@@ -1315,8 +1315,9 @@ def _round6_spark(x: float) -> float:
     is the same shortest round-trip decimal (probe class as _dlit), and
     Decimal.quantize(HALF_UP) is the same away-from-zero half rule.
     Java's BigDecimal cannot represent -0.0, so an exactly-zero result
-    is normalized to +0.0 to match the JVM output bit-for-bit."""
-    f = float(_Dec(repr(x)).quantize(_Q6, rounding=_HALF_UP))
+    is normalized to +0.0 to match the JVM output bit-for-bit.  ``float(x)``
+    first: numpy >= 2 reprs an ``np.float64`` as ``np.float64(0.1)``."""
+    f = float(_Dec(repr(float(x))).quantize(_Q6, rounding=_HALF_UP))
     return 0.0 if f == 0.0 else f
 
 

@@ -42,6 +42,7 @@ import uuid
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import start_stream
 from ..sources.tables import load_table
 from . import Registry
 from .dedup import (
@@ -126,13 +127,13 @@ def _run_available_now(
 ) -> DataFrame:
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
     spark = df.sparkSession
-    q = (
+    q = start_stream(
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
         .option("checkpointLocation", tempfile.mkdtemp(prefix=f"{prefix}-ckpt-"))
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        spark,
     )
     q.awaitTermination(timeout_s)
     if q.isActive:

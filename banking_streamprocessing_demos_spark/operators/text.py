@@ -875,8 +875,9 @@ def _bpe_fit_docs(docs: DataFrame) -> tuple[list[tuple], DataFrame]:
     the same memory class — and with it collected, each of the 8 merge
     rounds was 2 fixed-overhead Spark jobs (pair argmax + fold
     checkpoint, ~0.2 s each) to move a few thousand rows.  The replay
-    is bit-identical to the distributed fold (pinned in
-    tests/test_llm_ops.py::test_bpe_fit_replay_matches_distributed):
+    learns the same merges as the distributed fold (checked by the
+    ``pipe_bpe_merges`` oracle, which replays the fold in DuckDB, and by
+    tests/test_llm_ops.py::test_bpe_fit_matches_textbook_reference):
     pair counts are exact integer sums; the (count desc, a, b) argmax
     ties break on Python string order == Spark's UTF8 binary order
     (UTF-8 byte order is code-point order); the merge application

@@ -6,9 +6,12 @@ Local tests run on ``local[N]`` but every knob here is chosen for the
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing)
 - Arrow on (the stateful streaming operator and any pandas UDF cross the
   JVM/Python boundary in columnar batches, not rows)
-- shuffle partitions sized to the local core count for tests; on a real
-  cluster this is overridden to ~2-3x total cores (or left to AQE's
-  coalescing with a high initial value)
+- shuffle partitions: batch queries start at a high initial count
+  (``DEFAULT_SHUFFLE_PARTITIONS``) and AQE coalesces it per stage.
+  Streaming queries run with AQE off, so every micro-batch pays for
+  every partition of every state store; ``start_stream`` starts them at
+  ``defaultParallelism`` (one partition per core), and their checkpoint
+  then pins that count for every restart
 - RocksDB state store for streaming state that exceeds heap
 """
 
@@ -17,6 +20,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -72,3 +76,23 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def start_stream(writer: DataStreamWriter, spark: SparkSession) -> StreamingQuery:
+    """``writer.start()`` with ``spark.sql.shuffle.partitions`` set to
+    ``defaultParallelism`` for this query only.
+
+    ``start()`` clones the session conf into the query, so the count is
+    set around the call and the session's own value is put back in a
+    ``finally``.  A query restarted from a checkpoint keeps the count its
+    first start wrote there (Spark restores it from the offset log).
+    A ``foreachBatch`` sink's writes run in the query's session, so they
+    use the same count.  Do not start streams concurrently from two threads on one session:
+    the other thread could start with, or put back, the wrong value."""
+    key = "spark.sql.shuffle.partitions"
+    session_value = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        return writer.start()
+    finally:
+        spark.conf.set(key, session_value)

@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import start_stream
 from .avro_wire import from_wire, to_wire
 
 TOPIC = "message_status"  # phone_message_producer.py:36,942
@@ -65,10 +66,10 @@ def write_message_stream(events: DataFrame, checkpoint: str) -> "DataFrame":
     if not kafka_available(spark):
         raise RuntimeError("spark-sql-kafka connector not on classpath")
     wire = to_wire(events)
-    return (
+    return start_stream(
         wire.writeStream.format("kafka")
         .option("kafka.bootstrap.servers", _bootstrap())
         .option("topic", TOPIC)
-        .option("checkpointLocation", checkpoint)
-        .start()
+        .option("checkpointLocation", checkpoint),
+        spark,
     )

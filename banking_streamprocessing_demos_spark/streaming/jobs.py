@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import MESSAGE_EVENT_SCHEMA
+from ..session import start_stream
 
 
 def read_event_stream_from_files(
@@ -94,12 +95,12 @@ def phone_sessions(events: DataFrame, gap: str = "45 seconds") -> DataFrame:
 def run_to_memory(df: DataFrame, name: str, timeout_s: int = 120) -> None:
     """Execute a streaming DataFrame to completion (availableNow) into an
     in-memory table ``name`` — the test sink."""
-    q = (
+    q = start_stream(
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        df.sparkSession,
     )
     q.awaitTermination(timeout_s)
     if q.isActive:
@@ -160,11 +161,11 @@ def run_detector_pipeline(
         finally:
             batch_df.unpersist()
 
-    return (
+    return start_stream(
         detected.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        detected.sparkSession,
     )
 
 
@@ -559,11 +560,11 @@ def run_streaming_heavy_hitters(
         finally:
             batch_df.unpersist()
 
-    return (
+    return start_stream(
         cells.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        cells.sparkSession,
     )
 
 
@@ -641,11 +642,11 @@ def run_streaming_pack(
             .parquet(state_dir)
         )
 
-    return (
+    return start_stream(
         doc_stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        doc_stream.sparkSession,
     )
 
 
@@ -703,9 +704,9 @@ def run_streaming_reservoir(
         )
         merged.write.mode("overwrite").parquet(reservoir_dir)
 
-    return (
+    return start_stream(
         doc_stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        doc_stream.sparkSession,
     )

@@ -375,6 +375,24 @@ def test_round6_spark_matches_engine_round(spark):
         assert struct.pack("<d", _round6_spark(v)) == struct.pack("<d", g), (v, g)
 
 
+def test_round6_spark_rounds_numpy2_scalars():
+    """The rotation kernel feeds numpy float64 scalars to _round6_spark;
+    under numpy >= 2 their repr is ``np.float64(0.1)``, which is not a
+    decimal literal.  A float subclass with that repr must round like
+    the plain float."""
+    import struct
+
+    from banking_streamprocessing_demos_spark.operators.pq import _round6_spark
+
+    class Numpy2Float(float):
+        def __repr__(self) -> str:
+            return f"np.float64({float.__repr__(self)})"
+
+    for v in (0.1, 0.1234565, -0.9999995, 4.9999995e-7, 0.0, -0.0):
+        got = _round6_spark(Numpy2Float(v))
+        assert struct.pack("<d", got) == struct.pack("<d", _round6_spark(v)), v
+
+
 def test_opq_rotation_is_orthonormal_and_preserves_dots(spark):
     """The seeded rotation must be orthonormal to ~literal-rounding
     precision (rows unit-norm, pairwise orthogonal), so rotated ADC
