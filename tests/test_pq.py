@@ -299,23 +299,42 @@ def test_lloyd_replay_matches_distributed(spark):
     offset seeding."""
     import struct
 
+    from pyspark.sql import functions as F
+
     from banking_streamprocessing_demos_spark.operators.pq import (
+        IVF_CELLS,
         N_TRAIN,
         PQ_ITERS,
         _sampled_subs,
+        _subs_df,
+        _train_ids,
         _train_on,
         _train_on_replay,
+        _unit,
+        ivfpq_index,
     )
 
+    def assert_bit_identical(dist, replay):
+        assert len(dist) == len(replay)
+        for m in range(len(dist)):
+            for k in range(len(dist[m])):
+                for d in range(len(dist[m][k])):
+                    assert struct.pack("<d", dist[m][k][d]) == struct.pack(
+                        "<d", replay[m][k][d]
+                    ), (m, k, d, dist[m][k][d], replay[m][k][d])
+
     subs = _sampled_subs(spark, SF_SMALL, N_TRAIN)
-    dist = _train_on(subs, PQ_ITERS)
-    replay = _train_on_replay(subs.collect(), PQ_ITERS)
-    for m in range(len(dist)):
-        for k in range(len(dist[m])):
-            for d in range(len(dist[m][k])):
-                assert struct.pack("<d", dist[m][k][d]) == struct.pack(
-                    "<d", replay[m][k][d]
-                ), (m, k, d, dist[m][k][d], replay[m][k][d])
+    assert_bit_identical(_train_on(subs, PQ_ITERS), _train_on_replay(subs.collect(), PQ_ITERS))
+
+    # residual path: the sampled residual sub-vectors exactly as
+    # ivfpq_index(train_sample=N_TRAIN) draws them, seeded at IVF_CELLS
+    _, resid, cbr = ivfpq_index(spark, SF_SMALL, train_sample=N_TRAIN)
+    rsubs = _subs_df(resid, col="r").join(
+        F.broadcast(_train_ids(_unit(spark, SF_SMALL), N_TRAIN, offset=IVF_CELLS)), "vec_id", "semi"
+    )
+    rdist = _train_on(rsubs, PQ_ITERS, offset=IVF_CELLS)
+    assert_bit_identical(rdist, _train_on_replay(rsubs.collect(), PQ_ITERS, offset=IVF_CELLS))
+    assert_bit_identical(rdist, cbr)
 
 
 def test_opq_rotate_kernel_matches_sql(spark):
