@@ -844,7 +844,7 @@ def _adc_pq_scored(
 
 IVFPQ_PROBES = 4  # coarse cells probed per query (of IVF_CELLS)
 # ADC shortlist depth: 2x the flat-PQ funnel — the measured knee
-# (BENCH_ivfpq_probes.json: probes 2->8 is recall-flat at 0.80 while
+# (SCALE.md, round 6: probes 2->8 is recall-flat at 0.80 while
 # rerank 64->128 closes recall to 1.00 at ~4% wall; true neighbors sat
 # just below the 64 boundary in residual-ADC order)
 IVFPQ_RERANK = 128

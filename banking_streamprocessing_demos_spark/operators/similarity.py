@@ -134,7 +134,7 @@ def _centroids(n: "DataFrame", n_cells: int = IVF_CELLS) -> "DataFrame":
     rounds — the plan shape is identical).  ``n_cells`` defaults to the
     oracle-pinned IVF_CELLS; scale runs grow it proportionally to the
     corpus (constant cell SIZE is the production invariant — see
-    tools/bench_scale.py)."""
+    SCALE.md)."""
     return n.filter(F.col("vec_id") < n_cells).select(
         F.col("vec_id").alias("cell_id"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
     )
@@ -218,7 +218,7 @@ def rank_cells_arrow(n: DataFrame, n_cells: int = IVF_CELLS, keep: int = 1) -> D
     tiebreak, rank_cells' exact ordering contract.  Replaces the
     N x n_cells x DIMS SQL-expression arithmetic that the round-10
     checksum-forced A/B proved is the assignment wall: measured at the
-    x100 point (BENCH_assign_arrow_ab.json) 27.3 s vs 133.7 s in-row /
+    x100 point 27.3 s vs 133.7 s in-row /
     122.2 s JL-prescreened — ~4.9x — while matching the exact in-row
     assignment CHECKSUM-IDENTICALLY over all 200k vectors (the JL
     shortlist path it supersedes was approximate).  BLAS associates
@@ -337,8 +337,8 @@ def rank_cells(
     oracle-pinned IVF_CELLS floor, keep=1 ASSIGNMENT rankings route to
     ``rank_cells_arrow``: EXACT argmax via one BLAS matmul per Arrow
     batch, measured 4.9x faster on the isolated x100 assignment A/B
-    (BENCH_assign_arrow_ab.json: 27.3 s vs 133.7/122.2 s,
-    checksum-identical to the exact assignment) and 2.7x end-to-end on
+    (27.3 s vs 133.7/122.2 s, checksum-identical to the exact
+    assignment) and 2.7x end-to-end on
     the assignment-dominated sim_ann_ivf_binary chain (27.7 s vs
     73.7 s forced-SQL / 78.4 s committed at x100).  keep>1 rankings
     KEEP the JL-SQL shape: the multi-consumer self-join families
@@ -498,8 +498,7 @@ def ranked_cells_materialized(
     through arrow with a localCheckpoint-materialized skinny ranking:
     both variants measured SLOWER than the committed JL curves at
     x1..x100 — their walls are candidate-scoring-bound and the arrow
-    stage pays Arrow transfer + lost pipelining; BENCH_arrow_scale.json,
-    SCALE.md round-11.)"""
+    stage pays Arrow transfer + lost pipelining; SCALE.md round-11.)"""
     return rank_cells(n, n_cells, keep=keep, jl_shortlist=jl_shortlist)
 
 
@@ -526,7 +525,7 @@ def assign_cells_inrow(n: DataFrame, n_cells: int = IVF_CELLS) -> DataFrame:
     cosine desc, cell_id asc (max over (cos, -cell_id) structs) —
     equivalence with assign_cells pinned in tests/test_llm_ops.py; the
     measured marginal cost at auto_cells=1562 is 0.597 ms/vector
-    (BENCH_ivf_assign_stream.json, SCALE.md)."""
+    (SCALE.md)."""
     cents_row = (
         _centroids(n, n_cells)
         .agg(F.sort_array(F.collect_list(F.struct("cell_id", "cv", "cn"))).alias("cents"))

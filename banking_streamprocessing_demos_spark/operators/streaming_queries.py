@@ -3384,7 +3384,7 @@ def ivf_assign_stream_arrow(stream: DataFrame, cents: DataFrame) -> DataFrame:
     at stream start (bounded, model-scale; the quantizer is frozen by
     definition at ingest) and each Arrow micro-batch does one numpy
     float64 matmul + stable argsort.  Measured on the x100 quantizer
-    (1562 cells, BENCH_ivf_assign_stream.json round-12): ~0.07 ms per
+    (1562 cells, round 12): ~0.07 ms per
     vector marginal vs ~0.13 in-row SQL and ~5.8 per-batch vs the
     join+agg shape — the adopted route for above-floor ingest; the
     driver-checked streaming_ivf_assign (16-cell floor, windowed

@@ -297,3 +297,32 @@ def test_r9b_table_cells_match_artifact(doc_text):
         if scaled:
             assert cells[2] == str(scaled["recall_at_5"]), (pt, cells[2])
             assert cells[3] == str(scaled["depth"]), (pt, cells[3])
+
+
+CITED_FILE = re.compile(r"(?<![\w./-])((?:[\w-]+/)*[\w-]+\.(?:py|json))\b")
+
+
+def test_cited_files_exist(doc_text):
+    """Every `*.py` / `*.json` file the live docs and the verify skill
+    cite must exist, so deleting a script or artifact cannot leave a
+    dangling citation behind.  A citation resolves against the repo
+    root, `tools/`, `tests/`, the package or any of its subpackages
+    (the docs write `streaming/detector.py` and bare `detector.py`)."""
+    pkg = ROOT / "banking_streamprocessing_demos_spark"
+    bases = [ROOT, ROOT / "tools", ROOT / "tests", pkg]
+    bases += [p for p in pkg.rglob("*") if p.is_dir() and p.name != "__pycache__"]
+    texts = dict(doc_text)
+    skill = ".claude/skills/verify/SKILL.md"
+    texts[skill] = (ROOT / skill).read_text()
+    missing = {
+        doc: sorted(
+            {
+                name
+                for name in CITED_FILE.findall(text)
+                if not any((base / name).is_file() for base in bases)
+            }
+        )
+        for doc, text in texts.items()
+    }
+    missing = {doc: names for doc, names in missing.items() if names}
+    assert not missing, f"docs cite files that do not exist: {missing}"

@@ -1393,7 +1393,7 @@ def test_streaming_tmix_multipliers_reconcile_with_batch(spark):
 def test_assign_cells_inrow_matches_batch_assign(spark):
     """The ingest-time in-row argmax (one broadcast centroid-array row,
     transform + array_max per vector — the measured 0.597 ms/vector
-    incremental-maintenance path, BENCH_ivf_assign_stream.json) must
+    incremental-maintenance path, SCALE.md) must
     assign every vector to exactly the cell the batch rank_cells path
     picks, at the oracle floor AND at a larger cell count (where the
     in-row shape is the one that scales)."""

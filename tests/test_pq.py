@@ -272,7 +272,7 @@ def test_ivfpq_widened_funnel_degenerates_to_bruteforce(spark):
     """probes/rerank are the scale-tuning surface: probing EVERY coarse
     cell with an unbounded rerank makes the shortlist the whole corpus
     and the exact rerank decides everything — must equal brute force.
-    (BENCH_ivfpq_probes.json records the practical knee: probes 2->8 is
+    (The measured practical knee, SCALE.md round 6: probes 2->8 is
     recall-flat, rerank 64->128 closes the gap — residual-quantization
     error at the shortlist boundary, not coarse pruning, owns the
     missing recall.)"""
