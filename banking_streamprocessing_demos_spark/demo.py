@@ -23,7 +23,7 @@ import tempfile
 import time
 
 from .config import GeneratorConfig, engine_config_from_env
-from .session import get_spark, start_stream
+from .session import get_spark, machine_cpus, start_stream
 from .sources.generator import generate_events
 from .sources.rate_stream import message_rate_stream
 from .streaming.detector import detect_undelivered
@@ -129,7 +129,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--show", type=int, default=20, help="console lines to print in dry-run")
     ap.add_argument("--rate", type=int, default=10_000, help="events/s in live mode")
     ap.add_argument("--seconds", type=int, default=30, help="live-mode duration")
-    ap.add_argument("--cpus", type=int, default=8)
+    ap.add_argument("--cpus", type=int, default=machine_cpus())
     args = ap.parse_args(argv)
     if args.live:
         live(args)
