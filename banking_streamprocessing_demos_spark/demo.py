@@ -27,7 +27,7 @@ from .session import get_spark, machine_cpus, start_stream
 from .sources.generator import generate_events
 from .sources.rate_stream import message_rate_stream
 from .streaming.detector import detect_undelivered
-from .streaming.jobs import console_dry_run, read_event_stream_from_files
+from .streaming.jobs import console_dry_run, read_event_stream_from_files, run_to_memory
 
 
 def dry_run(args: argparse.Namespace) -> None:
@@ -45,25 +45,14 @@ def dry_run(args: argparse.Namespace) -> None:
 
     # detector over a file replay (Kafka-less path)
     events_dir = tempfile.mkdtemp(prefix="demo-events-")
-    ckpt = tempfile.mkdtemp(prefix="demo-ckpt-")
     events.coalesce(4).write.mode("overwrite").parquet(events_dir)
     ecfg = engine_config_from_env()
-    timeout_ms = ecfg.timeout_s * 1000
     stream = read_event_stream_from_files(spark, events_dir)
-    q = start_stream(
-        detect_undelivered(stream, timeout_ms, watermark_delay=f"{ecfg.watermark_delay_s} seconds")
-        .writeStream.format("memory")
-        .queryName("demo_out")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
-        spark,
-    )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("demo detector replay did not finish within 300s")
-    out = spark.table("demo_out").cache()
+    out = run_to_memory(
+        detect_undelivered(
+            stream, ecfg.timeout_s * 1000, watermark_delay=f"{ecfg.watermark_delay_s} seconds"
+        )
+    ).cache()
 
     print(f"\n== detector (timeout {ecfg.timeout_s}s) ==")
     for r in out.groupBy("kind").count().orderBy("kind").collect():

@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import GeneratorConfig
-from ..session import start_stream
 from ..sources.generator import generate_events
 from .snapshot import carrier_active_counts, messages_snapshot, timeout_alerts_batch
 from . import Registry
@@ -236,33 +235,14 @@ def gen_carrier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st1_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
-    import uuid
 
     from ..streaming.detector import detect_undelivered
-    from ..streaming.jobs import read_event_stream_from_files
+    from ..streaming.jobs import read_event_stream_from_files, run_to_memory
 
     events_dir = tempfile.mkdtemp(prefix="st1-events-")
-    ckpt = tempfile.mkdtemp(prefix="st1-ckpt-")
     _events(spark, CFG).coalesce(4).write.mode("overwrite").parquet(events_dir)
-
     stream = read_event_stream_from_files(spark, events_dir)
-    detected = detect_undelivered(stream, TIMEOUT_MS, watermark_delay="30 seconds")
-    name = f"st1_out_{uuid.uuid4().hex[:8]}"
-    q = start_stream(
-        detected.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
-        spark,
-    )
-    q.awaitTermination(240)
-    if q.isActive:
-        q.stop()
-        # a partial memory table would masquerade as a detector-semantics
-        # bug in the correctness gate — fail loudly instead
-        raise TimeoutError("st1 streaming detector did not finish within 240s")
-    return spark.table(name)
+    return run_to_memory(detect_undelivered(stream, TIMEOUT_MS, watermark_delay="30 seconds"))
 
 
 CFG_NORMAL = GeneratorConfig(

@@ -144,19 +144,6 @@ def _sub(col: str, m: int):
     return F.slice(col, m * PQ_SUBDIM + 1, PQ_SUBDIM)
 
 
-def _lit_vec(vals: list[float]):
-    """ONE py4j round-trip (a single F.expr whose doubles are exact —
-    similarity._dlit) instead of len(vals) F.lit round-trips under an
-    F.array call — value-identical, and Catalyst constant-folds either
-    form to the same Literal.  The PQ/OPQ family embeds hundreds of
-    vector literals per plan (codebooks, LUTs, rotation rows), and the
-    round-12 probes measured the training walls ~100% fixed DRIVER-side
-    overhead (sf0.001 ≈ sf0.1 wall; cProfile: >80% of pq_train inside
-    py4j socket round-trips at ~0.2-0.6 ms each), so round-trip count
-    is the lever."""
-    return F.expr(_arr_sql(vals))
-
-
 def _self_dot(c: list[float]) -> float:
     """|c|^2 as the engine would fold it: left-associative from 0.0.
     Python floats ARE IEEE doubles.  CAVEAT (round-7 rotation fuzz
@@ -189,10 +176,6 @@ def _cb_structs_sql(cb_m: list[list[float]]) -> str:
         for k, c in enumerate(cb_m)
     )
     return f"array({entries})"
-
-
-def _cb_struct_lit(cb_m: list[list[float]]):
-    return F.expr(_cb_structs_sql(cb_m))
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -230,12 +213,6 @@ def _argmin_sql(s: str, cb_m: list[list[float]]) -> str:
         f"e -> named_struct('d', round(e.cc - 2 * {_dot_sql(s, 'e.c')}, 6), "
         f"'k', e.k))).k"
     )
-
-
-def _argmin_code(s: str, cb_m: list[list[float]]):
-    """Column form of _argmin_sql — ``s`` is a SQL fragment naming the
-    sub-vector (a column name or slice(...) text)."""
-    return F.expr(_argmin_sql(s, cb_m))
 
 
 def _subs_df(unit: DataFrame, col: str = "u") -> DataFrame:
@@ -870,10 +847,6 @@ def _cell_structs_sql(cells: list[list[float]]) -> str:
         f"named_struct('c', {_arr_sql(c)}, 'k', {k})" for k, c in enumerate(cells)
     )
     return f"array({entries})"
-
-
-def _cell_struct_lit(cells: list[list[float]]):
-    return F.expr(_cell_structs_sql(cells))
 
 
 def _argmax_cell(u: str, cells: list[list[float]]):

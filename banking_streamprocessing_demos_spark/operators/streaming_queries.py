@@ -1,6 +1,6 @@
 """Driver-checkable STREAMING queries: each registry entry below runs a
 real Structured Streaming job to completion (file replay → availableNow
-→ memory sink, the st1 pattern from operators/message_domain.py) and
+→ memory sink, through ``streaming/jobs.py:run_to_memory``) and
 returns a deterministic DataFrame with an exact DuckDB oracle — the
 streaming twins graduate from pytest-only evidence to hash-checked
 correctness rows.
@@ -37,13 +37,12 @@ from __future__ import annotations
 import os
 import tempfile
 import time
-import uuid
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import start_stream
 from ..sources.tables import load_table
+from ..streaming.jobs import finish, run_to_memory
 from . import Registry
 from .dedup import (
     MINHASH_BANDS,
@@ -122,26 +121,6 @@ def _write_sorted_replay(df: DataFrame, prefix: str, order_cols: list[str]) -> s
     return path
 
 
-def _run_available_now(
-    df: DataFrame, prefix: str, timeout_s: int = 240, output_mode: str = "append"
-) -> DataFrame:
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    spark = df.sparkSession
-    q = start_stream(
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix=f"{prefix}-ckpt-"))
-        .trigger(availableNow=True),
-        spark,
-    )
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(f"streaming query {prefix} did not finish within {timeout_s}s")
-    return spark.table(name)
-
-
 @REG.add(
     "streaming_doc_dedup",
     f"""
@@ -166,9 +145,7 @@ def streaming_doc_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).parquet(path)
     # horizon > replay span (DUP_OFFSET seconds ≈ 116 days): no eviction,
     # stream == global first-arrival dedup
-    out = _run_available_now(
-        streaming_doc_dedup(stream, delay="3650 days"), "streaming_doc_dedup"
-    )
+    out = run_to_memory(streaming_doc_dedup(stream, delay="3650 days"))
     return out.select("doc_id", "content_hash")
 
 
@@ -222,10 +199,7 @@ def streaming_minhash_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(
         "doc_id long, text string, ingest_ts timestamp"
     ).parquet(path)
-    out = _run_available_now(
-        streaming_minhash_dedup(stream, window="1 minute", delay="2 minutes"),
-        "streaming_minhash_dedup",
-    )
+    out = run_to_memory(streaming_minhash_dedup(stream, window="1 minute", delay="2 minutes"))
     # belt-and-braces: the sentinel's window cannot have closed, but pin
     # the output bound so a future flush-semantics change fails loudly
     # in the hash gate rather than silently including it
@@ -293,10 +267,7 @@ def streaming_keep_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(
         "doc_id long, text string, ingest_ts timestamp"
     ).parquet(path)
-    out = _run_available_now(
-        streaming_keep_best(stream, window="1 minute", delay="2 minutes"),
-        "streaming_keep_best",
-    )
+    out = run_to_memory(streaming_keep_best(stream, window="1 minute", delay="2 minutes"))
     return out.select("window_start_ms", "sig_key", "doc_id", "word_count", "n_members")
 
 
@@ -357,9 +328,8 @@ def streaming_hll_distinct_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = tempfile.mkdtemp(prefix="shll-events-")
     events.unionByName(sentinel).coalesce(4).write.mode("overwrite").parquet(path)
     stream = read_event_stream_from_files(spark, path)
-    out = _run_available_now(
-        streaming_hll_distinct(stream, key="phone_number", window="1 minute", delay="30 seconds"),
-        "streaming_hll_distinct",
+    out = run_to_memory(
+        streaming_hll_distinct(stream, key="phone_number", window="1 minute", delay="30 seconds")
     )
     # the sentinel's own (never-closed, never-emitted) window starts
     # after max_ts; bound the output to real windows only
@@ -418,9 +388,8 @@ def streaming_cms_cells_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = tempfile.mkdtemp(prefix="scms-events-")
     events.unionByName(sentinel).coalesce(4).write.mode("overwrite").parquet(path)
     stream = read_event_stream_from_files(spark, path)
-    out = _run_available_now(
-        streaming_cms_cells(stream, key="phone_number", window="1 minute", delay="30 seconds"),
-        "streaming_cms_cells",
+    out = run_to_memory(
+        streaming_cms_cells(stream, key="phone_number", window="1 minute", delay="30 seconds")
     )
     return out.filter(F.col("window_start_ms") <= F.lit(max_ts)).select(
         "window_start_ms", F.col("r").cast("int").alias("r"), "bucket", "c"
@@ -504,7 +473,7 @@ def streaming_ivf_assign_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         (-F.col("b.neg_cell")).alias("cell_id"),
         F.round(F.col("b.cell_cos"), 6).alias("cell_cos"),
     )
-    out = _run_available_now(out_stream, "streaming_ivf_assign")
+    out = run_to_memory(out_stream)
     return out.filter(F.col("vec_id") < SENTINEL_ORD)
 
 
@@ -586,7 +555,7 @@ def streaming_pq_assign_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fails the gate loudly — no output filter needed (a bound of
     # SENTINEL_ORD*1000 was a no-op: the sentinel's tumbling window
     # starts below it)
-    return _run_available_now(out_stream, "streaming_pq_assign")
+    return run_to_memory(out_stream)
 
 
 # coarse-screen membership threshold for the MRL serving twin: prefix
@@ -694,7 +663,7 @@ def streaming_mrl_assign_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("shortlist_size").cast("long").alias("shortlist_size"),
         F.col("n_queries").cast("long").alias("n_queries"),
     )
-    out = _run_available_now(out_stream, "streaming_mrl_assign")
+    out = run_to_memory(out_stream)
     # guard bound = the sentinel's own WINDOW START (SENTINEL_ORD is not
     # minute-aligned, so BASE + ORD*1000 would sit above the window
     # start and the filter would be the documented no-op of
@@ -800,7 +769,7 @@ def streaming_contamination_check_q(spark: SparkSession, sf_dir: str) -> DataFra
         F.round(frac, 6).alias("contamination"),
         (frac >= F.lit(CONTAM_TAU)).alias("flagged"),
     )
-    out = _run_available_now(out_stream, "streaming_contamination")
+    out = run_to_memory(out_stream)
     return out.filter(F.col("doc_id") < SENTINEL_ORD)
 
 
@@ -862,17 +831,15 @@ def streaming_reservoir_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
-    q = run_streaming_reservoir(
-        stream,
-        reservoir_dir,
-        checkpoint=tempfile.mkdtemp(prefix="srs-ckpt-"),
-        k=RES_K,
-        seed="wres",
+    finish(
+        run_streaming_reservoir(
+            stream,
+            reservoir_dir,
+            checkpoint=tempfile.mkdtemp(prefix="srs-ckpt-"),
+            k=RES_K,
+            seed="wres",
+        )
     )
-    q.awaitTermination(240)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("streaming_reservoir_sample did not finish within 240s")
     return spark.read.parquet(reservoir_dir).select("doc_id", "n_tokens", "sample_key")
 
 
@@ -960,7 +927,7 @@ def streaming_sessionization_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path, max_ts = _events_replay_path(spark, "ssess-events-")
     stream = read_event_stream_from_files(spark, path)
-    out = _run_available_now(phone_sessions(stream, gap="45 seconds"), "streaming_sessions")
+    out = run_to_memory(phone_sessions(stream, gap="45 seconds"))
     # the sentinel's own session starts after every real event; real
     # sessions all start at or before max_ts
     return out.filter(F.col("session_start_ms") <= F.lit(max_ts))
@@ -1031,20 +998,18 @@ def streaming_heavy_hitters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path, max_ts = _events_replay_path(spark, "shh-events-")
     out_path = tempfile.mkdtemp(prefix="shh-out-")
-    q = run_streaming_heavy_hitters(
-        spark,
-        path,
-        out_path,
-        checkpoint=tempfile.mkdtemp(prefix="shh-ckpt-"),
-        key="phone_number",
-        window="1 minute",
-        delay="30 seconds",
-        topk=HH_TOPK,
+    finish(
+        run_streaming_heavy_hitters(
+            spark,
+            path,
+            out_path,
+            checkpoint=tempfile.mkdtemp(prefix="shh-ckpt-"),
+            key="phone_number",
+            window="1 minute",
+            delay="30 seconds",
+            topk=HH_TOPK,
+        )
     )
-    q.awaitTermination(240)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("streaming_heavy_hitters did not finish within 240s")
     out = spark.read.parquet(out_path)
     return out.filter(F.col("window_start_ms") <= F.lit(max_ts)).select(
         "window_start_ms",
@@ -1131,7 +1096,7 @@ def streaming_token_histogram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the sentinel's never-closed window is absent by watermark semantics;
     # a flush-semantics change would fail the oracle hash gate loudly
-    return _run_available_now(out_stream, "streaming_token_histogram")
+    return run_to_memory(out_stream)
 
 
 # ---------------------------------------------------------------------------
@@ -1213,19 +1178,17 @@ def streaming_pack_sequences_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 stamped.add(fname)
                 os.utime(os.path.join(path, fname), (base_mtime + i, base_mtime + i))
     out_dir = tempfile.mkdtemp(prefix="spk-out-")
-    q = run_streaming_pack(
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path),
-        out_dir,
-        state_dir=tempfile.mkdtemp(prefix="spk-state-"),
-        checkpoint=tempfile.mkdtemp(prefix="spk-ckpt-"),
-        seq_len=SEQ_LEN,
+    finish(
+        run_streaming_pack(
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(path),
+            out_dir,
+            state_dir=tempfile.mkdtemp(prefix="spk-state-"),
+            checkpoint=tempfile.mkdtemp(prefix="spk-ckpt-"),
+            seq_len=SEQ_LEN,
+        )
     )
-    q.awaitTermination(240)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("streaming_pack_sequences did not finish within 240s")
     return spark.read.parquet(out_dir).select(
         "doc_id", "n_tokens", "start_offset", "start_seq", "end_seq", "n_seqs"
     )
@@ -1495,7 +1458,7 @@ def streaming_quality_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fail_reasons",
         "passed",
     )
-    out = _run_available_now(out_stream, "streaming_quality_gate")
+    out = run_to_memory(out_stream)
     return out.filter(F.col("doc_id") < SENTINEL_ORD)
 
 
@@ -1570,7 +1533,7 @@ def streaming_curriculum_histogram_q(spark: SparkSession, sf_dir: str) -> DataFr
     )
     # sentinel window absent by watermark semantics; oracle hash gate
     # catches any flush-semantics change
-    return _run_available_now(out_stream, "streaming_curriculum_histogram")
+    return run_to_memory(out_stream)
 
 
 # ---------------------------------------------------------------------------
@@ -1632,9 +1595,7 @@ def streaming_epoch_plan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source")
         .agg(F.count("*").alias("n_docs"), F.sum("n_tokens").alias("total_tokens"))
     )
-    totals = _run_available_now(
-        totals_stream, "streaming_epoch_plan", output_mode="complete"
-    )
+    totals = run_to_memory(totals_stream, output_mode="complete")
     g = totals.agg(
         F.sum("total_tokens").alias("all_tokens"), F.count("*").alias("n_src")
     )
@@ -1726,7 +1687,7 @@ def streaming_boilerplate_strip_q(spark: SparkSession, sf_dir: str) -> DataFrame
         "n_removed",
         "cleaned_text",
     )
-    out = _run_available_now(out_stream, "streaming_boilerplate_strip")
+    out = run_to_memory(out_stream)
     return out.filter(F.col("doc_id") < SENTINEL_ORD)
 
 
@@ -1804,7 +1765,7 @@ def streaming_bpe_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_words",
         "n_tokens_bpe_fit",
     )
-    out = _run_available_now(out_stream, "streaming_bpe_encode")
+    out = run_to_memory(out_stream)
     return out.filter(F.col("doc_id") < SENTINEL_ORD)
 
 
@@ -1913,7 +1874,7 @@ def streaming_chunk_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("shared_chunks") / F.least("nu", "ni2").cast("double"), 6
         ).alias("containment"),
     )
-    return _run_available_now(out_stream, "streaming_chunk_dedup")
+    return run_to_memory(out_stream)
 
 
 def _streaming_phash_oracle() -> str:
@@ -2041,7 +2002,7 @@ def streaming_phash_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "match_id",
         "hamming",
     )
-    out = _run_available_now(out_stream, "streaming_phash_dedup")
+    out = run_to_memory(out_stream)
     # sentinel filtered on the MATERIALIZED result: a pre-agg filter on a
     # grouping column would be pushed past the watermark into the scan
     # and the flush would never happen (the round-8 pushdown trap)
@@ -2142,7 +2103,7 @@ def streaming_er_match_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "matched_name",
         "lev",
     )
-    return _run_available_now(out_stream, "streaming_er_match")
+    return run_to_memory(out_stream)
 
 
 # ---------------------------------------------------------------------------
@@ -2331,7 +2292,7 @@ def streaming_bm25_match_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_terms").cast("long").alias("n_terms"),
         (F.col("csum") >= F.lit(BM25_MATCH_TAU).cast("decimal(18,6)")).alias("matched"),
     )
-    out = _run_available_now(out_stream, "streaming_bm25_match")
+    out = run_to_memory(out_stream)
     # defense-in-depth like the other twins: even if the sentinel text
     # ever regained a query term, it is filtered from the materialized
     # result (a post-sink filter, so no watermark-pushdown hazard)
@@ -2422,7 +2383,7 @@ def streaming_k_anonymity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "class_size",
         (F.col("class_size") >= K_ANON).alias("releasable"),
     )
-    out = _run_available_now(out_stream, "streaming_k_anonymity")
+    out = run_to_memory(out_stream)
     return out.filter(F.col("nation") >= 0)
 
 
@@ -2534,7 +2495,7 @@ def streaming_temperature_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_replicas",
         "n_tokens",
     )
-    out = _run_available_now(out_stream, "streaming_temperature_mix")
+    out = run_to_memory(out_stream)
     # sentinel's domain filtered on the MATERIALIZED result (grouping-
     # column pre-agg filters get pushed past the watermark — the
     # round-8 trap); its lang joins no weight row anyway, but the
@@ -2659,7 +2620,7 @@ def streaming_dsir_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             >= F.lit(DSIR_GATE_TAU).cast("decimal(18,6)") * F.col("n_feats")
         ).alias("kept"),
     )
-    out = _run_available_now(out_stream, "streaming_dsir_gate")
+    out = run_to_memory(out_stream)
     return out.filter(F.col("doc_id") < SENTINEL_ORD)
 
 
@@ -2766,7 +2727,7 @@ def streaming_dp_release_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("released_count"),
     )
-    out = _run_available_now(out_stream, "streaming_dp_release")
+    out = run_to_memory(out_stream)
     return out.filter(F.col("nation") >= 0)
 
 
@@ -2919,7 +2880,7 @@ def streaming_ppl_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("bucket"),
         )
     )
-    out = _run_available_now(out_stream, "streaming_ppl_gate")
+    out = run_to_memory(out_stream)
     return out.filter(F.col("doc_id") < SENTINEL_ORD)
 
 
@@ -3023,7 +2984,7 @@ def streaming_gopher_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_fail_alpha_ratio",
         "n_fail_stopwords",
     )
-    return _run_available_now(out_stream, "streaming_gopher_gate")
+    return run_to_memory(out_stream)
 
 
 # ---------------------------------------------------------------------------
@@ -3145,7 +3106,7 @@ def streaming_source_cap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(
         "doc_id long, source string, ingest_ts timestamp"
     ).parquet(path)
-    return _run_available_now(source_cap_stream(stream), "streaming_source_cap")
+    return run_to_memory(source_cap_stream(stream))
 
 
 # ---------------------------------------------------------------------------
@@ -3266,7 +3227,7 @@ def streaming_quality_classifier_q(spark: SparkSession, sf_dir: str) -> DataFram
         (F.lit(bias_val) + F.col("t")).cast("double").alias("margin"),
         ((F.lit(bias_val) + F.col("t")) > 0).alias("kept"),
     )
-    out = _run_available_now(out_stream, "streaming_quality_classifier")
+    out = run_to_memory(out_stream)
     return out.filter(F.col("doc_id") < SENTINEL_ORD)
 
 
@@ -3372,7 +3333,7 @@ def streaming_mm_align_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_stream = scored.withColumn(
         "kept", F.col("align_cos") >= MM_ALIGN_THRESHOLD
     )
-    return _run_available_now(out_stream, "streaming_mm_align")
+    return run_to_memory(out_stream)
 
 
 def ivf_assign_stream_arrow(stream: DataFrame, cents: DataFrame) -> DataFrame:

@@ -88,12 +88,3 @@ def count_shuffles(df: DataFrame) -> int:
     return sum(
         1 for line in plan.splitlines() if re.fullmatch(r"\(\d+\) Exchange", line.strip())
     )
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    plan = formatted_plan(df)
-    ids = set()
-    for line in plan.splitlines():
-        if "WholeStageCodegen" in line:
-            ids.add(line.split("WholeStageCodegen")[-1].strip())
-    return len(ids)

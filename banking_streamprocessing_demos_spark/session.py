@@ -12,7 +12,10 @@ Local tests run on ``local[N]`` but every knob here is chosen for the
   every partition of every state store; ``start_stream`` starts them at
   ``defaultParallelism`` (one partition per core), and their checkpoint
   then pins that count for every restart
-- RocksDB state store for streaming state that exceeds heap
+- RocksDB state store for streaming state that exceeds heap: set
+  ``spark.sql.streaming.stateStore.providerClass`` to Spark's
+  ``RocksDBStateStoreProvider`` (through ``extra_conf``, or on the
+  session before a query first starts)
 - a package-owned Python worker daemon (``worker_daemon.py``, set with
   ``spark.python.daemon.module`` on ``local`` masters): pyspark re-reads
   ``pyspark.zip`` and the Spark jar at the start of every Python task
@@ -30,6 +33,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+MAX_PARTITION_BYTES = 128 * 1024 * 1024
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -45,7 +49,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state: bool = False,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
@@ -55,9 +58,7 @@ def get_spark(
     if master is None:
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS') or machine_cpus()}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-        )
+        shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -69,11 +70,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # spill-aware scan sizing: 128 MB input splits keep per-task
-        # memory bounded at any table size; override per deployment
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"),
-        )
+        # memory bounded at any table size
+        .config("spark.sql.files.maxPartitionBytes", str(MAX_PARTITION_BYTES))
         # generous driver memory in local mode; ignored under spark-submit
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
@@ -81,11 +79,6 @@ def get_spark(
         # displace the bench harness's final JSON line from log tails
         .config("spark.ui.showConsoleProgress", "false")
     )
-    if rocksdb_state:
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
     extra_conf = dict(extra_conf or {})
     if master.startswith("local"):
         # a cluster's executors need the package installed to run its daemon

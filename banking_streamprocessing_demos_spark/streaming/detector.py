@@ -81,11 +81,12 @@ def _out_frame(rows: list[tuple]) -> pd.DataFrame:
     return pd.DataFrame(arr, columns=_OUT_COLS)
 
 
-def make_detector_fn(timeout_ms: int, late_slack_ms: int | None = None):
-    """Build the per-key state-update function.  ``late_slack_ms`` bounds
-    how long post-alert state lingers to catch late deliveries (default:
-    one extra timeout period)."""
-    slack = late_slack_ms if late_slack_ms is not None else timeout_ms
+def make_detector_fn(timeout_ms: int):
+    """Build the per-key state-update function.  State lingers one more
+    timeout period after it could be dropped: an alerted message's state
+    until ``first_sent + 2 x timeout`` to pair a late delivery with its
+    alert, a delivered message's until ``delivered + timeout`` so
+    duplicate deliveries stay silent."""
 
     def update(
         key: tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -113,7 +114,7 @@ def make_detector_fn(timeout_ms: int, late_slack_ms: int | None = None):
                 alerted = True
                 state.update((first_sent, phone, carrier, delivered, alerted, resolved))
                 # linger to pair a late delivery with this alert
-                set_timer((first_sent or 0) + timeout_ms + slack)
+                set_timer((first_sent or 0) + 2 * timeout_ms)
             else:
                 # resolution window elapsed (or already resolved) → evict
                 state.remove()
@@ -189,10 +190,10 @@ def make_detector_fn(timeout_ms: int, late_slack_ms: int | None = None):
         if resolved:
             # keep state briefly so duplicate `delivered`s stay silent
             anchor = delivered if delivered is not None else first_sent or 0
-            set_timer(anchor + slack)
+            set_timer(anchor + timeout_ms)
         elif alerted:
             # alert already fired; linger for a late delivery
-            set_timer((first_sent or 0) + timeout_ms + slack)
+            set_timer((first_sent or 0) + 2 * timeout_ms)
         elif first_sent is not None:
             set_timer(first_sent + timeout_ms)
 
@@ -206,7 +207,6 @@ def detect_undelivered(
     events: DataFrame,
     timeout_ms: int,
     watermark_delay: str = "30 seconds",
-    late_slack_ms: int | None = None,
 ) -> DataFrame:
     """Wire the detector onto a STREAMING MESSAGE_EVENT_SCHEMA DataFrame.
     Adds ``event_time`` from the ms-epoch wire timestamp, watermarks it,
@@ -228,7 +228,7 @@ def detect_undelivered(
     return (
         with_time.groupBy("message_id")
         .applyInPandasWithState(
-            make_detector_fn(timeout_ms, late_slack_ms),
+            make_detector_fn(timeout_ms),
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",

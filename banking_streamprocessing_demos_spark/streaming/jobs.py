@@ -2,6 +2,13 @@
 (S5 console dry-run; parquet via foreachBatch), and a file-replay
 harness used by tests in place of Kafka.
 
+This module is the package's one bounded-run path: ``run_to_memory``
+runs an ``availableNow`` query (started through
+``session.start_stream``) into a memory table, ``finish`` waits on one
+already started, and both fail loudly when the query does not end in
+``RUN_TIMEOUT_S``.  ``_write_batch`` is the one idempotent
+``foreachBatch`` write.
+
 The reference runs three daemon threads over shared dicts (ST8,
 py:616-653); here each periodic dataflow is a streaming query with a
 trigger — per-key serial state access in the detector resolves the
@@ -10,11 +17,17 @@ heartbeat-vs-delivery races for free (SURVEY §3.1 note).
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..schemas import MESSAGE_EVENT_SCHEMA
 from ..session import start_stream
+
+# the one wait bound of every bounded (availableNow) run in the package
+RUN_TIMEOUT_S = 300
 
 
 def read_event_stream_from_files(
@@ -92,20 +105,48 @@ def phone_sessions(events: DataFrame, gap: str = "45 seconds") -> DataFrame:
     )
 
 
-def run_to_memory(df: DataFrame, name: str, timeout_s: int = 120) -> None:
-    """Execute a streaming DataFrame to completion (availableNow) into an
-    in-memory table ``name`` — the test sink."""
-    q = start_stream(
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True),
-        df.sparkSession,
-    )
-    q.awaitTermination(timeout_s)
-    if q.isActive:
+def finish(q: StreamingQuery) -> StreamingQuery:
+    """Wait for a started bounded (``availableNow``) query to end.  A
+    query still running after ``RUN_TIMEOUT_S`` is stopped and
+    ``TimeoutError`` raised, so no caller reads a partial output or
+    leaves the query running; a failed query raises its own error."""
+    if not q.awaitTermination(RUN_TIMEOUT_S):
         q.stop()
-        raise TimeoutError(f"streaming query {name} did not finish in {timeout_s}s")
+        raise TimeoutError(f"query {q.name or q.id} did not finish in {RUN_TIMEOUT_S} s")
+    return q
+
+
+def run_to_memory(df: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Run a streaming DataFrame to completion (``availableNow``) into a
+    memory table named here, and return that table."""
+    name = f"run_{uuid.uuid4().hex[:12]}"
+    finish(
+        start_stream(
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True),
+            df.sparkSession,
+        )
+    )
+    return df.sparkSession.table(name)
+
+
+def _write_batch(df: DataFrame, batch_id: int, path: str) -> None:
+    """Write one ``foreachBatch`` batch as the ``batch_id`` partition of
+    the parquet table at ``path``.  foreachBatch is at-least-once (a
+    crash between a sink write and the checkpoint commit replays the
+    batch), so only that partition is dynamically overwritten: a replay
+    rewrites the same files instead of appending duplicates.  The mode
+    is set on the writer; a session-level conf would silently change
+    overwrite semantics for every other write in the shared session."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
 
 
 def dedup_within_watermark(events: DataFrame, delay: str = "1 minute") -> DataFrame:
@@ -128,35 +169,18 @@ def run_detector_pipeline(
 ):
     """ST8 unified pipeline via foreachBatch: one streaming query fans a
     micro-batch into two sinks — alert rows to one parquet table, a
-    per-kind summary to another.  foreachBatch is at-least-once (a crash
-    between a sink write and the checkpoint commit replays the batch), so
-    BOTH sinks partition by batch_id and dynamically overwrite their own
-    partition: a replayed batch rewrites the same files instead of
-    appending duplicates.  Replaces the reference's three shared-state
-    daemon threads (py:616-653) with a single checkpointed query."""
+    per-kind summary to another, both through ``_write_batch``, so a
+    replayed batch rewrites its own partition.  Replaces the reference's
+    three shared-state daemon threads (py:616-653) with a single
+    checkpointed query.  Returns the started query; wait on it with
+    ``finish``."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
-            (
-                batch_df.filter(F.col("kind") == "alert")
-                .withColumn("batch_id", F.lit(batch_id))
-                # writer-scoped dynamic overwrite: a session-level conf
-                # set here would silently change overwrite semantics for
-                # every other write in the shared session
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(alerts_path)
-            )
-            (
-                batch_df.groupBy("kind")
-                .agg(F.count("*").alias("cnt"))
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(summary_path)
+            _write_batch(batch_df.filter(F.col("kind") == "alert"), batch_id, alerts_path)
+            _write_batch(
+                batch_df.groupBy("kind").agg(F.count("*").alias("cnt")), batch_id, summary_path
             )
         finally:
             batch_df.unpersist()
@@ -550,13 +574,7 @@ def run_streaming_heavy_hitters(
                     )
                 ),
             ).filter(F.col("rank") <= topk)
-            (
-                ranked.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(out_path)
-            )
+            _write_batch(ranked, batch_id, out_path)
         finally:
             batch_df.unpersist()
 
@@ -623,24 +641,10 @@ def run_streaming_pack(
             end_seq.alias("end_seq"),
             (end_seq - start_seq + 1).alias("n_seqs"),
         )
-        (
-            out.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        _write_batch(out, batch_id, out_dir)
         total = toks.agg(F.coalesce(F.sum("n_tokens"), F.lit(0))).first()[0]
-        (
-            spark.createDataFrame(
-                [(int(total),)], "batch_tokens long"
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
+        totals = spark.createDataFrame([(int(total),)], "batch_tokens long")
+        _write_batch(totals, batch_id, state_dir)
 
     return start_stream(
         doc_stream.writeStream.foreachBatch(sink)

@@ -1,11 +1,39 @@
 from __future__ import annotations
 
+import os
+
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from banking_streamprocessing_demos_spark.session import get_spark
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
+
+EVENT_FILE_SCHEMA = pa.schema(
+    [
+        ("message_id", pa.string()),
+        ("status", pa.string()),
+        ("phone_number", pa.int64()),
+        ("carrier", pa.string()),
+        ("timestamp", pa.int64()),
+    ]
+)
+
+
+def write_trigger_files(path: str, batches) -> None:
+    """Write each batch of event rows (a DataFrame or a list of tuples in
+    ``EVENT_FILE_SCHEMA`` order) as one parquet file, with ascending
+    mtimes and names, so a file-source replay with
+    ``maxFilesPerTrigger=1`` reads one batch per trigger, in order."""
+    for i, rows in enumerate(batches):
+        pdf = pd.DataFrame(rows, columns=EVENT_FILE_SCHEMA.names)
+        fname = os.path.join(path, f"chunk-{i:05d}.parquet")
+        table = pa.Table.from_pandas(pdf, schema=EVENT_FILE_SCHEMA, preserve_index=False)
+        pq.write_table(table, fname)
+        os.utime(fname, (1_700_000_000 + i, 1_700_000_000 + i))
 
 
 @pytest.fixture(scope="session")

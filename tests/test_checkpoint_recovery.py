@@ -14,7 +14,10 @@ import pytest
 
 from banking_streamprocessing_demos_spark.sources.generator import generate_events
 from banking_streamprocessing_demos_spark.streaming.detector import detect_undelivered
-from banking_streamprocessing_demos_spark.streaming.jobs import read_event_stream_from_files
+from banking_streamprocessing_demos_spark.streaming.jobs import (
+    finish,
+    read_event_stream_from_files,
+)
 from tests.test_streaming_detector import CFG, TIMEOUT_MS, _write_time_ordered_chunks
 
 
@@ -49,24 +52,19 @@ def _restart_and_reference(spark, tmp_path_factory, cut):
     # phase 1: only the first ``cut`` chunks exist
     for f in chunks[:cut]:
         shutil.copy2(f, part_dir)
-    q1 = _start(spark, part_dir, ckpt, "recovery_q1", out_dir)
-    q1.awaitTermination(300)
-    assert not q1.isActive
+    finish(_start(spark, part_dir, ckpt, "recovery_q1", out_dir))
     phase1 = spark.read.parquet(out_dir).toPandas()
 
     # phase 2: the rest of the stream arrives; RESTART from checkpoint
     for f in chunks[cut:]:
         shutil.copy2(f, part_dir)
-    q2 = _start(spark, part_dir, ckpt, "recovery_q2", out_dir)
-    q2.awaitTermination(300)
-    assert not q2.isActive
+    finish(_start(spark, part_dir, ckpt, "recovery_q2", out_dir))
     recovered = spark.read.parquet(out_dir).toPandas()
 
     # reference run: same data, no interruption
     ref_ckpt = str(tmp_path_factory.mktemp("ref_ckpt"))
     ref_out = str(tmp_path_factory.mktemp("ref_out"))
-    q3 = _start(spark, full_dir, ref_ckpt, "recovery_ref", ref_out)
-    q3.awaitTermination(300)
+    finish(_start(spark, full_dir, ref_ckpt, "recovery_ref", ref_out))
     reference = spark.read.parquet(ref_out).toPandas()
     return phase1, recovered, reference
 
@@ -136,8 +134,7 @@ def test_streams_sized_to_cores_old_checkpoint_keeps_its_count(
             detected, os.path.join(out_dir, "alerts"), os.path.join(out_dir, "summary"), ckpt
         )
         assert spark.conf.get(key) == str(old_count)
-        q.awaitTermination(300)
-        assert not q.isActive
+        finish(q)
         return _state_partitions(q), spark.read.parquet(os.path.join(out_dir, "alerts")).toPandas()
 
     full_dir = str(tmp_path_factory.mktemp("sized_full"))

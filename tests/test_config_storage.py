@@ -104,8 +104,7 @@ def test_robust_json_ingestion_streaming_twin(spark, tmp_path):
         "garbage line\n"
     )
     stream = read_event_stream_json_robust(spark, str(d))
-    run_to_memory(stream, "robust_stream_out")
-    rows = spark.table("robust_stream_out").collect()
+    rows = run_to_memory(stream).collect()
     clean = [r for r in rows if r._corrupt_record is None]
     bad = [r for r in rows if r._corrupt_record is not None]
     assert [r.message_id for r in clean] == ["s1"]

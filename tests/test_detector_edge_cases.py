@@ -8,49 +8,23 @@ from __future__ import annotations
 import os
 
 import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
 
 from banking_streamprocessing_demos_spark.streaming.detector import detect_undelivered
-from banking_streamprocessing_demos_spark.streaming.jobs import read_event_stream_from_files
+from banking_streamprocessing_demos_spark.streaming.jobs import (
+    finish,
+    read_event_stream_from_files,
+    run_to_memory,
+)
+from tests.conftest import write_trigger_files
 
 T0 = 1_700_000_000_000
 TIMEOUT = 60_000
 
-SCHEMA = pa.schema(
-    [
-        ("message_id", pa.string()),
-        ("status", pa.string()),
-        ("phone_number", pa.int64()),
-        ("carrier", pa.string()),
-        ("timestamp", pa.int64()),
-    ]
-)
 
-
-def _write_chunks(path: str, chunks: list[list[tuple]]) -> None:
-    for i, rows in enumerate(chunks):
-        pdf = pd.DataFrame(
-            rows, columns=["message_id", "status", "phone_number", "carrier", "timestamp"]
-        )
-        f = os.path.join(path, f"c{i:03d}.parquet")
-        pq.write_table(pa.Table.from_pandas(pdf, schema=SCHEMA, preserve_index=False), f)
-        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
-
-
-def _run(spark, path, ckpt, name):
+def _run(spark, path):
     stream = read_event_stream_from_files(spark, path, max_files_per_trigger=1)
     det = detect_undelivered(stream, TIMEOUT, watermark_delay="5 seconds")
-    q = (
-        det.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    return spark.table(name).toPandas()
+    return run_to_memory(det).toPandas()
 
 
 def test_out_of_order_sent_updates_first_sent(spark, tmp_path):
@@ -63,8 +37,8 @@ def test_out_of_order_sent_updates_first_sent(spark, tmp_path):
         [("m1", "delivered", 1, "att", T0 + 45_000)],
         [("mx", "sent", 9, "att", T0 + 400_000)],       # watermark pusher
     ]
-    _write_chunks(str(tmp_path), chunks)
-    out = _run(spark, str(tmp_path), str(tmp_path / "ck"), "edge_ooo")
+    write_trigger_files(str(tmp_path), chunks)
+    out = _run(spark, str(tmp_path))
     d = out.loc[out["message_id"] == "m1"]
     assert list(d["kind"]) == ["delivered"]
     assert int(d["first_sent_ms"].iloc[0]) == T0
@@ -78,8 +52,8 @@ def test_orphan_delivered_without_sent(spark, tmp_path):
         [("orphan", "delivered", 2, "verizon", T0 + 10_000)],
         [("mx", "sent", 9, "att", T0 + 400_000)],
     ]
-    _write_chunks(str(tmp_path), chunks)
-    out = _run(spark, str(tmp_path), str(tmp_path / "ck"), "edge_orphan")
+    write_trigger_files(str(tmp_path), chunks)
+    out = _run(spark, str(tmp_path))
     d = out.loc[out["message_id"] == "orphan"]
     assert list(d["kind"]) == ["delivered"]
     assert pd.isna(d["first_sent_ms"].iloc[0]) and pd.isna(d["latency_ms"].iloc[0])
@@ -93,8 +67,8 @@ def test_duplicate_delivered_across_batches_emits_once(spark, tmp_path):
         [("m2", "sent", 3, "t-mobile", T0 + 30_000 - 1)],   # stale heartbeat after delivery
         [("mx", "sent", 9, "att", T0 + 400_000)],
     ]
-    _write_chunks(str(tmp_path), chunks)
-    out = _run(spark, str(tmp_path), str(tmp_path / "ck"), "edge_dup")
+    write_trigger_files(str(tmp_path), chunks)
+    out = _run(spark, str(tmp_path))
     d = out.loc[out["message_id"] == "m2"]
     assert list(d["kind"]) == ["delivered"], d
     assert len(d) == 1
@@ -110,8 +84,8 @@ def test_alert_then_duplicate_late_delivery(spark, tmp_path):
         [("m3", "delivered", 4, "att", T0 + 200_000)],
         [("mw2", "sent", 9, "att", T0 + 500_000)],
     ]
-    _write_chunks(str(tmp_path), chunks)
-    out = _run(spark, str(tmp_path), str(tmp_path / "ck"), "edge_late_dup")
+    write_trigger_files(str(tmp_path), chunks)
+    out = _run(spark, str(tmp_path))
     d = out.loc[out["message_id"] == "m3"].sort_values("event_ms")
     assert list(d["kind"]) == ["alert", "late_delivered"], d
     assert int(d.loc[d["kind"] == "late_delivered", "latency_ms"].iloc[0]) == 200_000
@@ -139,10 +113,10 @@ def test_unknown_status_creates_no_state(spark, tmp_path):
         [("real-1", "delivered", 1003, "att", T0 + 1_000)],
         [("wm-pusher", "sent", 1004, "t-mobile", T0 + 10 * TIMEOUT)],
     ]
-    _write_chunks(d, chunks)
+    write_trigger_files(d, chunks)
     stream = read_event_stream_from_files(spark, d, max_files_per_trigger=1)
     det = detect_undelivered(stream, TIMEOUT, watermark_delay="5 seconds")
-    q = (
+    q = finish(
         det.writeStream.format("memory")
         .queryName("unknown_status_out")
         .outputMode("append")
@@ -150,7 +124,6 @@ def test_unknown_status_creates_no_state(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
     out = spark.table("unknown_status_out").toPandas()
     # junk keys never surface in output
     assert not set(out["message_id"]) & {"junk-1", "junk-2", "junk-3"}

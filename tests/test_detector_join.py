@@ -14,7 +14,12 @@ from banking_streamprocessing_demos_spark.sources.generator import (
 from banking_streamprocessing_demos_spark.streaming.detector_join import (
     detect_undelivered_join,
 )
-from banking_streamprocessing_demos_spark.streaming.jobs import read_event_stream_from_files
+from banking_streamprocessing_demos_spark.streaming.jobs import (
+    finish,
+    read_event_stream_from_files,
+    run_to_memory,
+)
+from tests.conftest import write_trigger_files
 from tests.test_streaming_detector import _write_time_ordered_chunks
 
 # heartbeat-free: interval beyond the horizon (the join plan's operating
@@ -35,7 +40,6 @@ TIMEOUT_MS = 105_000
 
 def test_join_variant_matches_ground_truth(spark, tmp_path_factory):
     events_dir = str(tmp_path_factory.mktemp("join_events"))
-    ckpt = str(tmp_path_factory.mktemp("join_ckpt"))
     pdf = generate_events(spark, CFG).toPandas()
     # trailing watermark pusher: outer rows flush on data-driven
     # watermark advances (see detector_join docstring); production
@@ -56,16 +60,7 @@ def test_join_variant_matches_ground_truth(spark, tmp_path_factory):
 
     stream = read_event_stream_from_files(spark, events_dir, max_files_per_trigger=1)
     out = detect_undelivered_join(stream, TIMEOUT_MS, watermark_delay="10 seconds")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("join_det_out")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.table("join_det_out").toPandas()
+    got = run_to_memory(out).toPandas()
     truth = generate_messages(spark, CFG).toPandas().set_index("message_id")
 
     got = got.loc[got["message_id"] != "wm-pusher"].set_index("message_id")
@@ -106,11 +101,6 @@ def test_outer_row_flush_semantics(spark, tmp_path_factory):
     A flushes on the data-driven advance to 190 s, E only in the final
     no-data batch at 195 s, C (close 405 s) stays buffered.
     """
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     events_dir = str(tmp_path_factory.mktemp("flush_events"))
     ckpt = str(tmp_path_factory.mktemp("flush_ckpt"))
     base = 1_700_000_000_000
@@ -123,34 +113,17 @@ def test_outer_row_flush_semantics(spark, tmp_path_factory):
         ("D", "delivered", 205.0),
         ("C", "sent", 300.0),
     ]
-    schema = pa.schema(
+    write_trigger_files(
+        events_dir,
         [
-            ("message_id", pa.string()),
-            ("status", pa.string()),
-            ("phone_number", pa.int64()),
-            ("carrier", pa.string()),
-            ("timestamp", pa.int64()),
-        ]
+            [(mid, status, i, "att", base + int(off_s * 1000))]
+            for i, (mid, status, off_s) in enumerate(rows)
+        ],
     )
-    for i, (mid, status, off_s) in enumerate(rows):
-        fname = os.path.join(events_dir, f"chunk-{i:03d}.parquet")
-        pdf = pd.DataFrame(
-            [
-                {
-                    "message_id": mid,
-                    "status": status,
-                    "phone_number": i,
-                    "carrier": "att",
-                    "timestamp": base + int(off_s * 1000),
-                }
-            ]
-        )
-        pq.write_table(pa.Table.from_pandas(pdf, schema=schema, preserve_index=False), fname)
-        os.utime(fname, (1_700_000_000 + i, 1_700_000_000 + i))
 
     stream = read_event_stream_from_files(spark, events_dir, max_files_per_trigger=1)
     out = detect_undelivered_join(stream, 105_000, watermark_delay="10 seconds")
-    q = (
+    q = finish(
         out.writeStream.format("memory")
         .queryName("flush_probe_out")
         .outputMode("append")
@@ -158,7 +131,6 @@ def test_outer_row_flush_semantics(spark, tmp_path_factory):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
     progress = q.recentProgress
     got = spark.table("flush_probe_out").toPandas().set_index("message_id")
 

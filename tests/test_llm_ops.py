@@ -1796,14 +1796,13 @@ def test_streaming_source_cap_state_carries_across_batches(spark):
     (maxFilesPerTrigger=1) must assign the same arrival-order ranks as
     the single-batch run — rank = global arrival position, never
     restarting per batch."""
-    import os
     import tempfile
-    import uuid
 
     from banking_streamprocessing_demos_spark.operators.packing import SOURCE_CAP
     from banking_streamprocessing_demos_spark.operators.streaming_queries import (
         source_cap_stream,
     )
+    from banking_streamprocessing_demos_spark.streaming.jobs import run_to_memory
 
     n_docs, n_files = 3 * SOURCE_CAP, 5
     base = 1_700_000_100_000
@@ -1825,19 +1824,10 @@ def test_streaming_source_cap_state_carries_across_batches(spark):
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
-    name = f"srccap_multi_{uuid.uuid4().hex[:8]}"
-    q = (
-        source_cap_stream(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="srccap-ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(240)
-    assert not q.isActive
-    got = {r["doc_id"]: (r["src_rank"], r["kept"]) for r in spark.table(name).collect()}
+    got = {
+        r["doc_id"]: (r["src_rank"], r["kept"])
+        for r in run_to_memory(source_cap_stream(stream)).collect()
+    }
     assert len(got) == n_docs
     for d in range(n_docs):
         assert got[d] == (d + 1, d + 1 <= SOURCE_CAP), (d, got[d])
@@ -1888,6 +1878,7 @@ def test_ivf_assign_stream_arrow_matches_batch(spark):
     from banking_streamprocessing_demos_spark.operators.streaming_queries import (
         ivf_assign_stream_arrow,
     )
+    from banking_streamprocessing_demos_spark.streaming.jobs import run_to_memory
 
     n_cells = 64  # above the 16-cell floor: the adopted route's regime
     n = _normed(spark, SF_SMALL)
@@ -1901,18 +1892,6 @@ def test_ivf_assign_stream_arrow_matches_batch(spark):
         "vec_id long, v array<double>, nrm double"
     ).parquet(src)
     assigned = ivf_assign_stream_arrow(stream, _centroids(n, n_cells))
-    q = (
-        assigned.writeStream.format("memory")
-        .queryName("ivf_arrow_stream_t")
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ivf-arrow-ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r.vec_id, r.cell_id)
-        for r in spark.sql("SELECT * FROM ivf_arrow_stream_t").collect()
-    }
+    got = {(r.vec_id, r.cell_id) for r in run_to_memory(assigned).collect()}
     assert got == batch
     assert len({v for v, _c in got}) == len(got)  # one cell per vector

@@ -9,13 +9,8 @@ d'être, ST5)."""
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
 from banking_streamprocessing_demos_spark.config import GeneratorConfig
 from banking_streamprocessing_demos_spark.sources.generator import (
@@ -27,6 +22,7 @@ from banking_streamprocessing_demos_spark.streaming.jobs import (
     read_event_stream_from_files,
     run_to_memory,
 )
+from tests.conftest import write_trigger_files
 
 CFG = GeneratorConfig(
     n_phones=50,
@@ -44,49 +40,20 @@ CHUNK_MS = 30_000
 
 
 def _write_time_ordered_chunks(events_pdf: pd.DataFrame, path: str) -> None:
-    """One parquet file per event-time chunk, mtimes ascending so the
-    file source replays them in order."""
-    t0 = events_pdf["timestamp"].min()
-    chunk_ids = ((events_pdf["timestamp"] - t0) // CHUNK_MS).astype(int)
-    base_mtime = 1_700_000_000
-    for i, cid in enumerate(sorted(chunk_ids.unique())):
-        part = events_pdf.loc[chunk_ids == cid].sort_values("timestamp")
-        fname = os.path.join(path, f"chunk-{cid:05d}.parquet")
-        schema = pa.schema(
-            [
-                ("message_id", pa.string()),
-                ("status", pa.string()),
-                ("phone_number", pa.int64()),
-                ("carrier", pa.string()),
-                ("timestamp", pa.int64()),
-            ]
-        )
-        pq.write_table(pa.Table.from_pandas(part, schema=schema, preserve_index=False), fname)
-        os.utime(fname, (base_mtime + i, base_mtime + i))
+    """One parquet file per event-time chunk, replayed in event-time order."""
+    chunk_ids = (events_pdf["timestamp"] - events_pdf["timestamp"].min()) // CHUNK_MS
+    write_trigger_files(
+        path, [part.sort_values("timestamp") for _, part in events_pdf.groupby(chunk_ids)]
+    )
 
 
 @pytest.fixture(scope="module")
 def replayed(spark, tmp_path_factory):
     events_dir = str(tmp_path_factory.mktemp("events"))
-    ckpt = str(tmp_path_factory.mktemp("ckpt"))
-
-    events = generate_events(spark, CFG)
-    pdf = events.toPandas()
-    _write_time_ordered_chunks(pdf, events_dir)
-
+    _write_time_ordered_chunks(generate_events(spark, CFG).toPandas(), events_dir)
     stream = read_event_stream_from_files(spark, events_dir, max_files_per_trigger=1)
     detected = detect_undelivered(stream, TIMEOUT_MS, watermark_delay="10 seconds")
-    q = (
-        detected.writeStream.format("memory")
-        .queryName("detector_out")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    assert not q.isActive
-    out = spark.table("detector_out").toPandas()
+    out = run_to_memory(detected).toPandas()
     truth = generate_messages(spark, CFG).toPandas().set_index("message_id")
     return out, truth
 
@@ -129,21 +96,10 @@ def test_rocksdb_state_store_same_output(spark, replayed, tmp_path_factory):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     events_dir = str(tmp_path_factory.mktemp("rocks_events"))
-    ckpt = str(tmp_path_factory.mktemp("rocks_ckpt"))
-    pdf = generate_events(rocks, CFG).toPandas()
-    _write_time_ordered_chunks(pdf, events_dir)
+    _write_time_ordered_chunks(generate_events(rocks, CFG).toPandas(), events_dir)
     stream = read_event_stream_from_files(rocks, events_dir, max_files_per_trigger=1)
-    q = (
-        detect_undelivered(stream, TIMEOUT_MS, watermark_delay="10 seconds")
-        .writeStream.format("memory")
-        .queryName("rocks_out")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    out_rocks = rocks.table("rocks_out").toPandas()
+    detected = detect_undelivered(stream, TIMEOUT_MS, watermark_delay="10 seconds")
+    out_rocks = run_to_memory(detected).toPandas()
     key = ["message_id", "kind"]
     a = out_default.sort_values(key).reset_index(drop=True)
     b = out_rocks.sort_values(key).reset_index(drop=True)

@@ -2,19 +2,24 @@
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import tempfile
 import time
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from banking_streamprocessing_demos_spark.config import GeneratorConfig
 from banking_streamprocessing_demos_spark.sources.generator import generate_events
 from banking_streamprocessing_demos_spark.sources.rate_stream import message_rate_stream
+from banking_streamprocessing_demos_spark.streaming import jobs
 from banking_streamprocessing_demos_spark.streaming.jobs import (
     carrier_counts,
     console_dry_run,
     phone_sessions,
+    finish,
     read_event_stream_from_files,
     run_to_memory,
     status_counts,
@@ -32,8 +37,7 @@ def test_status_counts_batch_equals_stream(spark, tmp_path):
 
     batch = status_counts(events).collect()
     stream = read_event_stream_from_files(spark, str(tmp_path / "ev"))
-    run_to_memory(status_counts(stream), "status_counts_out")
-    streamed = spark.table("status_counts_out").collect()
+    streamed = run_to_memory(status_counts(stream)).collect()
     # append mode only emits windows the final watermark closed
     # (watermark = max event time - 1 min; window length 30 s)
     max_ms = events.agg(F.max("timestamp")).first()[0]
@@ -65,8 +69,7 @@ def test_dedup_within_watermark(spark, tmp_path):
     events = generate_events(spark, CFG)  # contains injected duplicates
     events.coalesce(2).write.mode("overwrite").parquet(str(tmp_path / "ev"))
     stream = read_event_stream_from_files(spark, str(tmp_path / "ev"))
-    run_to_memory(dedup_within_watermark(stream), "dedup_wm_out")
-    out = spark.table("dedup_wm_out")
+    out = run_to_memory(dedup_within_watermark(stream))
     distinct_events = events.dropDuplicates(["message_id", "status", "timestamp"]).count()
     assert out.count() == distinct_events
     assert out.groupBy("message_id", "status", "timestamp").count().filter("count > 1").count() == 0
@@ -86,8 +89,7 @@ def test_foreachbatch_pipeline(spark, tmp_path):
         str(tmp_path / "summary"),
         str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(180)
-    assert not q.isActive
+    finish(q)
     alerts = spark.read.parquet(str(tmp_path / "alerts"))
     summary = spark.read.parquet(str(tmp_path / "summary"))
     assert alerts.filter("kind <> 'alert'").count() == 0
@@ -145,8 +147,7 @@ def test_phone_sessions_batch_equals_stream(spark, tmp_path):
     # into one unbroken session on this fixture)
     batch = phone_sessions(events, gap="25 seconds").collect()
     stream = read_event_stream_from_files(spark, str(tmp_path / "sev"))
-    run_to_memory(phone_sessions(stream, gap="25 seconds"), "phone_sessions_out")
-    streamed = spark.table("phone_sessions_out").collect()
+    streamed = run_to_memory(phone_sessions(stream, gap="25 seconds")).collect()
 
     # append mode emits only sessions the final watermark closed
     max_ms = events.agg(F.max("timestamp")).first()[0]
@@ -223,8 +224,7 @@ def test_streaming_doc_dedup_batch_equals_stream(spark, tmp_path):
     stream = spark.readStream.schema(
         "doc_id long, text string, ingest_ts timestamp"
     ).parquet(path)
-    run_to_memory(streaming_doc_dedup(stream), "doc_dedup_out")
-    kept_stream = {r.doc_id for r in spark.table("doc_dedup_out").collect()}
+    kept_stream = {r.doc_id for r in run_to_memory(streaming_doc_dedup(stream)).collect()}
     assert kept_stream == kept_batch
 
 
@@ -240,8 +240,9 @@ def test_streaming_hll_batch_equals_stream(spark, tmp_path):
 
     batch = {r.window_start_ms: r for r in streaming_hll_distinct(events).collect()}
     stream = read_event_stream_from_files(spark, str(tmp_path / "ev"))
-    run_to_memory(streaming_hll_distinct(stream), "hll_out")
-    streamed = {r.window_start_ms: r for r in spark.table("hll_out").collect()}
+    streamed = {
+        r.window_start_ms: r for r in run_to_memory(streaming_hll_distinct(stream)).collect()
+    }
 
     max_ms = events.agg(F.max("timestamp")).first()[0]
     closed = max_ms - 30_000
@@ -329,8 +330,7 @@ def test_streaming_minhash_dedup_batch_equals_stream(spark, tmp_path):
     assert 3 not in kept_batch                            # near dup dropped
 
     stream = _replay_one_doc_per_batch(spark, docs.toPandas(), str(tmp_path / "mh"))
-    run_to_memory(streaming_minhash_dedup(stream), "mh_dedup_out")
-    kept_stream = {r.doc_id for r in spark.table("mh_dedup_out").collect()}
+    kept_stream = {r.doc_id for r in run_to_memory(streaming_minhash_dedup(stream)).collect()}
     # doc 99's own window never closes (nothing later advances the
     # watermark past it) -- compare the closed first window only
     assert kept_stream == kept_batch - {99}
@@ -388,7 +388,7 @@ def test_streaming_minhash_dedup_bounded_state(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    finish(q)
     peaks = [
         sum(op["numRowsTotal"] for op in p["stateOperators"])
         for p in q.recentProgress
@@ -426,10 +426,9 @@ def test_streaming_cms_cells_batch_equals_stream(spark, tmp_path):
         for r in streaming_cms_cells(events).collect()
     }
     stream = read_event_stream_from_files(spark, str(tmp_path / "cmsev"))
-    run_to_memory(streaming_cms_cells(stream), "cms_cells_out")
     streamed = {
         (r.window_start_ms, r.r, r.bucket): r.c
-        for r in spark.table("cms_cells_out").collect()
+        for r in run_to_memory(streaming_cms_cells(stream)).collect()
     }
     max_ms = events.agg(F.max("timestamp")).first()[0]
     closed = max_ms - 30_000
@@ -502,8 +501,7 @@ def test_streaming_heavy_hitters_serving(spark, tmp_path):
         str(tmp_path / "hh_ckpt"),
         topk=5,
     )
-    q.awaitTermination(180)
-    assert not q.isActive
+    finish(q)
     out = spark.read.parquet(str(tmp_path / "hh_out")).toPandas()
     assert not out.empty
     exact = {
@@ -553,8 +551,7 @@ def test_reservoir_batching_invariance(spark, tmp_path):
             checkpoint=str(tmp_path / f"ckpt-{tag}"),
             k=50,
         )
-        q.awaitTermination(120)
-        assert not q.isActive
+        finish(q)
         return sorted(
             (r.doc_id, r.n_tokens, r.sample_key)
             for r in spark.read.parquet(res).collect()
@@ -604,8 +601,7 @@ def test_streaming_heavy_hitters_replay_idempotent(spark, tmp_path):
 
     def run(ckpt: str):
         q = run_streaming_heavy_hitters(spark, path, out_path, str(tmp_path / ckpt), topk=5)
-        q.awaitTermination(180)
-        assert not q.isActive
+        finish(q)
         return sorted(
             map(
                 tuple,
@@ -650,8 +646,7 @@ def test_reservoir_replay_idempotent(spark, tmp_path):
             checkpoint=str(tmp_path / ckpt),
             k=50,
         )
-        q.awaitTermination(120)
-        assert not q.isActive
+        finish(q)
         rows = spark.read.parquet(res).collect()
         ids = [r.doc_id for r in rows]
         assert len(ids) == len(set(ids)), "reservoir seated a doc_id twice"
@@ -727,8 +722,7 @@ def test_streaming_pack_matches_batch_and_replays_idempotent(spark, tmp_path):
             state_dir=state_dir,
             checkpoint=str(tmp_path / ckpt),
         )
-        q.awaitTermination(180)
-        assert not q.isActive
+        finish(q)
         return sorted(
             map(
                 tuple,
@@ -837,8 +831,7 @@ def test_streaming_keep_best_batch_equals_stream(spark, tmp_path):
     assert sig_of[0] != sig_of[3]
 
     stream = _replay_one_doc_per_batch(spark, docs.toPandas(), str(tmp_path / "kb"))
-    run_to_memory(streaming_keep_best(stream), "kb_out")
-    stream_rows = {r.doc_id: r for r in spark.table("kb_out").collect()}
+    stream_rows = {r.doc_id: r for r in run_to_memory(streaming_keep_best(stream)).collect()}
     # doc 99's own window never closes; every closed window matches
     assert set(stream_rows) == set(batch) - {99}
     for d, r in stream_rows.items():
@@ -846,3 +839,40 @@ def test_streaming_keep_best_batch_equals_stream(spark, tmp_path):
         assert (r.window_start_ms, r.sig_key, r.word_count, r.n_members) == (
             b.window_start_ms, b.sig_key, b.word_count, b.n_members
         )
+
+
+def test_bounded_run_past_its_bound_is_stopped(spark, tmp_path, monkeypatch):
+    """A bounded run still going at the wait bound is stopped and raises
+    TimeoutError instead of handing back a partial table, and it leaves
+    no query running in the session."""
+    monkeypatch.setattr(jobs, "RUN_TIMEOUT_S", 1)
+    src = str(tmp_path / "src")
+    spark.range(1).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+    # the one micro-batch sleeps 60 s in an interruptible JVM call
+    slow = stream.select(F.expr("reflect('java.lang.Thread', 'sleep', id + 60000)").alias("r"))
+    with pytest.raises(TimeoutError):
+        run_to_memory(slow)
+    assert spark.streams.active == []
+
+
+def test_only_jobs_waits_on_queries_or_overwrites_batches():
+    """``streaming/jobs.py`` is the one package module that waits on a
+    streaming query (``finish``) or writes a batch with dynamic
+    partition overwrite (``_write_batch``): no other module calls
+    ``awaitTermination`` or passes ``partitionOverwriteMode``."""
+    jobs_path = pathlib.Path(jobs.__file__).resolve()
+    pkg = jobs_path.parent.parent
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == jobs_path:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            if isinstance(node.func, ast.Attribute) and node.func.attr == "awaitTermination":
+                found.append(f"{path.relative_to(pkg)}:{node.lineno} awaitTermination")
+            for arg in node.args:
+                if isinstance(arg, ast.Constant) and "partitionOverwriteMode" in str(arg.value):
+                    found.append(f"{path.relative_to(pkg)}:{node.lineno} partitionOverwriteMode")
+    assert not found, found
