@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import argparse
 import sys
-import tempfile
 import time
 
 from .config import GeneratorConfig, engine_config_from_env
@@ -27,7 +26,7 @@ from .session import get_spark, machine_cpus, start_stream
 from .sources.generator import generate_events
 from .sources.rate_stream import message_rate_stream
 from .streaming.detector import detect_undelivered
-from .streaming.jobs import console_dry_run, read_event_stream_from_files, run_to_memory
+from .streaming.jobs import console_dry_run, replay_stream, run_to_memory, scratch
 
 
 def dry_run(args: argparse.Namespace) -> None:
@@ -44,15 +43,14 @@ def dry_run(args: argparse.Namespace) -> None:
     print(f"... ({events.count()} events total)")
 
     # detector over a file replay (Kafka-less path)
-    events_dir = tempfile.mkdtemp(prefix="demo-events-")
-    events.coalesce(4).write.mode("overwrite").parquet(events_dir)
     ecfg = engine_config_from_env()
-    stream = read_event_stream_from_files(spark, events_dir)
-    out = run_to_memory(
-        detect_undelivered(
-            stream, ecfg.timeout_s * 1000, watermark_delay=f"{ecfg.watermark_delay_s} seconds"
-        )
-    ).cache()
+    with scratch() as tmp:
+        stream = replay_stream(f"{tmp}/in", events, order=["timestamp"])
+        out = run_to_memory(
+            detect_undelivered(
+                stream, ecfg.timeout_s * 1000, watermark_delay=f"{ecfg.watermark_delay_s} seconds"
+            )
+        ).cache()
 
     print(f"\n== detector (timeout {ecfg.timeout_s}s) ==")
     for r in out.groupBy("kind").count().orderBy("kind").collect():
@@ -81,29 +79,29 @@ def live(args: argparse.Namespace) -> None:
         delivery_delay_ticks=20,
     )
     det = detect_undelivered(stream, timeout_ms=60_000, watermark_delay="5 seconds")
-    ckpt = tempfile.mkdtemp(prefix="demo-live-ckpt-")
-    q = start_stream(
-        det.writeStream.format("memory")
-        .queryName("demo_live_out")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt),
-        spark,
-    )
-    print(f"== live: {args.rate} events/s for {args.seconds}s (Ctrl-C to stop) ==")
-    deadline = time.time() + args.seconds
-    try:
-        while time.time() < deadline:
-            time.sleep(5)
-            p = q.lastProgress
-            if p:
-                print(
-                    f"  batch {p['batchId']}: {p['numInputRows']} rows in "
-                    f"{p['durationMs']['triggerExecution'] / 1000:.1f}s"
-                )
-    except KeyboardInterrupt:
-        pass
-    finally:
-        q.stop()
+    with scratch() as tmp:
+        q = start_stream(
+            det.writeStream.format("memory")
+            .queryName("demo_live_out")
+            .outputMode("append")
+            .option("checkpointLocation", f"{tmp}/ckpt"),
+            spark,
+        )
+        print(f"== live: {args.rate} events/s for {args.seconds}s (Ctrl-C to stop) ==")
+        deadline = time.time() + args.seconds
+        try:
+            while time.time() < deadline:
+                time.sleep(5)
+                p = q.lastProgress
+                if p:
+                    print(
+                        f"  batch {p['batchId']}: {p['numInputRows']} rows in "
+                        f"{p['durationMs']['triggerExecution'] / 1000:.1f}s"
+                    )
+        except KeyboardInterrupt:
+            pass
+        finally:
+            q.stop()
     spark.table("demo_live_out").groupBy("kind").count().show()
 
 

@@ -234,15 +234,12 @@ def gen_carrier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "deliveries are classified against the deadline in event time (ST5).",
 )
 def st1_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.detector import detect_undelivered
-    from ..streaming.jobs import read_event_stream_from_files, run_to_memory
+    from ..streaming.jobs import replay_stream, run_to_memory, scratch
 
-    events_dir = tempfile.mkdtemp(prefix="st1-events-")
-    _events(spark, CFG).coalesce(4).write.mode("overwrite").parquet(events_dir)
-    stream = read_event_stream_from_files(spark, events_dir)
-    return run_to_memory(detect_undelivered(stream, TIMEOUT_MS, watermark_delay="30 seconds"))
+    with scratch() as tmp:
+        stream = replay_stream(f"{tmp}/in", _events(spark, CFG), order=["timestamp"])
+        return run_to_memory(detect_undelivered(stream, TIMEOUT_MS, watermark_delay="30 seconds"))
 
 
 CFG_NORMAL = GeneratorConfig(

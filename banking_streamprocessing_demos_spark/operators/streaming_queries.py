@@ -34,22 +34,14 @@ parallelism.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import time
-
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from ..streaming.jobs import finish, run_to_memory
+from ..streaming.jobs import finish, replay_stream, run_to_memory, scratch
 from . import Registry
-from .dedup import (
-    MINHASH_BANDS,
-    NGRAM_N,
-    minhash_lsh_oracle,  # noqa: F401  (doc pointer: shared constants family)
-)
-from .dedup import _band_sql, _minhash_sig_sql, _shingles_raw_sql
+# the MinHash constants are dedup.minhash_lsh_oracle's family
+from .dedup import MINHASH_BANDS, NGRAM_N, _band_sql, _minhash_sig_sql, _shingles_raw_sql
 from .message_domain import CFG, _PRELUDE, _events
 from .sketches import (
     CMS_D,
@@ -113,14 +105,6 @@ def _replay_docs_sql(extra_cols: str = "") -> str:
 _REPLAY_DOCS_SQL = _replay_docs_sql()
 
 
-def _write_sorted_replay(df: DataFrame, prefix: str, order_cols: list[str]) -> str:
-    """One sorted file = deterministic arrival order for the single
-    availableNow micro-batch (see module docstring)."""
-    path = tempfile.mkdtemp(prefix=prefix)
-    df.orderBy(*order_cols).coalesce(1).write.mode("overwrite").parquet(path)
-    return path
-
-
 @REG.add(
     "streaming_doc_dedup",
     f"""
@@ -139,13 +123,11 @@ def streaming_doc_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import streaming_doc_dedup
 
     replay = _replay_corpus(spark, sf_dir)
-    path = _write_sorted_replay(replay, "sdd-docs-", ["ingest_ts", "doc_id"])
-    stream = spark.readStream.schema(
-        "doc_id long, text string, ingest_ts timestamp"
-    ).parquet(path)
-    # horizon > replay span (DUP_OFFSET seconds ≈ 116 days): no eviction,
-    # stream == global first-arrival dedup
-    out = run_to_memory(streaming_doc_dedup(stream, delay="3650 days"))
+    with scratch() as tmp:
+        stream = replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
+        # horizon > replay span (DUP_OFFSET seconds ≈ 116 days): no eviction,
+        # stream == global first-arrival dedup
+        out = run_to_memory(streaming_doc_dedup(stream, delay="3650 days"))
     return out.select("doc_id", "content_hash")
 
 
@@ -195,11 +177,9 @@ def streaming_minhash_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ingest_ts", F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000)
     )
     replay = _replay_corpus(spark, sf_dir).unionByName(sentinel)
-    path = _write_sorted_replay(replay, "smh-docs-", ["ingest_ts", "doc_id"])
-    stream = spark.readStream.schema(
-        "doc_id long, text string, ingest_ts timestamp"
-    ).parquet(path)
-    out = run_to_memory(streaming_minhash_dedup(stream, window="1 minute", delay="2 minutes"))
+    with scratch() as tmp:
+        stream = replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
+        out = run_to_memory(streaming_minhash_dedup(stream, window="1 minute", delay="2 minutes"))
     # belt-and-braces: the sentinel's window cannot have closed, but pin
     # the output bound so a future flush-semantics change fails loudly
     # in the hash gate rather than silently including it
@@ -263,11 +243,9 @@ def streaming_keep_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ingest_ts", F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000)
     )
     replay = _replay_corpus(spark, sf_dir).unionByName(sentinel)
-    path = _write_sorted_replay(replay, "skb-docs-", ["ingest_ts", "doc_id"])
-    stream = spark.readStream.schema(
-        "doc_id long, text string, ingest_ts timestamp"
-    ).parquet(path)
-    out = run_to_memory(streaming_keep_best(stream, window="1 minute", delay="2 minutes"))
+    with scratch() as tmp:
+        stream = replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
+        out = run_to_memory(streaming_keep_best(stream, window="1 minute", delay="2 minutes"))
     return out.select("window_start_ms", "sig_key", "doc_id", "word_count", "n_members")
 
 
@@ -308,29 +286,15 @@ def _streaming_hll_oracle() -> str:
     "batch SQL bit-for-bit; a sentinel event closes every real window.",
 )
 def streaming_hll_distinct_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.jobs import read_event_stream_from_files, streaming_hll_distinct
+    from ..streaming.jobs import streaming_hll_distinct
 
-    events = _events(spark, CFG)
-    max_ts = events.agg(F.max("timestamp")).first()[0]
-    sentinel_ts = max_ts + 30_000 + 120_000 + 60_000
-    sentinel = spark.createDataFrame(
-        [
-            Row(
-                message_id="sentinel",
-                status="sent",
-                phone_number=0,
-                carrier="verizon",
-                timestamp=sentinel_ts,
+    with scratch() as tmp:
+        stream, max_ts = _events_replay(spark, f"{tmp}/in")
+        out = run_to_memory(
+            streaming_hll_distinct(
+                stream, key="phone_number", window="1 minute", delay="30 seconds"
             )
-        ],
-        schema=events.schema,
-    )
-    path = tempfile.mkdtemp(prefix="shll-events-")
-    events.unionByName(sentinel).coalesce(4).write.mode("overwrite").parquet(path)
-    stream = read_event_stream_from_files(spark, path)
-    out = run_to_memory(
-        streaming_hll_distinct(stream, key="phone_number", window="1 minute", delay="30 seconds")
-    )
+        )
     # the sentinel's own (never-closed, never-emitted) window starts
     # after max_ts; bound the output to real windows only
     return out.filter(F.col("window_start_ms") <= F.lit(max_ts))
@@ -368,29 +332,13 @@ def _streaming_cms_oracle() -> str:
     "probes these cells per closed window — pytest-covered.",
 )
 def streaming_cms_cells_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.jobs import read_event_stream_from_files, streaming_cms_cells
+    from ..streaming.jobs import streaming_cms_cells
 
-    events = _events(spark, CFG)
-    max_ts = events.agg(F.max("timestamp")).first()[0]
-    sentinel_ts = max_ts + 30_000 + 120_000 + 60_000
-    sentinel = spark.createDataFrame(
-        [
-            Row(
-                message_id="sentinel",
-                status="sent",
-                phone_number=0,
-                carrier="verizon",
-                timestamp=sentinel_ts,
-            )
-        ],
-        schema=events.schema,
-    )
-    path = tempfile.mkdtemp(prefix="scms-events-")
-    events.unionByName(sentinel).coalesce(4).write.mode("overwrite").parquet(path)
-    stream = read_event_stream_from_files(spark, path)
-    out = run_to_memory(
-        streaming_cms_cells(stream, key="phone_number", window="1 minute", delay="30 seconds")
-    )
+    with scratch() as tmp:
+        stream, max_ts = _events_replay(spark, f"{tmp}/in")
+        out = run_to_memory(
+            streaming_cms_cells(stream, key="phone_number", window="1 minute", delay="30 seconds")
+        )
     return out.filter(F.col("window_start_ms") <= F.lit(max_ts)).select(
         "window_start_ms", F.col("r").cast("int").alias("r"), "bucket", "c"
     )
@@ -452,28 +400,27 @@ def streaming_ivf_assign_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay = replay.unionByName(sentinel).withColumn(
         "ingest_ts", F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("vec_id") * 1000)
     )
-    path = _write_sorted_replay(replay, "siv-vecs-", ["ingest_ts", "vec_id"])
-    stream = (
-        spark.readStream.schema("vec_id long, v array<double>, ingest_ts timestamp")
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-        .withColumn("nrm", F.sqrt(_dot("v", "v")))
-        .withColumn("one", F.lit(1))
-    )
-    scored = stream.join(F.broadcast(cents), "one").withColumn(
-        "cell_cos", _dot("v", "cv") / (F.col("nrm") * F.col("cn"))
-    )
-    # streaming-safe argmax: max over (cell_cos, -cell_id) structs picks the
-    # highest cosine, lowest cell_id on exact ties — the assign_cells order
-    best = F.max(F.struct(F.col("cell_cos"), (-F.col("cell_id")).alias("neg_cell"))).alias("b")
-    agg = scored.groupBy(F.window("ingest_ts", "1 minute"), "vec_id").agg(best)
-    out_stream = agg.select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        "vec_id",
-        (-F.col("b.neg_cell")).alias("cell_id"),
-        F.round(F.col("b.cell_cos"), 6).alias("cell_cos"),
-    )
-    out = run_to_memory(out_stream)
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "vec_id"])
+            .withWatermark("ingest_ts", "2 minutes")
+            .withColumn("nrm", F.sqrt(_dot("v", "v")))
+            .withColumn("one", F.lit(1))
+        )
+        scored = stream.join(F.broadcast(cents), "one").withColumn(
+            "cell_cos", _dot("v", "cv") / (F.col("nrm") * F.col("cn"))
+        )
+        # streaming-safe argmax: max over (cell_cos, -cell_id) structs picks the
+        # highest cosine, lowest cell_id on exact ties — the assign_cells order
+        best = F.max(F.struct(F.col("cell_cos"), (-F.col("cell_id")).alias("neg_cell"))).alias("b")
+        agg = scored.groupBy(F.window("ingest_ts", "1 minute"), "vec_id").agg(best)
+        out_stream = agg.select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            "vec_id",
+            (-F.col("b.neg_cell")).alias("cell_id"),
+            F.round(F.col("b.cell_cos"), 6).alias("cell_cos"),
+        )
+        out = run_to_memory(out_stream)
     return out.filter(F.col("vec_id") < SENTINEL_ORD)
 
 
@@ -522,40 +469,39 @@ def streaming_pq_assign_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay = replay.unionByName(sentinel).withColumn(
         "ingest_ts", F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("vec_id") * 1000)
     )
-    path = _write_sorted_replay(replay, "spq-vecs-", ["ingest_ts", "vec_id"])
     nrm = F.sqrt(_dot("v", "v"))
-    stream = (
-        spark.readStream.schema("vec_id long, v array<double>, ingest_ts timestamp")
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-        .withColumn("u", F.transform("v", lambda x: x / nrm))
-    )
-    codes = stream.select(
-        "ingest_ts",
-        "vec_id",
-        F.posexplode(
-            F.expr(
-                "array("
-                + ", ".join(_argmin_sql(_sub_sql("u", m), cb[m]) for m in range(PQ_M))
-                + ")"
-            )
-        ).alias("subspace", "code"),
-    )
-    agg = codes.groupBy(F.window("ingest_ts", "1 minute"), "subspace", "code").agg(
-        F.count("*").alias("n")
-    )
-    out_stream = agg.select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        F.col("subspace").cast("int").alias("subspace"),
-        F.col("code").cast("int").alias("code"),
-        "n",
-    )
-    # the sentinel's own window never closes (watermark semantics); if a
-    # flush-semantics change ever emitted it, the oracle hash mismatch
-    # fails the gate loudly — no output filter needed (a bound of
-    # SENTINEL_ORD*1000 was a no-op: the sentinel's tumbling window
-    # starts below it)
-    return run_to_memory(out_stream)
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "vec_id"])
+            .withWatermark("ingest_ts", "2 minutes")
+            .withColumn("u", F.transform("v", lambda x: x / nrm))
+        )
+        codes = stream.select(
+            "ingest_ts",
+            "vec_id",
+            F.posexplode(
+                F.expr(
+                    "array("
+                    + ", ".join(_argmin_sql(_sub_sql("u", m), cb[m]) for m in range(PQ_M))
+                    + ")"
+                )
+            ).alias("subspace", "code"),
+        )
+        agg = codes.groupBy(F.window("ingest_ts", "1 minute"), "subspace", "code").agg(
+            F.count("*").alias("n")
+        )
+        out_stream = agg.select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            F.col("subspace").cast("int").alias("subspace"),
+            F.col("code").cast("int").alias("code"),
+            "n",
+        )
+        # the sentinel's own window never closes (watermark semantics); if a
+        # flush-semantics change ever emitted it, the oracle hash mismatch
+        # fails the gate loudly — no output filter needed (a bound of
+        # SENTINEL_ORD*1000 was a no-op: the sentinel's tumbling window
+        # starts below it)
+        return run_to_memory(out_stream)
 
 
 # coarse-screen membership threshold for the MRL serving twin: prefix
@@ -625,45 +571,44 @@ def streaming_mrl_assign_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay = replay.unionByName(sentinel).withColumn(
         "ingest_ts", F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("vec_id") * 1000)
     )
-    path = _write_sorted_replay(replay, "smrl-vecs-", ["ingest_ts", "vec_id"])
     nrm = F.sqrt(_dot("v", "v"))
-    stream = (
-        spark.readStream.schema("vec_id long, v array<double>, ingest_ts timestamp")
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-        .withColumn("qp", F.slice(F.transform("v", lambda x: x / nrm), 1, MRL_DIMS))
-        .withColumn("one", F.lit(1))
-    )
-    scored = (
-        stream.join(F.broadcast(corpus), "one")
-        .filter(F.col("neighbor_id") != F.col("vec_id"))
-        .withColumn("hit", (F.round(_dot("qp", "cp"), 6) >= MRL_STREAM_TAU).cast("long"))
-    )
-    sizes = scored.groupBy(F.window("ingest_ts", "1 minute"), "vec_id").agg(
-        F.sum("hit").alias("sz")
-    )
-    # NO sentinel filter between the stateful layers: a filter on a
-    # GROUPING column (vec_id < SENTINEL_ORD) is legally pushed by
-    # Catalyst through the aggregation, past the EventTimeWatermark
-    # node, into the source scan — the sentinel then never reaches the
-    # watermark tracker and the trailing real windows never flush
-    # (measured: 3 of 9 windows silently absent; the curriculum twin is
-    # immune only because its inter-layer filter is on an AGGREGATED
-    # verdict, which cannot push).  The sentinel's own windows never
-    # close (watermark semantics), so the post-run window filter below
-    # is a guard against flush-semantics changes, not a correctness
-    # crutch.  Layer 2 folds sizes into the per-(window, size) histogram
-    # via window_time() so it lands in the same tumbling minute.
-    agg2 = sizes.groupBy(
-        F.window(F.window_time("window"), "1 minute"),
-        F.col("sz").alias("shortlist_size"),
-    ).agg(F.count("*").alias("n_queries"))
-    out_stream = agg2.select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        F.col("shortlist_size").cast("long").alias("shortlist_size"),
-        F.col("n_queries").cast("long").alias("n_queries"),
-    )
-    out = run_to_memory(out_stream)
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "vec_id"])
+            .withWatermark("ingest_ts", "2 minutes")
+            .withColumn("qp", F.slice(F.transform("v", lambda x: x / nrm), 1, MRL_DIMS))
+            .withColumn("one", F.lit(1))
+        )
+        scored = (
+            stream.join(F.broadcast(corpus), "one")
+            .filter(F.col("neighbor_id") != F.col("vec_id"))
+            .withColumn("hit", (F.round(_dot("qp", "cp"), 6) >= MRL_STREAM_TAU).cast("long"))
+        )
+        sizes = scored.groupBy(F.window("ingest_ts", "1 minute"), "vec_id").agg(
+            F.sum("hit").alias("sz")
+        )
+        # NO sentinel filter between the stateful layers: a filter on a
+        # GROUPING column (vec_id < SENTINEL_ORD) is legally pushed by
+        # Catalyst through the aggregation, past the EventTimeWatermark
+        # node, into the source scan — the sentinel then never reaches the
+        # watermark tracker and the trailing real windows never flush
+        # (measured: 3 of 9 windows silently absent; the curriculum twin is
+        # immune only because its inter-layer filter is on an AGGREGATED
+        # verdict, which cannot push).  The sentinel's own windows never
+        # close (watermark semantics), so the post-run window filter below
+        # is a guard against flush-semantics changes, not a correctness
+        # crutch.  Layer 2 folds sizes into the per-(window, size) histogram
+        # via window_time() so it lands in the same tumbling minute.
+        agg2 = sizes.groupBy(
+            F.window(F.window_time("window"), "1 minute"),
+            F.col("sz").alias("shortlist_size"),
+        ).agg(F.count("*").alias("n_queries"))
+        out_stream = agg2.select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            F.col("shortlist_size").cast("long").alias("shortlist_size"),
+            F.col("n_queries").cast("long").alias("n_queries"),
+        )
+        out = run_to_memory(out_stream)
     # guard bound = the sentinel's own WINDOW START (SENTINEL_ORD is not
     # minute-aligned, so BASE + ORD*1000 would sit above the window
     # start and the filter would be the documented no-op of
@@ -736,40 +681,39 @@ def streaming_contamination_check_q(spark: SparkSession, sf_dir: str) -> DataFra
     replay = docs.unionByName(sentinel).withColumn(
         "ingest_ts", F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000)
     )
-    path = _write_sorted_replay(replay, "scc-docs-", ["ingest_ts", "doc_id"])
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ingest_ts timestamp")
-        .parquet(path)
-        .filter(F.col("doc_id") % CONTAM_BENCH_MOD != 0)
-        .withWatermark("ingest_ts", "2 minutes")
-    )
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(F.split("text", " ")) - NGRAM_N),
-            lambda i: F.concat_ws(
-                " ", *[F.get(F.split("text", " "), i + k) for k in range(NGRAM_N)]
-            ),
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
+            .filter(F.col("doc_id") % CONTAM_BENCH_MOD != 0)
+            .withWatermark("ingest_ts", "2 minutes")
         )
-    )
-    shingled = (
-        stream.filter(F.size(F.split("text", " ")) >= NGRAM_N)
-        .select("doc_id", "ingest_ts", F.explode(grams).alias("s"))
-    )
-    marked = shingled.join(F.broadcast(bench), "s", "left")
-    agg = marked.groupBy(F.window("ingest_ts", "1 minute"), "doc_id").agg(
-        F.count("*").alias("n_shingles"),
-        F.count("__hit").alias("n_contaminated"),
-    )
-    frac = F.col("n_contaminated") / F.col("n_shingles").cast("double")
-    out_stream = agg.filter(F.col("n_contaminated") > 0).select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        "doc_id",
-        F.col("n_shingles").cast("long").alias("n_shingles"),
-        F.col("n_contaminated").cast("long").alias("n_contaminated"),
-        F.round(frac, 6).alias("contamination"),
-        (frac >= F.lit(CONTAM_TAU)).alias("flagged"),
-    )
-    out = run_to_memory(out_stream)
+        grams = F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(0), F.size(F.split("text", " ")) - NGRAM_N),
+                lambda i: F.concat_ws(
+                    " ", *[F.get(F.split("text", " "), i + k) for k in range(NGRAM_N)]
+                ),
+            )
+        )
+        shingled = (
+            stream.filter(F.size(F.split("text", " ")) >= NGRAM_N)
+            .select("doc_id", "ingest_ts", F.explode(grams).alias("s"))
+        )
+        marked = shingled.join(F.broadcast(bench), "s", "left")
+        agg = marked.groupBy(F.window("ingest_ts", "1 minute"), "doc_id").agg(
+            F.count("*").alias("n_shingles"),
+            F.count("__hit").alias("n_contaminated"),
+        )
+        frac = F.col("n_contaminated") / F.col("n_shingles").cast("double")
+        out_stream = agg.filter(F.col("n_contaminated") > 0).select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            "doc_id",
+            F.col("n_shingles").cast("long").alias("n_shingles"),
+            F.col("n_contaminated").cast("long").alias("n_contaminated"),
+            F.round(frac, 6).alias("contamination"),
+            (frac >= F.lit(CONTAM_TAU)).alias("flagged"),
+        )
+        out = run_to_memory(out_stream)
     return out.filter(F.col("doc_id") < SENTINEL_ORD)
 
 
@@ -806,7 +750,7 @@ def _wres_u_sql() -> str:
     """,
     doc=f"Weighted reservoir sampling AT INGEST run FOR REAL (the streaming "
     f"twin of smp5_weighted_sample): the corpus replay arrives in multiple "
-    "micro-batches (maxFilesPerTrigger=1 over a range-partitioned replay) "
+    "micro-batches (one file per trigger over a four-file replay) "
     "and a foreachBatch sink maintains the top-"
     f"{RES_K} documents by the Efraimidis-Spirakis key u^(1/n_tokens).  "
     "Top-k by a deterministic per-row key is a MERGEABLE summary — "
@@ -820,27 +764,25 @@ def streaming_reservoir_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import run_streaming_reservoir
 
     replay = _replay_corpus(spark, sf_dir).select("doc_id", "text")
-    # multi-file replay -> multiple micro-batches: the merge path is
-    # exercised for real, and the mergeable-summary property (not
-    # arrival order) carries determinism
-    path = tempfile.mkdtemp(prefix="srs-docs-")
-    replay.repartitionByRange(4, "doc_id").write.mode("overwrite").parquet(path)
-    reservoir_dir = tempfile.mkdtemp(prefix="srs-reservoir-")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    finish(
-        run_streaming_reservoir(
-            stream,
-            reservoir_dir,
-            checkpoint=tempfile.mkdtemp(prefix="srs-ckpt-"),
-            k=RES_K,
-            seed="wres",
+    # four files -> four micro-batches: the merge path is exercised for
+    # real, and the mergeable-summary property (not arrival order)
+    # carries determinism
+    parts = [replay.filter(F.col("doc_id") % 4 == i) for i in range(4)]
+    with scratch() as tmp:
+        finish(
+            run_streaming_reservoir(
+                replay_stream(f"{tmp}/in", *parts, order=["doc_id"]),
+                f"{tmp}/reservoir",
+                checkpoint=f"{tmp}/ckpt",
+                k=RES_K,
+                seed="wres",
+            )
         )
-    )
-    return spark.read.parquet(reservoir_dir).select("doc_id", "n_tokens", "sample_key")
+        return (
+            spark.read.parquet(f"{tmp}/reservoir")
+            .select("doc_id", "n_tokens", "sample_key")
+            .localCheckpoint(eager=True)
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -850,11 +792,11 @@ def streaming_reservoir_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 SESSION_GAP_MS = 45_000
 
 
-def _events_replay_path(spark: SparkSession, prefix: str) -> tuple[str, int]:
-    """Generated message fixture + a far-future sentinel event, written
-    for file replay.  The sentinel advances the global watermark past
+def _events_replay(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
+    """Generated message fixture + a far-future sentinel event, replayed
+    from ``path``.  The sentinel advances the global watermark past
     every real session/window so append-mode state flushes; returns
-    (path, max real event ts)."""
+    (stream, max real event ts)."""
     events = _events(spark, CFG)
     max_ts = events.agg(F.max("timestamp")).first()[0]
     sentinel_ts = max_ts + SESSION_GAP_MS + 120_000 + 60_000
@@ -870,9 +812,7 @@ def _events_replay_path(spark: SparkSession, prefix: str) -> tuple[str, int]:
         ],
         schema=events.schema,
     )
-    path = tempfile.mkdtemp(prefix=prefix)
-    events.unionByName(sentinel).coalesce(4).write.mode("overwrite").parquet(path)
-    return path, max_ts
+    return replay_stream(path, events.unionByName(sentinel), order=["timestamp"]), max_ts
 
 
 def _streaming_sessions_oracle() -> str:
@@ -923,11 +863,11 @@ def _streaming_sessions_oracle() -> str:
     "a far-future sentinel event closes every real session.",
 )
 def streaming_sessionization_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.jobs import phone_sessions, read_event_stream_from_files
+    from ..streaming.jobs import phone_sessions
 
-    path, max_ts = _events_replay_path(spark, "ssess-events-")
-    stream = read_event_stream_from_files(spark, path)
-    out = run_to_memory(phone_sessions(stream, gap="45 seconds"))
+    with scratch() as tmp:
+        stream, max_ts = _events_replay(spark, f"{tmp}/in")
+        out = run_to_memory(phone_sessions(stream, gap="45 seconds"))
     # the sentinel's own session starts after every real event; real
     # sessions all start at or before max_ts
     return out.filter(F.col("session_start_ms") <= F.lit(max_ts))
@@ -996,27 +936,31 @@ def _streaming_hh_oracle() -> str:
 def streaming_heavy_hitters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import run_streaming_heavy_hitters
 
-    path, max_ts = _events_replay_path(spark, "shh-events-")
-    out_path = tempfile.mkdtemp(prefix="shh-out-")
-    finish(
-        run_streaming_heavy_hitters(
-            spark,
-            path,
-            out_path,
-            checkpoint=tempfile.mkdtemp(prefix="shh-ckpt-"),
-            key="phone_number",
-            window="1 minute",
-            delay="30 seconds",
-            topk=HH_TOPK,
+    with scratch() as tmp:
+        _, max_ts = _events_replay(spark, f"{tmp}/in")
+        finish(
+            run_streaming_heavy_hitters(
+                spark,
+                f"{tmp}/in",
+                f"{tmp}/out",
+                checkpoint=f"{tmp}/ckpt",
+                key="phone_number",
+                window="1 minute",
+                delay="30 seconds",
+                topk=HH_TOPK,
+            )
         )
-    )
-    out = spark.read.parquet(out_path)
-    return out.filter(F.col("window_start_ms") <= F.lit(max_ts)).select(
-        "window_start_ms",
-        F.col("k").alias("phone_number"),
-        "est_count",
-        F.col("rank").cast("long").alias("rank"),
-    )
+        out = spark.read.parquet(f"{tmp}/out")
+        return (
+            out.filter(F.col("window_start_ms") <= F.lit(max_ts))
+            .select(
+                "window_start_ms",
+                F.col("k").alias("phone_number"),
+                "est_count",
+                F.col("rank").cast("long").alias("rank"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -1068,35 +1012,34 @@ def streaming_token_histogram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay = docs.unionByName(sentinel).withColumn(
         "ingest_ts", F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000)
     )
-    path = _write_sorted_replay(replay, "sth-docs-", ["ingest_ts", "doc_id"])
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ingest_ts timestamp")
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-    )
-    spaces = F.length(F.col("text")) - F.length(F.expr("replace(text, ' ', '')"))
-    n_tokens = (spaces + 1).cast("long")
-    binned = stream.select(
-        "doc_id",
-        "ingest_ts",
-        F.least(
-            (n_tokens - n_tokens % HIST_BUCKET_TOKENS) / HIST_BUCKET_TOKENS,
-            F.lit(HIST_MAX_BUCKET),
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
+            .withWatermark("ingest_ts", "2 minutes")
         )
-        .cast("long")
-        .alias("bucket"),
-    )
-    agg = binned.groupBy(F.window("ingest_ts", "1 minute"), "bucket").agg(
-        F.count("*").alias("n_docs")
-    )
-    out_stream = agg.select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("n_docs").cast("long").alias("n_docs"),
-    )
-    # the sentinel's never-closed window is absent by watermark semantics;
-    # a flush-semantics change would fail the oracle hash gate loudly
-    return run_to_memory(out_stream)
+        spaces = F.length(F.col("text")) - F.length(F.expr("replace(text, ' ', '')"))
+        n_tokens = (spaces + 1).cast("long")
+        binned = stream.select(
+            "doc_id",
+            "ingest_ts",
+            F.least(
+                (n_tokens - n_tokens % HIST_BUCKET_TOKENS) / HIST_BUCKET_TOKENS,
+                F.lit(HIST_MAX_BUCKET),
+            )
+            .cast("long")
+            .alias("bucket"),
+        )
+        agg = binned.groupBy(F.window("ingest_ts", "1 minute"), "bucket").agg(
+            F.count("*").alias("n_docs")
+        )
+        out_stream = agg.select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            F.col("bucket").cast("long").alias("bucket"),
+            F.col("n_docs").cast("long").alias("n_docs"),
+        )
+        # the sentinel's never-closed window is absent by watermark semantics;
+        # a flush-semantics change would fail the oracle hash gate loudly
+        return run_to_memory(out_stream)
 
 
 # ---------------------------------------------------------------------------
@@ -1150,48 +1093,28 @@ def streaming_pack_sequences_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .packing import SEQ_LEN
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n_docs = docs.count()
-    path = tempfile.mkdtemp(prefix="spk-docs-")
-    # sequential per-range appends: one file per doc_id range, written
-    # in range order, so FileStreamSource's (mtime, path) ordering
-    # replays them as ordered micro-batches
-    n_slices = 4
-    step = (n_docs // n_slices) + 1
-    # FileStreamSource orders new files by (mtime, path); two appends
-    # landing in the same mtime tick would tie-break on arbitrary UUID
-    # part-file names and could reorder micro-batches.  Stamp each
-    # slice's part files with a strictly increasing mtime so batch
-    # order == slice (doc_id) order deterministically.
-    stamped: set[str] = set()
-    base_mtime = time.time() - n_slices
-    for i in range(n_slices):
-        (
-            docs.filter(
-                (F.col("doc_id") >= i * step) & (F.col("doc_id") < (i + 1) * step)
+    # one file per doc_id range, replayed in range order as ordered
+    # micro-batches
+    step = docs.count() // 4 + 1
+    parts = [
+        docs.filter((F.col("doc_id") >= i * step) & (F.col("doc_id") < (i + 1) * step))
+        for i in range(4)
+    ]
+    with scratch() as tmp:
+        finish(
+            run_streaming_pack(
+                replay_stream(f"{tmp}/in", *parts, order=["doc_id"]),
+                f"{tmp}/out",
+                state_dir=f"{tmp}/state",
+                checkpoint=f"{tmp}/ckpt",
+                seq_len=SEQ_LEN,
             )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(path)
         )
-        for fname in os.listdir(path):
-            if fname.endswith(".parquet") and fname not in stamped:
-                stamped.add(fname)
-                os.utime(os.path.join(path, fname), (base_mtime + i, base_mtime + i))
-    out_dir = tempfile.mkdtemp(prefix="spk-out-")
-    finish(
-        run_streaming_pack(
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path),
-            out_dir,
-            state_dir=tempfile.mkdtemp(prefix="spk-state-"),
-            checkpoint=tempfile.mkdtemp(prefix="spk-ckpt-"),
-            seq_len=SEQ_LEN,
+        return (
+            spark.read.parquet(f"{tmp}/out")
+            .select("doc_id", "n_tokens", "start_offset", "start_seq", "end_seq", "n_seqs")
+            .localCheckpoint(eager=True)
         )
-    )
-    return spark.read.parquet(out_dir).select(
-        "doc_id", "n_tokens", "start_offset", "start_seq", "end_seq", "n_seqs"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1286,10 +1209,11 @@ def _streaming_gate_oracle() -> str:
     """
 
 
-def _gate_verdict_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc windowed gate verdict as a STREAMING DataFrame with the
-    window struct retained: (window, doc_id, wc, dup_word_frac,
-    dup_2gram_frac, avg_logprob, fail_reasons, passed).  Consumers
+def _gate_verdict_stream(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
+    """Per-doc windowed gate verdict as a STREAMING DataFrame over a
+    replay written to ``path``, with the window struct retained:
+    (window, doc_id, wc, dup_word_frac, dup_2gram_frac, avg_logprob,
+    fail_reasons, passed).  Consumers
     either project per-doc verdicts (streaming_quality_gate) or chain
     a SECOND windowed aggregation on top (streaming_curriculum_
     histogram — Spark's multi-stateful-operator support: dedup state →
@@ -1335,10 +1259,8 @@ def _gate_verdict_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
         )
     )
-    path = _write_sorted_replay(replay, "sqg-docs-", ["ingest_ts", "doc_id"])
     stream = (
-        spark.readStream.schema("doc_id long, text string, ingest_ts timestamp")
-        .parquet(path)
+        replay_stream(path, replay, order=["ingest_ts", "doc_id"])
         .withWatermark("ingest_ts", "2 minutes")
     )
     # stage 1: canonicality = surviving first-arrival dedup at ingest
@@ -1446,19 +1368,20 @@ def _gate_verdict_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streamed verdicts hash-match the SQL oracle bit-for-bit.",
 )
 def streaming_quality_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .text import text_bigram_lm_score  # noqa: F401  (doc pointer: same LM family)
-
-    out_stream = _gate_verdict_stream(spark, sf_dir).select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        "doc_id",
-        "wc",
-        "dup_word_frac",
-        "dup_2gram_frac",
-        "avg_logprob",
-        "fail_reasons",
-        "passed",
-    )
-    out = run_to_memory(out_stream)
+    # the LM is text.text_bigram_lm_score's bigram family
+    with scratch() as tmp:
+        out = run_to_memory(
+            _gate_verdict_stream(spark, sf_dir, f"{tmp}/in").select(
+                F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+                "doc_id",
+                "wc",
+                "dup_word_frac",
+                "dup_2gram_frac",
+                "avg_logprob",
+                "fail_reasons",
+                "passed",
+            )
+        )
     return out.filter(F.col("doc_id") < SENTINEL_ORD)
 
 
@@ -1506,34 +1429,35 @@ def _streaming_curr_hist_oracle() -> str:
 def streaming_curriculum_histogram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .packing import CURR_T1, CURR_T2
 
-    verdict = _gate_verdict_stream(spark, sf_dir)
     tier = (
         F.when(F.col("avg_logprob") >= CURR_T1, 0)
         .when(F.col("avg_logprob") >= CURR_T2, 1)
         .otherwise(2)
         .cast("long")
     )
-    passed = verdict.filter("passed").select("window", tier.alias("tier"), "wc")
-    # chained windowed aggregation: window_time() re-derives the event
-    # time from the first agg's window struct, so the second agg lands
-    # in the same tumbling minute (watermark propagates through both
-    # stateful operators; the far-future sentinel closes every real
-    # window in both layers)
-    agg2 = passed.groupBy(
-        F.window(F.window_time("window"), "1 minute"), "tier"
-    ).agg(
-        F.count("*").alias("n_docs"),
-        F.sum("wc").cast("long").alias("total_tokens"),
-    )
-    out_stream = agg2.select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        "tier",
-        F.col("n_docs").cast("long").alias("n_docs"),
-        "total_tokens",
-    )
-    # sentinel window absent by watermark semantics; oracle hash gate
-    # catches any flush-semantics change
-    return run_to_memory(out_stream)
+    with scratch() as tmp:
+        verdict = _gate_verdict_stream(spark, sf_dir, f"{tmp}/in")
+        passed = verdict.filter("passed").select("window", tier.alias("tier"), "wc")
+        # chained windowed aggregation: window_time() re-derives the event
+        # time from the first agg's window struct, so the second agg lands
+        # in the same tumbling minute (watermark propagates through both
+        # stateful operators; the far-future sentinel closes every real
+        # window in both layers)
+        agg2 = passed.groupBy(
+            F.window(F.window_time("window"), "1 minute"), "tier"
+        ).agg(
+            F.count("*").alias("n_docs"),
+            F.sum("wc").cast("long").alias("total_tokens"),
+        )
+        out_stream = agg2.select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            "tier",
+            F.col("n_docs").cast("long").alias("n_docs"),
+            "total_tokens",
+        )
+        # sentinel window absent by watermark semantics; oracle hash gate
+        # catches any flush-semantics change
+        return run_to_memory(out_stream)
 
 
 # ---------------------------------------------------------------------------
@@ -1585,17 +1509,15 @@ def streaming_epoch_plan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .packing import EPOCH_BUDGET_FACTOR, MAX_EPOCHS
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    path = _write_sorted_replay(docs, "sep-docs-", ["doc_id"])
-    stream = spark.readStream.schema("doc_id long, source string, text string").parquet(
-        path
-    )
-    spaces = F.length(F.col("text")) - F.length(F.expr("replace(text, ' ', '')"))
-    totals_stream = (
-        stream.select("source", (spaces + 1).cast("long").alias("n_tokens"))
-        .groupBy("source")
-        .agg(F.count("*").alias("n_docs"), F.sum("n_tokens").alias("total_tokens"))
-    )
-    totals = run_to_memory(totals_stream, output_mode="complete")
+    with scratch() as tmp:
+        stream = replay_stream(f"{tmp}/in", docs, order=["doc_id"])
+        spaces = F.length(F.col("text")) - F.length(F.expr("replace(text, ' ', '')"))
+        totals_stream = (
+            stream.select("source", (spaces + 1).cast("long").alias("n_tokens"))
+            .groupBy("source")
+            .agg(F.count("*").alias("n_docs"), F.sum("n_tokens").alias("total_tokens"))
+        )
+        totals = run_to_memory(totals_stream, output_mode="complete")
     g = totals.agg(
         F.sum("total_tokens").alias("all_tokens"), F.count("*").alias("n_src")
     )
@@ -1667,27 +1589,26 @@ def streaming_boilerplate_strip_q(spark: SparkSession, sf_dir: str) -> DataFrame
     replay = static_docs.unionByName(sentinel).withColumn(
         "ingest_ts", F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000)
     )
-    path = _write_sorted_replay(replay, "sbp-docs-", ["ingest_ts", "doc_id"])
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ingest_ts timestamp")
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-    )
-    segs = segment_rows(stream)
-    marked = segs.join(F.broadcast(inventory), "seg_key", "left").withColumn(
-        "is_bp", F.col("bp_hit").isNotNull()
-    )
-    agg = marked.groupBy(F.window("ingest_ts", "1 minute"), "doc_id").agg(
-        *strip_agg_columns()
-    )
-    out_stream = agg.select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        "doc_id",
-        "n_segments",
-        "n_removed",
-        "cleaned_text",
-    )
-    out = run_to_memory(out_stream)
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
+            .withWatermark("ingest_ts", "2 minutes")
+        )
+        segs = segment_rows(stream)
+        marked = segs.join(F.broadcast(inventory), "seg_key", "left").withColumn(
+            "is_bp", F.col("bp_hit").isNotNull()
+        )
+        agg = marked.groupBy(F.window("ingest_ts", "1 minute"), "doc_id").agg(
+            *strip_agg_columns()
+        )
+        out_stream = agg.select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            "doc_id",
+            "n_segments",
+            "n_removed",
+            "cleaned_text",
+        )
+        out = run_to_memory(out_stream)
     return out.filter(F.col("doc_id") < SENTINEL_ORD)
 
 
@@ -1742,30 +1663,29 @@ def streaming_bpe_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay = docs.unionByName(sentinel).withColumn(
         "ingest_ts", F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000)
     )
-    path = _write_sorted_replay(replay, "sbe-docs-", ["ingest_ts", "doc_id"])
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ingest_ts timestamp")
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-    )
-    words = stream.select(
-        "doc_id", "ingest_ts", F.explode(F.split("text", " ")).alias("word")
-    ).filter(F.length("word") > 0)
-    # inner join drops the sentinel's unknown words, so its row never
-    # reaches the agg — but its WATERMARK still advances (watermarks are
-    # computed on the input, before the join), closing every real window
-    joined = words.join(F.broadcast(mapping), "word")
-    agg = joined.groupBy(F.window("ingest_ts", "1 minute"), "doc_id").agg(
-        F.count("*").alias("n_words"),
-        F.sum("word_toks").cast("long").alias("n_tokens_bpe_fit"),
-    )
-    out_stream = agg.select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        "doc_id",
-        "n_words",
-        "n_tokens_bpe_fit",
-    )
-    out = run_to_memory(out_stream)
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
+            .withWatermark("ingest_ts", "2 minutes")
+        )
+        words = stream.select(
+            "doc_id", "ingest_ts", F.explode(F.split("text", " ")).alias("word")
+        ).filter(F.length("word") > 0)
+        # inner join drops the sentinel's unknown words, so its row never
+        # reaches the agg — but its WATERMARK still advances (watermarks are
+        # computed on the input, before the join), closing every real window
+        joined = words.join(F.broadcast(mapping), "word")
+        agg = joined.groupBy(F.window("ingest_ts", "1 minute"), "doc_id").agg(
+            F.count("*").alias("n_words"),
+            F.sum("word_toks").cast("long").alias("n_tokens_bpe_fit"),
+        )
+        out_stream = agg.select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            "doc_id",
+            "n_words",
+            "n_tokens_bpe_fit",
+        )
+        out = run_to_memory(out_stream)
     return out.filter(F.col("doc_id") < SENTINEL_ORD)
 
 
@@ -1850,31 +1770,30 @@ def streaming_chunk_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay = replay.unionByName(sentinel).withColumn(
         "ingest_ts", F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("upload_id") * 1000)
     )
-    path = _write_sorted_replay(replay, "scd-media-", ["ingest_ts", "upload_id"])
-    stream = (
-        spark.readStream.schema("upload_id long, payload string, ingest_ts timestamp")
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-    )
-    # chunk_frame carries every non-payload column through, so the
-    # streaming frame keeps (upload_id, ingest_ts) alongside the chunks
-    up = chunk_frame(stream)
-    joined = up.join(F.broadcast(inv), ["chunk_idx", "h"])
-    agg = joined.groupBy(F.window("ingest_ts", "1 minute"), "upload_id", "match_id").agg(
-        F.count("*").cast("long").alias("shared_chunks"),
-        F.min("n_chunks").alias("nu"),
-        F.min("ni").alias("ni2"),
-    )
-    out_stream = agg.filter(F.col("shared_chunks") >= MM_CHUNK_MIN_SHARED).select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        "upload_id",
-        "match_id",
-        "shared_chunks",
-        F.round(
-            F.col("shared_chunks") / F.least("nu", "ni2").cast("double"), 6
-        ).alias("containment"),
-    )
-    return run_to_memory(out_stream)
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "upload_id"])
+            .withWatermark("ingest_ts", "2 minutes")
+        )
+        # chunk_frame carries every non-payload column through, so the
+        # streaming frame keeps (upload_id, ingest_ts) alongside the chunks
+        up = chunk_frame(stream)
+        joined = up.join(F.broadcast(inv), ["chunk_idx", "h"])
+        agg = joined.groupBy(F.window("ingest_ts", "1 minute"), "upload_id", "match_id").agg(
+            F.count("*").cast("long").alias("shared_chunks"),
+            F.min("n_chunks").alias("nu"),
+            F.min("ni").alias("ni2"),
+        )
+        out_stream = agg.filter(F.col("shared_chunks") >= MM_CHUNK_MIN_SHARED).select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            "upload_id",
+            "match_id",
+            "shared_chunks",
+            F.round(
+                F.col("shared_chunks") / F.least("nu", "ni2").cast("double"), 6
+            ).alias("containment"),
+        )
+        return run_to_memory(out_stream)
 
 
 def _streaming_phash_oracle() -> str:
@@ -1964,45 +1883,44 @@ def streaming_phash_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay = replay.unionByName(sentinel).withColumn(
         "ingest_ts", F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("upload_id") * 1000)
     )
-    path = _write_sorted_replay(replay, "sph-media-", ["ingest_ts", "upload_id"])
-    stream = (
-        spark.readStream.schema("upload_id long, payload string, ingest_ts timestamp")
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-    )
-    bands = stream.select(
-        "upload_id",
-        "ingest_ts",
-        F.explode(F.expr(_phash_band_structs_sql("payload"))).alias("bk"),
-    ).select(
-        "upload_id",
-        "ingest_ts",
-        F.col("bk.tbl").alias("tbl"),
-        F.col("bk.key").alias("key"),
-        F.col("bk.lo").alias("lo"),
-        F.col("bk.hi").alias("hi"),
-    )
-    joined = (
-        bands.join(F.broadcast(inv), ["tbl", "key"])
-        .withColumn(
-            "hamming",
-            (
-                F.bit_count(F.col("hi").bitwiseXOR(F.col("ihi")))
-                + F.bit_count(F.col("lo").bitwiseXOR(F.col("ilo")))
-            ).cast("bigint"),
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "upload_id"])
+            .withWatermark("ingest_ts", "2 minutes")
         )
-        .filter(F.col("hamming") <= PHASH_HAM_K)
-    )
-    agg = joined.groupBy(F.window("ingest_ts", "1 minute"), "upload_id", "match_id").agg(
-        F.min("hamming").alias("hamming")
-    )
-    out_stream = agg.select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        "upload_id",
-        "match_id",
-        "hamming",
-    )
-    out = run_to_memory(out_stream)
+        bands = stream.select(
+            "upload_id",
+            "ingest_ts",
+            F.explode(F.expr(_phash_band_structs_sql("payload"))).alias("bk"),
+        ).select(
+            "upload_id",
+            "ingest_ts",
+            F.col("bk.tbl").alias("tbl"),
+            F.col("bk.key").alias("key"),
+            F.col("bk.lo").alias("lo"),
+            F.col("bk.hi").alias("hi"),
+        )
+        joined = (
+            bands.join(F.broadcast(inv), ["tbl", "key"])
+            .withColumn(
+                "hamming",
+                (
+                    F.bit_count(F.col("hi").bitwiseXOR(F.col("ihi")))
+                    + F.bit_count(F.col("lo").bitwiseXOR(F.col("ilo")))
+                ).cast("bigint"),
+            )
+            .filter(F.col("hamming") <= PHASH_HAM_K)
+        )
+        agg = joined.groupBy(F.window("ingest_ts", "1 minute"), "upload_id", "match_id").agg(
+            F.min("hamming").alias("hamming")
+        )
+        out_stream = agg.select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            "upload_id",
+            "match_id",
+            "hamming",
+        )
+        out = run_to_memory(out_stream)
     # sentinel filtered on the MATERIALIZED result: a pre-agg filter on a
     # grouping column would be pushed past the watermark into the scan
     # and the flush would never happen (the round-8 pushdown trap)
@@ -2066,44 +1984,41 @@ def streaming_er_match_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay = replay.unionByName(sentinel).withColumn(
         "ingest_ts", F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("src_id") * 1000)
     )
-    path = _write_sorted_replay(replay, "ser-recs-", ["ingest_ts", "dirty_id"])
-    stream = (
-        spark.readStream.schema(
-            "dirty_id long, src_id long, dname string, brand string, ingest_ts timestamp"
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "dirty_id"])
+            .withWatermark("ingest_ts", "2 minutes")
         )
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-    )
-    keyed = stream.select(
-        "ingest_ts",
-        "dirty_id",
-        "dname",
-        "brand",
-        F.explode(
-            F.array(
-                F.substring("dname", 1, BKEY_LEN),
-                F.expr(f"substr(dname, length(dname) - {BKEY_LEN - 1})"),
-                F.array_join(F.array_sort(F.split("dname", " ")), ""),
-            )
-        ).alias("bkey"),
-    )
-    joined = keyed.join(F.broadcast(inv), ["brand", "bkey"]).withColumn(
-        "lev", F.levenshtein("dname", "cname").cast("int")
-    )
-    agg = (
-        joined.filter(F.col("lev") <= MAX_LEV)
-        .groupBy(F.window("ingest_ts", "1 minute"), "dirty_id", "clean_id", "brand")
-        .agg(F.min("cname").alias("matched_name"), F.min("lev").alias("lev"))
-    )
-    out_stream = agg.select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        "dirty_id",
-        "clean_id",
-        "brand",
-        "matched_name",
-        "lev",
-    )
-    return run_to_memory(out_stream)
+        keyed = stream.select(
+            "ingest_ts",
+            "dirty_id",
+            "dname",
+            "brand",
+            F.explode(
+                F.array(
+                    F.substring("dname", 1, BKEY_LEN),
+                    F.expr(f"substr(dname, length(dname) - {BKEY_LEN - 1})"),
+                    F.array_join(F.array_sort(F.split("dname", " ")), ""),
+                )
+            ).alias("bkey"),
+        )
+        joined = keyed.join(F.broadcast(inv), ["brand", "bkey"]).withColumn(
+            "lev", F.levenshtein("dname", "cname").cast("int")
+        )
+        agg = (
+            joined.filter(F.col("lev") <= MAX_LEV)
+            .groupBy(F.window("ingest_ts", "1 minute"), "dirty_id", "clean_id", "brand")
+            .agg(F.min("cname").alias("matched_name"), F.min("lev").alias("lev"))
+        )
+        out_stream = agg.select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            "dirty_id",
+            "clean_id",
+            "brand",
+            "matched_name",
+            "lev",
+        )
+        return run_to_memory(out_stream)
 
 
 # ---------------------------------------------------------------------------
@@ -2227,72 +2142,71 @@ def streaming_bm25_match_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
         )
     )
-    path = _write_sorted_replay(replay, "sbm25-docs-", ["ingest_ts", "doc_id"])
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ingest_ts timestamp")
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-    )
-
-    words = F.split("text", " ")
-
-    # NB: the term must be bound via a closure-returning helper — a
-    # two-parameter lambda (even `lambda x, t=t`) makes PySpark pass
-    # (element, index) and the term silently becomes the array index
-    def _tf(term):
-        return F.size(F.filter(words, lambda x: x == F.lit(term)))
-
-    scored = stream.select(
-        "doc_id",
-        "ingest_ts",
-        F.size(words).cast("long").alias("dl"),
-        *[_tf(t).alias(f"tf{i}") for i, t in enumerate(BM25_QUERY)],
-    ).crossJoin(F.broadcast(stats))
-    zero = F.lit("0").cast("decimal(18,6)")
-    cs = []
-    for i in range(len(BM25_QUERY)):
-        tf = F.col(f"tf{i}")
-        idf = F.log(
-            1 + (F.col("n") - F.col(f"df{i}") + 0.5) / (F.col(f"df{i}") + 0.5)
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
+            .withWatermark("ingest_ts", "2 minutes")
         )
-        norm = tf + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
-        cs.append(
-            F.when(tf > 0, F.round(idf * tf / norm, 6).cast("decimal(18,6)")).otherwise(zero)
-        )
-    # left fold over however many terms the query has — a hardcoded
-    # 3-term sum would silently drop contributions if BM25_QUERY grew
-    # while the generated oracle kept all of them (self-review finding)
-    from functools import reduce
 
-    csum = reduce(lambda a, b: a + b, cs)
-    n_terms = sum(
-        (F.col(f"tf{i}") > 0).cast("long") for i in range(len(BM25_QUERY))
-    )
-    # The sentinel is EXPLICITLY exempted from the row filter: Catalyst
-    # pushes this (non-event-time) predicate through the
-    # EventTimeWatermark node, so a filtered-out sentinel would be
-    # dropped BEFORE the watermark stats see it and the final real
-    # windows would never close (measured: 516 vs 534 oracle rows).
-    # The exempted sentinel row carries 1 row of state whose far-future
-    # window never closes under append mode, and the materialized-result
-    # doc_id filter below excludes it from the output either way.
-    rowed = scored.select(
-        "doc_id",
-        "ingest_ts",
-        csum.alias("csum"),
-        n_terms.alias("n_terms"),
-    ).filter((F.col("n_terms") > 0) | (F.col("doc_id") == SENTINEL_ORD))
-    agg = rowed.groupBy(
-        F.window("ingest_ts", "1 minute"), "doc_id", "csum", "n_terms"
-    ).agg(F.count("*").alias("_k"))
-    out_stream = agg.select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        "doc_id",
-        F.col("csum").cast("double").alias("bm25"),
-        F.col("n_terms").cast("long").alias("n_terms"),
-        (F.col("csum") >= F.lit(BM25_MATCH_TAU).cast("decimal(18,6)")).alias("matched"),
-    )
-    out = run_to_memory(out_stream)
+        words = F.split("text", " ")
+
+        # NB: the term must be bound via a closure-returning helper — a
+        # two-parameter lambda (even `lambda x, t=t`) makes PySpark pass
+        # (element, index) and the term silently becomes the array index
+        def _tf(term):
+            return F.size(F.filter(words, lambda x: x == F.lit(term)))
+
+        scored = stream.select(
+            "doc_id",
+            "ingest_ts",
+            F.size(words).cast("long").alias("dl"),
+            *[_tf(t).alias(f"tf{i}") for i, t in enumerate(BM25_QUERY)],
+        ).crossJoin(F.broadcast(stats))
+        zero = F.lit("0").cast("decimal(18,6)")
+        cs = []
+        for i in range(len(BM25_QUERY)):
+            tf = F.col(f"tf{i}")
+            idf = F.log(
+                1 + (F.col("n") - F.col(f"df{i}") + 0.5) / (F.col(f"df{i}") + 0.5)
+            )
+            norm = tf + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
+            cs.append(
+                F.when(tf > 0, F.round(idf * tf / norm, 6).cast("decimal(18,6)")).otherwise(zero)
+            )
+        # left fold over however many terms the query has — a hardcoded
+        # 3-term sum would silently drop contributions if BM25_QUERY grew
+        # while the generated oracle kept all of them (self-review finding)
+        from functools import reduce
+
+        csum = reduce(lambda a, b: a + b, cs)
+        n_terms = sum(
+            (F.col(f"tf{i}") > 0).cast("long") for i in range(len(BM25_QUERY))
+        )
+        # The sentinel is EXPLICITLY exempted from the row filter: Catalyst
+        # pushes this (non-event-time) predicate through the
+        # EventTimeWatermark node, so a filtered-out sentinel would be
+        # dropped BEFORE the watermark stats see it and the final real
+        # windows would never close (measured: 516 vs 534 oracle rows).
+        # The exempted sentinel row carries 1 row of state whose far-future
+        # window never closes under append mode, and the materialized-result
+        # doc_id filter below excludes it from the output either way.
+        rowed = scored.select(
+            "doc_id",
+            "ingest_ts",
+            csum.alias("csum"),
+            n_terms.alias("n_terms"),
+        ).filter((F.col("n_terms") > 0) | (F.col("doc_id") == SENTINEL_ORD))
+        agg = rowed.groupBy(
+            F.window("ingest_ts", "1 minute"), "doc_id", "csum", "n_terms"
+        ).agg(F.count("*").alias("_k"))
+        out_stream = agg.select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            "doc_id",
+            F.col("csum").cast("double").alias("bm25"),
+            F.col("n_terms").cast("long").alias("n_terms"),
+            (F.col("csum") >= F.lit(BM25_MATCH_TAU).cast("decimal(18,6)")).alias("matched"),
+        )
+        out = run_to_memory(out_stream)
     # defense-in-depth like the other twins: even if the sentinel text
     # ever regained a query term, it is filtered from the materialized
     # result (a post-sink filter, so no watermark-pushdown hazard)
@@ -2363,27 +2277,23 @@ def streaming_k_anonymity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ingest_ts",
         F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("c_custkey") * 1000),
     )
-    path = _write_sorted_replay(replay, "skanon-cust-", ["ingest_ts", "c_custkey"])
-    stream = (
-        spark.readStream.schema(
-            "c_custkey long, nation long, segment string, bal_bucket long, "
-            "ingest_ts timestamp"
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "c_custkey"])
+            .withWatermark("ingest_ts", "2 minutes")
         )
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-    )
-    agg = stream.groupBy(
-        F.window("ingest_ts", "1 minute"), "nation", "segment", "bal_bucket"
-    ).agg(F.count("*").cast("long").alias("class_size"))
-    out_stream = agg.select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        "nation",
-        "segment",
-        "bal_bucket",
-        "class_size",
-        (F.col("class_size") >= K_ANON).alias("releasable"),
-    )
-    out = run_to_memory(out_stream)
+        agg = stream.groupBy(
+            F.window("ingest_ts", "1 minute"), "nation", "segment", "bal_bucket"
+        ).agg(F.count("*").cast("long").alias("class_size"))
+        out_stream = agg.select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            "nation",
+            "segment",
+            "bal_bucket",
+            "class_size",
+            (F.col("class_size") >= K_ANON).alias("releasable"),
+        )
+        out = run_to_memory(out_stream)
     return out.filter(F.col("nation") >= 0)
 
 
@@ -2463,39 +2373,38 @@ def streaming_temperature_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
         )
     )
-    path = _write_sorted_replay(replay, "stmix-docs-", ["ingest_ts", "doc_id"])
-    stream = (
-        spark.readStream.schema("doc_id long, lang string, text string, ingest_ts timestamp")
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-    )
-    keyed = stream.select(
-        "doc_id",
-        "lang",
-        "ingest_ts",
-        F.size(F.split("text", " ")).cast("long").alias("dl"),
-        hex4_to_int(det_hash_hex("doc_id", seed="tmix")).alias("u16"),
-    )
-    thr = F.expr("((w_micro % 1000000) * 65536) div 1000000")
-    mult = F.expr("w_micro div 1000000").cast("long") + F.when(
-        F.col("u16") < thr, 1
-    ).otherwise(0)
-    joined = keyed.join(F.broadcast(w), "lang").select(
-        "doc_id", "lang", "ingest_ts", "dl", mult.alias("mult")
-    )
-    agg = joined.groupBy(F.window("ingest_ts", "1 minute"), "lang").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("mult").cast("long").alias("n_replicas"),
-        F.sum("dl").cast("long").alias("n_tokens"),
-    )
-    out_stream = agg.select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        F.col("lang").alias("domain"),
-        "n_docs",
-        "n_replicas",
-        "n_tokens",
-    )
-    out = run_to_memory(out_stream)
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
+            .withWatermark("ingest_ts", "2 minutes")
+        )
+        keyed = stream.select(
+            "doc_id",
+            "lang",
+            "ingest_ts",
+            F.size(F.split("text", " ")).cast("long").alias("dl"),
+            hex4_to_int(det_hash_hex("doc_id", seed="tmix")).alias("u16"),
+        )
+        thr = F.expr("((w_micro % 1000000) * 65536) div 1000000")
+        mult = F.expr("w_micro div 1000000").cast("long") + F.when(
+            F.col("u16") < thr, 1
+        ).otherwise(0)
+        joined = keyed.join(F.broadcast(w), "lang").select(
+            "doc_id", "lang", "ingest_ts", "dl", mult.alias("mult")
+        )
+        agg = joined.groupBy(F.window("ingest_ts", "1 minute"), "lang").agg(
+            F.count("*").cast("long").alias("n_docs"),
+            F.sum("mult").cast("long").alias("n_replicas"),
+            F.sum("dl").cast("long").alias("n_tokens"),
+        )
+        out_stream = agg.select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            F.col("lang").alias("domain"),
+            "n_docs",
+            "n_replicas",
+            "n_tokens",
+        )
+        out = run_to_memory(out_stream)
     # sentinel's domain filtered on the MATERIALIZED result (grouping-
     # column pre-agg filters get pushed past the watermark — the
     # round-8 trap); its lang joins no weight row anyway, but the
@@ -2585,42 +2494,41 @@ def streaming_dsir_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
         )
     )
-    path = _write_sorted_replay(replay, "sdsir-docs-", ["ingest_ts", "doc_id"])
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ingest_ts timestamp")
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-    )
-    words = F.split("text", " ")
-    pairs = F.transform(
-        F.sequence(F.lit(0), F.size(words) - 2),
-        lambda i: F.concat(F.get(words, i), F.lit(" "), F.get(words, i + 1)),
-    )
-    # explicit size>=2 guard (matches pipe_dsir_weights): without it a
-    # single-word arrival hits sequence(0,-1) -> descending [0,-1] and
-    # emits two NULL bigram rows that only die by coincidence at the
-    # inner join's NULL-key semantics.
-    feats = (
-        stream.filter(F.size(words) >= 2)
-        .select("doc_id", "ingest_ts", F.explode(pairs).alias("bg"))
-        .select("doc_id", "ingest_ts", dsir_feature(F.col("bg")).alias("f"))
-    )
-    contrib = feats.join(F.broadcast(ratio), "f")
-    agg = contrib.groupBy(F.window("ingest_ts", "1 minute"), "doc_id").agg(
-        F.count("*").cast("long").alias("n_feats"),
-        F.sum("lr").alias("t"),
-    )
-    out_stream = agg.select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        "doc_id",
-        "n_feats",
-        F.col("t").cast("double").alias("dsir_logw"),
-        (
-            F.col("t")
-            >= F.lit(DSIR_GATE_TAU).cast("decimal(18,6)") * F.col("n_feats")
-        ).alias("kept"),
-    )
-    out = run_to_memory(out_stream)
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
+            .withWatermark("ingest_ts", "2 minutes")
+        )
+        words = F.split("text", " ")
+        pairs = F.transform(
+            F.sequence(F.lit(0), F.size(words) - 2),
+            lambda i: F.concat(F.get(words, i), F.lit(" "), F.get(words, i + 1)),
+        )
+        # explicit size>=2 guard (matches pipe_dsir_weights): without it a
+        # single-word arrival hits sequence(0,-1) -> descending [0,-1] and
+        # emits two NULL bigram rows that only die by coincidence at the
+        # inner join's NULL-key semantics.
+        feats = (
+            stream.filter(F.size(words) >= 2)
+            .select("doc_id", "ingest_ts", F.explode(pairs).alias("bg"))
+            .select("doc_id", "ingest_ts", dsir_feature(F.col("bg")).alias("f"))
+        )
+        contrib = feats.join(F.broadcast(ratio), "f")
+        agg = contrib.groupBy(F.window("ingest_ts", "1 minute"), "doc_id").agg(
+            F.count("*").cast("long").alias("n_feats"),
+            F.sum("lr").alias("t"),
+        )
+        out_stream = agg.select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            "doc_id",
+            "n_feats",
+            F.col("t").cast("double").alias("dsir_logw"),
+            (
+                F.col("t")
+                >= F.lit(DSIR_GATE_TAU).cast("decimal(18,6)") * F.col("n_feats")
+            ).alias("kept"),
+        )
+        out = run_to_memory(out_stream)
     return out.filter(F.col("doc_id") < SENTINEL_ORD)
 
 
@@ -2697,37 +2605,34 @@ def streaming_dp_release_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ingest_ts",
         F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("c_custkey") * 1000),
     )
-    path = _write_sorted_replay(replay, "sdp-cust-", ["ingest_ts", "c_custkey"])
-    stream = (
-        spark.readStream.schema(
-            "c_custkey long, nation long, segment string, ingest_ts timestamp"
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "c_custkey"])
+            .withWatermark("ingest_ts", "2 minutes")
         )
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-    )
-    agg = stream.groupBy(F.window("ingest_ts", "1 minute"), "nation", "segment").agg(
-        F.count("*").alias("n")
-    )
-    u = agg.select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        "nation",
-        "segment",
-        "n",
-    ).withColumn(
-        "u16",
-        hex4_to_int(
-            det_hash_hex("window_start_ms", "nation", "segment", seed="dpw")
-        ),
-    )
-    out_stream = u.select(
-        "window_start_ms",
-        "nation",
-        "segment",
-        F.greatest(F.col("n") + F.expr(_dp_noise_case_sql()), F.lit(0))
-        .cast("long")
-        .alias("released_count"),
-    )
-    out = run_to_memory(out_stream)
+        agg = stream.groupBy(F.window("ingest_ts", "1 minute"), "nation", "segment").agg(
+            F.count("*").alias("n")
+        )
+        u = agg.select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            "nation",
+            "segment",
+            "n",
+        ).withColumn(
+            "u16",
+            hex4_to_int(
+                det_hash_hex("window_start_ms", "nation", "segment", seed="dpw")
+            ),
+        )
+        out_stream = u.select(
+            "window_start_ms",
+            "nation",
+            "segment",
+            F.greatest(F.col("n") + F.expr(_dp_noise_case_sql()), F.lit(0))
+            .cast("long")
+            .alias("released_count"),
+        )
+        out = run_to_memory(out_stream)
     return out.filter(F.col("nation") >= 0)
 
 
@@ -2829,58 +2734,55 @@ def streaming_ppl_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
         )
     )
-    path = _write_sorted_replay(replay, "sppl-docs-", ["ingest_ts", "doc_id"])
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, ingest_ts timestamp"
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
+            .withWatermark("ingest_ts", "2 minutes")
         )
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-    )
-    words = F.split("text", " ")
-    pairs = F.transform(
-        F.sequence(F.lit(0), F.size(words) - 2),
-        lambda i: F.struct(
-            F.get(words, i).alias("w1"), F.get(words, i + 1).alias("w2")
-        ),
-    )
-    feats = (
-        stream.filter(F.size(words) >= 2)
-        .select("doc_id", "lang", "ingest_ts", F.explode(pairs).alias("p"))
-        .select("doc_id", "lang", "ingest_ts", "p.w1", "p.w2")
-    )
-    scored = feats.join(F.broadcast(model), ["w1", "w2"])
-    agg = scored.groupBy(
-        F.window("ingest_ts", "1 minute"), "doc_id", "lang"
-    ).agg(
-        F.count("*").cast("long").alias("n_bigrams"),
-        F.sum("logp").alias("t"),
-    )
-    out_stream = (
-        agg.select(
-            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-            "doc_id",
-            "lang",
-            "n_bigrams",
-            _avg6_spark("t", "n_bigrams").alias("avg_logprob"),
+        words = F.split("text", " ")
+        pairs = F.transform(
+            F.sequence(F.lit(0), F.size(words) - 2),
+            lambda i: F.struct(
+                F.get(words, i).alias("w1"), F.get(words, i + 1).alias("w2")
+            ),
         )
-        .join(F.broadcast(th), "lang")
-        .select(
-            "window_start_ms",
-            "doc_id",
-            "lang",
-            "n_bigrams",
-            "avg_logprob",
-            F.when(F.col("avg_logprob") >= F.col("t1"), "head")
-            .when(
-                F.col("t2").isNotNull() & (F.col("avg_logprob") >= F.col("t2")),
-                "middle",
+        feats = (
+            stream.filter(F.size(words) >= 2)
+            .select("doc_id", "lang", "ingest_ts", F.explode(pairs).alias("p"))
+            .select("doc_id", "lang", "ingest_ts", "p.w1", "p.w2")
+        )
+        scored = feats.join(F.broadcast(model), ["w1", "w2"])
+        agg = scored.groupBy(
+            F.window("ingest_ts", "1 minute"), "doc_id", "lang"
+        ).agg(
+            F.count("*").cast("long").alias("n_bigrams"),
+            F.sum("logp").alias("t"),
+        )
+        out_stream = (
+            agg.select(
+                F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+                "doc_id",
+                "lang",
+                "n_bigrams",
+                _avg6_spark("t", "n_bigrams").alias("avg_logprob"),
             )
-            .otherwise("tail")
-            .alias("bucket"),
+            .join(F.broadcast(th), "lang")
+            .select(
+                "window_start_ms",
+                "doc_id",
+                "lang",
+                "n_bigrams",
+                "avg_logprob",
+                F.when(F.col("avg_logprob") >= F.col("t1"), "head")
+                .when(
+                    F.col("t2").isNotNull() & (F.col("avg_logprob") >= F.col("t2")),
+                    "middle",
+                )
+                .otherwise("tail")
+                .alias("bucket"),
+            )
         )
-    )
-    out = run_to_memory(out_stream)
+        out = run_to_memory(out_stream)
     return out.filter(F.col("doc_id") < SENTINEL_ORD)
 
 
@@ -2958,33 +2860,32 @@ def streaming_gopher_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
         )
     )
-    path = _write_sorted_replay(replay, "sgopher-docs-", ["ingest_ts", "doc_id"])
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ingest_ts timestamp")
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-    )
-    flagged = gopher_flagged(stream)
-    agg = flagged.groupBy(F.window("ingest_ts", "1 minute")).agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum(F.col("passed").cast("long")).cast("long").alias("n_passed"),
-        F.sum((~F.col("ok_word_count")).cast("long")).cast("long").alias("n_fail_word_count"),
-        F.sum((~F.col("ok_mean_word_len")).cast("long")).cast("long").alias("n_fail_mean_word_len"),
-        F.sum((~F.col("ok_symbol_ratio")).cast("long")).cast("long").alias("n_fail_symbol_ratio"),
-        F.sum((~F.col("ok_alpha_ratio")).cast("long")).cast("long").alias("n_fail_alpha_ratio"),
-        F.sum((~F.col("ok_stopwords")).cast("long")).cast("long").alias("n_fail_stopwords"),
-    )
-    out_stream = agg.select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        "n_docs",
-        "n_passed",
-        "n_fail_word_count",
-        "n_fail_mean_word_len",
-        "n_fail_symbol_ratio",
-        "n_fail_alpha_ratio",
-        "n_fail_stopwords",
-    )
-    return run_to_memory(out_stream)
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
+            .withWatermark("ingest_ts", "2 minutes")
+        )
+        flagged = gopher_flagged(stream)
+        agg = flagged.groupBy(F.window("ingest_ts", "1 minute")).agg(
+            F.count("*").cast("long").alias("n_docs"),
+            F.sum(F.col("passed").cast("long")).cast("long").alias("n_passed"),
+            F.sum((~F.col("ok_word_count")).cast("long")).cast("long").alias("n_fail_word_count"),
+            F.sum((~F.col("ok_mean_word_len")).cast("long")).cast("long").alias("n_fail_mean_word_len"),
+            F.sum((~F.col("ok_symbol_ratio")).cast("long")).cast("long").alias("n_fail_symbol_ratio"),
+            F.sum((~F.col("ok_alpha_ratio")).cast("long")).cast("long").alias("n_fail_alpha_ratio"),
+            F.sum((~F.col("ok_stopwords")).cast("long")).cast("long").alias("n_fail_stopwords"),
+        )
+        out_stream = agg.select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            "n_docs",
+            "n_passed",
+            "n_fail_word_count",
+            "n_fail_mean_word_len",
+            "n_fail_symbol_ratio",
+            "n_fail_alpha_ratio",
+            "n_fail_stopwords",
+        )
+        return run_to_memory(out_stream)
 
 
 # ---------------------------------------------------------------------------
@@ -3102,11 +3003,9 @@ def streaming_source_cap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ingest_ts",
         F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
     )
-    path = _write_sorted_replay(replay, "ssrccap-docs-", ["ingest_ts", "doc_id"])
-    stream = spark.readStream.schema(
-        "doc_id long, source string, ingest_ts timestamp"
-    ).parquet(path)
-    return run_to_memory(source_cap_stream(stream))
+    with scratch() as tmp:
+        stream = replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
+        return run_to_memory(source_cap_stream(stream))
 
 
 # ---------------------------------------------------------------------------
@@ -3199,35 +3098,34 @@ def streaming_quality_classifier_q(spark: SparkSession, sf_dir: str) -> DataFram
             F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
         )
     )
-    path = _write_sorted_replay(replay, "sqclf-docs-", ["ingest_ts", "doc_id"])
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ingest_ts timestamp")
-        .parquet(path)
-        .withWatermark("ingest_ts", "2 minutes")
-    )
-    words = F.split("text", " ")
-    pairs = F.transform(
-        F.sequence(F.lit(0), F.size(words) - 2),
-        lambda i: F.concat(F.get(words, i), F.lit(" "), F.get(words, i + 1)),
-    )
-    feats = (
-        stream.filter(F.size(words) >= 2)
-        .select("doc_id", "ingest_ts", F.explode(pairs).alias("bg"))
-        .select("doc_id", "ingest_ts", qclf_feature(F.col("bg")).alias("f"))
-    )
-    scored = feats.join(F.broadcast(weights), "f")
-    agg = scored.groupBy(F.window("ingest_ts", "1 minute"), "doc_id").agg(
-        F.count("*").cast("long").alias("n_feats"),
-        F.sum("w").alias("t"),
-    )
-    out_stream = agg.select(
-        F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-        "doc_id",
-        "n_feats",
-        (F.lit(bias_val) + F.col("t")).cast("double").alias("margin"),
-        ((F.lit(bias_val) + F.col("t")) > 0).alias("kept"),
-    )
-    out = run_to_memory(out_stream)
+    with scratch() as tmp:
+        stream = (
+            replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
+            .withWatermark("ingest_ts", "2 minutes")
+        )
+        words = F.split("text", " ")
+        pairs = F.transform(
+            F.sequence(F.lit(0), F.size(words) - 2),
+            lambda i: F.concat(F.get(words, i), F.lit(" "), F.get(words, i + 1)),
+        )
+        feats = (
+            stream.filter(F.size(words) >= 2)
+            .select("doc_id", "ingest_ts", F.explode(pairs).alias("bg"))
+            .select("doc_id", "ingest_ts", qclf_feature(F.col("bg")).alias("f"))
+        )
+        scored = feats.join(F.broadcast(weights), "f")
+        agg = scored.groupBy(F.window("ingest_ts", "1 minute"), "doc_id").agg(
+            F.count("*").cast("long").alias("n_feats"),
+            F.sum("w").alias("t"),
+        )
+        out_stream = agg.select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            "doc_id",
+            "n_feats",
+            (F.lit(bias_val) + F.col("t")).cast("double").alias("margin"),
+            ((F.lit(bias_val) + F.col("t")) > 0).alias("kept"),
+        )
+        out = run_to_memory(out_stream)
     return out.filter(F.col("doc_id") < SENTINEL_ORD)
 
 
@@ -3310,30 +3208,28 @@ def streaming_mm_align_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .drop("ts_id")
     )
-    path = _write_sorted_replay(replay, "smmal-pairs-", ["ingest_ts", "caption_id"])
-    stream = spark.readStream.schema(
-        "caption_id long, image_id long, ingest_ts timestamp"
-    ).parquet(path)
-    t = caption_tower(stream, emb)
-    scored = t.join(
-        emb.select(F.col("vec_id").alias("image_id"), F.col("v").alias("iv")),
-        "image_id",
-    ).select(
-        (F.floor(F.unix_millis("ingest_ts") / 60000) * 60000).alias(
-            "window_start_ms"
-        ),
-        "caption_id",
-        "image_id",
-        F.round(
-            _dot("tv", "iv")
-            / (F.sqrt(_dot("tv", "tv")) * F.sqrt(_dot("iv", "iv"))),
-            6,
-        ).alias("align_cos"),
-    )
-    out_stream = scored.withColumn(
-        "kept", F.col("align_cos") >= MM_ALIGN_THRESHOLD
-    )
-    return run_to_memory(out_stream)
+    with scratch() as tmp:
+        stream = replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "caption_id"])
+        t = caption_tower(stream, emb)
+        scored = t.join(
+            emb.select(F.col("vec_id").alias("image_id"), F.col("v").alias("iv")),
+            "image_id",
+        ).select(
+            (F.floor(F.unix_millis("ingest_ts") / 60000) * 60000).alias(
+                "window_start_ms"
+            ),
+            "caption_id",
+            "image_id",
+            F.round(
+                _dot("tv", "iv")
+                / (F.sqrt(_dot("tv", "tv")) * F.sqrt(_dot("iv", "iv"))),
+                6,
+            ).alias("align_cos"),
+        )
+        out_stream = scored.withColumn(
+            "kept", F.col("align_cos") >= MM_ALIGN_THRESHOLD
+        )
+        return run_to_memory(out_stream)
 
 
 def ivf_assign_stream_arrow(stream: DataFrame, cents: DataFrame) -> DataFrame:

@@ -26,7 +26,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 
 MAGIC_BYTE = b"\x00"

@@ -7,7 +7,9 @@ runs an ``availableNow`` query (started through
 ``session.start_stream``) into a memory table, ``finish`` waits on one
 already started, and both fail loudly when the query does not end in
 ``RUN_TIMEOUT_S``.  ``_write_batch`` is the one idempotent
-``foreachBatch`` write.
+``foreachBatch`` write.  ``scratch`` is the package's one temp dir: a
+bounded run's replay input (written by ``replay_stream``), outputs,
+state and checkpoint live under it and are removed when the run ends.
 
 The reference runs three daemon threads over shared dicts (ST8,
 py:616-653); here each periodic dataflow is a streaming query with a
@@ -17,7 +19,13 @@ heartbeat-vs-delivery races for free (SURVEY §3.1 note).
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+import time
 import uuid
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +49,38 @@ def read_event_stream_from_files(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
+
+
+@contextmanager
+def scratch() -> Iterator[str]:
+    """Yield a fresh temp dir for one bounded run and remove it, with
+    everything under it, when the block ends, also when it raises.  A
+    result read back from it must be materialized (memory sink, eager
+    ``localCheckpoint``) inside the block."""
+    path = tempfile.mkdtemp(prefix="bounded-run-")
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path)
+
+
+def replay_stream(path: str, *parts: DataFrame, order: Sequence[str]) -> DataFrame:
+    """Write each of ``parts`` under ``path`` as one parquet file sorted
+    by ``order``, each file with a later mtime than the one before, and
+    return the streaming read over them at one file per trigger: the
+    file source takes files in mtime order, so part i is micro-batch i
+    and its rows arrive in ``order``.  The read uses the parts' own
+    schema."""
+    base = time.time() - len(parts)
+    stamped: set[str] = set()
+    for i, part in enumerate(parts):
+        part.orderBy(*order).coalesce(1).write.mode("append").parquet(path)
+        new = set(os.listdir(path)) - stamped
+        for name in new:
+            os.utime(os.path.join(path, name), (base + i, base + i))
+        stamped |= new
+    reader = parts[0].sparkSession.readStream.schema(parts[0].schema)
+    return reader.option("maxFilesPerTrigger", 1).parquet(path)
 
 
 def with_event_time(events: DataFrame, watermark_delay: str | None = "1 minute") -> DataFrame:
@@ -118,18 +158,25 @@ def finish(q: StreamingQuery) -> StreamingQuery:
 
 def run_to_memory(df: DataFrame, output_mode: str = "append") -> DataFrame:
     """Run a streaming DataFrame to completion (``availableNow``) into a
-    memory table named here, and return that table."""
+    memory table named here, and return that table.  Its catalog view
+    is dropped on the way out, also when the run fails, so the session
+    does not keep every run's rows; the returned DataFrame still holds
+    them."""
     name = f"run_{uuid.uuid4().hex[:12]}"
-    finish(
-        start_stream(
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True),
-            df.sparkSession,
+    spark = df.sparkSession
+    try:
+        finish(
+            start_stream(
+                df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .trigger(availableNow=True),
+                spark,
+            )
         )
-    )
-    return df.sparkSession.table(name)
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def _write_batch(df: DataFrame, batch_id: int, path: str) -> None:

@@ -64,23 +64,23 @@ _OPS = [
 @settings(max_examples=fuzz_examples(6), deadline=None)
 @given(docs)
 def test_spark_matches_oracle_on_adversarial_tokens(spark, corpus) -> None:
-    sf = tempfile.mkdtemp(prefix="xeng-")
-    spark.createDataFrame(
-        [(i, " ".join(ws)) for i, ws in enumerate(corpus)],
-        "doc_id long, text string",
-    ).selectExpr(
-        "doc_id", "text", "'en' AS lang", "'t' AS source", "length(text) AS n_chars"
-    ).write.mode("overwrite").parquet(os.path.join(sf, "documents.parquet"))
+    with tempfile.TemporaryDirectory() as sf:
+        spark.createDataFrame(
+            [(i, " ".join(ws)) for i, ws in enumerate(corpus)],
+            "doc_id long, text string",
+        ).selectExpr(
+            "doc_id", "text", "'en' AS lang", "'t' AS source", "length(text) AS n_chars"
+        ).write.mode("overwrite").parquet(os.path.join(sf, "documents.parquet"))
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"'{sf}/documents.parquet/*.parquet'"
-    )
-    for fn, reg, name in _OPS:
-        sdf = fn(spark, sf)
-        spark_rows = sorted(tuple(r) for r in sdf.collect())
-        oracle_rows = sorted(
-            tuple(r) for r in con.execute(reg.queries[name].oracle).fetchall()
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM "
+            f"'{sf}/documents.parquet/*.parquet'"
         )
-        assert spark_rows == oracle_rows, name
+        for fn, reg, name in _OPS:
+            sdf = fn(spark, sf)
+            spark_rows = sorted(tuple(r) for r in sdf.collect())
+            oracle_rows = sorted(
+                tuple(r) for r in con.execute(reg.queries[name].oracle).fetchall()
+            )
+            assert spark_rows == oracle_rows, name

@@ -1790,14 +1790,12 @@ def test_source_cap_decision_table(spark):
             assert got[d] == (i, i <= SOURCE_CAP), (src, d)
 
 
-def test_streaming_source_cap_state_carries_across_batches(spark):
+def test_streaming_source_cap_state_carries_across_batches(spark, tmp_path):
     """The ONLINE cap's per-source counter must survive micro-batch
     boundaries: a multi-file replay processed one file per trigger
     (maxFilesPerTrigger=1) must assign the same arrival-order ranks as
     the single-batch run — rank = global arrival position, never
     restarting per batch."""
-    import tempfile
-
     from banking_streamprocessing_demos_spark.operators.packing import SOURCE_CAP
     from banking_streamprocessing_demos_spark.operators.streaming_queries import (
         source_cap_stream,
@@ -1806,7 +1804,7 @@ def test_streaming_source_cap_state_carries_across_batches(spark):
 
     n_docs, n_files = 3 * SOURCE_CAP, 5
     base = 1_700_000_100_000
-    path = tempfile.mkdtemp(prefix="srccap-multi-")
+    path = str(tmp_path / "src")
     per = n_docs // n_files
     for f in range(n_files):
         spark.createDataFrame(
@@ -1861,13 +1859,11 @@ def test_mm_align_drops_exactly_planted_mismatches(spark):
     assert gap > 0.5, gap
 
 
-def test_ivf_assign_stream_arrow_matches_batch(spark):
+def test_ivf_assign_stream_arrow_matches_batch(spark, tmp_path):
     """The streaming ingest-assignment route (ivf_assign_stream_arrow)
     must reproduce the batch rank_cells_arrow assignment exactly — the
     same kernel closed over the same frozen quantizer, driven through a
     real availableNow run (round-12 adoption, VERDICT r11 #3)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from banking_streamprocessing_demos_spark.operators.similarity import (
@@ -1886,7 +1882,7 @@ def test_ivf_assign_stream_arrow_matches_batch(spark):
         (r.vec_id, r.cell_id)
         for r in rank_cells_arrow(n, n_cells, keep=1).collect()
     }
-    src = tempfile.mkdtemp(prefix="ivf-arrow-stream-")
+    src = str(tmp_path / "src")
     n.select("vec_id", "v", "nrm").repartition(4).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(
         "vec_id long, v array<double>, nrm double"

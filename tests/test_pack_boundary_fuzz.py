@@ -34,30 +34,30 @@ lengths = st.lists(
 @settings(max_examples=fuzz_examples(8), deadline=None)
 @given(lengths)
 def test_pack_sequences_matches_oracle_on_seqlen_boundaries(spark, ls) -> None:
-    sf = tempfile.mkdtemp(prefix="packb-")
-    spark.createDataFrame(
-        [(i, " ".join(["w"] * n)) for i, n in enumerate(ls)],
-        "doc_id long, text string",
-    ).write.mode("overwrite").parquet(os.path.join(sf, "documents.parquet"))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"'{sf}/documents.parquet/*.parquet'"
-    )
-    spark_rows = sorted(tuple(r) for r in pack_sequences(spark, sf).collect())
-    oracle_rows = sorted(
-        tuple(r)
-        for r in con.execute(REG.queries["pack_sequences"].oracle).fetchall()
-    )
-    assert spark_rows == oracle_rows
-    # independent arithmetic check: offsets are the exclusive cumsum of
-    # the doc word counts in doc_id order, seq ids the integer-div spans
-    off = 0
-    expected = []
-    for i, n in enumerate(ls):
-        expected.append(
-            (i, n, off, off // SEQ_LEN, (off + n - 1) // SEQ_LEN,
-             (off + n - 1) // SEQ_LEN - off // SEQ_LEN + 1)
+    with tempfile.TemporaryDirectory() as sf:
+        spark.createDataFrame(
+            [(i, " ".join(["w"] * n)) for i, n in enumerate(ls)],
+            "doc_id long, text string",
+        ).write.mode("overwrite").parquet(os.path.join(sf, "documents.parquet"))
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM "
+            f"'{sf}/documents.parquet/*.parquet'"
         )
-        off += n
-    assert spark_rows == sorted(expected)
+        spark_rows = sorted(tuple(r) for r in pack_sequences(spark, sf).collect())
+        oracle_rows = sorted(
+            tuple(r)
+            for r in con.execute(REG.queries["pack_sequences"].oracle).fetchall()
+        )
+        assert spark_rows == oracle_rows
+        # independent arithmetic check: offsets are the exclusive cumsum of
+        # the doc word counts in doc_id order, seq ids the integer-div spans
+        off = 0
+        expected = []
+        for i, n in enumerate(ls):
+            expected.append(
+                (i, n, off, off // SEQ_LEN, (off + n - 1) // SEQ_LEN,
+                 (off + n - 1) // SEQ_LEN - off // SEQ_LEN + 1)
+            )
+            off += n
+        assert spark_rows == sorted(expected)

@@ -41,32 +41,32 @@ events = st.lists(
 @settings(max_examples=fuzz_examples(10), deadline=None)
 @given(events)
 def test_quantile_and_median_match_oracle(spark, rows) -> None:
-    sf = tempfile.mkdtemp(prefix="qf-")
-    spark.createDataFrame(
-        [
-            (i, u, et, BASE + off * 1000, v)
-            for i, (u, et, off, v) in enumerate(rows)
-        ],
-        "event_id long, user_id long, event_type string, ts_ms long, value double",
-    ).selectExpr(
-        "event_id", "user_id", "event_type",
-        "timestamp_millis(ts_ms) AS ts", "value",
-    ).write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'"
-    )
-    for fn, name in [
-        (a12_exact_group_median, "a12_exact_group_median"),
-        (w2, "w2_latency_quantiles"),
-    ]:
-        spark_rows = sorted(
-            tuple(r) for r in fn(spark, sf).collect()
+    with tempfile.TemporaryDirectory() as sf:
+        spark.createDataFrame(
+            [
+                (i, u, et, BASE + off * 1000, v)
+                for i, (u, et, off, v) in enumerate(rows)
+            ],
+            "event_id long, user_id long, event_type string, ts_ms long, value double",
+        ).selectExpr(
+            "event_id", "user_id", "event_type",
+            "timestamp_millis(ts_ms) AS ts", "value",
+        ).write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'"
         )
-        oracle_rows = sorted(
-            tuple(r) for r in con.execute(REG.queries[name].oracle).fetchall()
-        )
-        assert spark_rows == oracle_rows, name
+        for fn, name in [
+            (a12_exact_group_median, "a12_exact_group_median"),
+            (w2, "w2_latency_quantiles"),
+        ]:
+            spark_rows = sorted(
+                tuple(r) for r in fn(spark, sf).collect()
+            )
+            oracle_rows = sorted(
+                tuple(r) for r in con.execute(REG.queries[name].oracle).fetchall()
+            )
+            assert spark_rows == oracle_rows, name
 
 
 # --------------------------------------------------------------------------
@@ -100,23 +100,23 @@ def test_snapshot_and_cohorts_match_oracle(spark, rows) -> None:
         w6_retention,
     )
 
-    sf = tempfile.mkdtemp(prefix="qf-snap-")
-    spark.createDataFrame(
-        [(i, u, et, BASE + off) for i, (u, et, off) in enumerate(rows)],
-        "event_id long, user_id long, event_type string, ts_ms long",
-    ).selectExpr(
-        "event_id", "user_id", "event_type", "timestamp_millis(ts_ms) AS ts"
-    ).write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'"
-    )
-    for fn, name in [
-        (u3, "u3_snapshot_last_event_wins"),
-        (w6_retention, "w6_retention_cohorts"),
-    ]:
-        spark_rows = sorted(tuple(r) for r in fn(spark, sf).collect())
-        oracle_rows = sorted(
-            tuple(r) for r in con.execute(REG.queries[name].oracle).fetchall()
+    with tempfile.TemporaryDirectory() as sf:
+        spark.createDataFrame(
+            [(i, u, et, BASE + off) for i, (u, et, off) in enumerate(rows)],
+            "event_id long, user_id long, event_type string, ts_ms long",
+        ).selectExpr(
+            "event_id", "user_id", "event_type", "timestamp_millis(ts_ms) AS ts"
+        ).write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'"
         )
-        assert spark_rows == oracle_rows, name
+        for fn, name in [
+            (u3, "u3_snapshot_last_event_wins"),
+            (w6_retention, "w6_retention_cohorts"),
+        ]:
+            spark_rows = sorted(tuple(r) for r in fn(spark, sf).collect())
+            oracle_rows = sorted(
+                tuple(r) for r in con.execute(REG.queries[name].oracle).fetchall()
+            )
+            assert spark_rows == oracle_rows, name

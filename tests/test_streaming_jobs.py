@@ -98,12 +98,12 @@ def test_foreachbatch_pipeline(spark, tmp_path):
     assert total == alerts.count() > 0
 
 
-def test_rate_stream_produces_lifecycle(spark):
+def test_rate_stream_produces_lifecycle(spark, tmp_path):
     cfg = GeneratorConfig(seed="rate-test")
     stream = message_rate_stream(
         spark, cfg, rows_per_second=500, max_forks=50, ticks_per_message=5, delivery_delay_ticks=1
     )
-    ckpt = tempfile.mkdtemp()
+    ckpt = str(tmp_path / "ckpt")
     q = (
         stream.writeStream.format("memory")
         .queryName("rate_test_out")
@@ -841,19 +841,66 @@ def test_streaming_keep_best_batch_equals_stream(spark, tmp_path):
         )
 
 
+def _empty_temp_root(tmp_path, monkeypatch) -> pathlib.Path:
+    """Point ``tempfile`` at a fresh empty dir and return it."""
+    root = tmp_path / "temp_root"
+    root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
+    return root
+
+
 def test_bounded_run_past_its_bound_is_stopped(spark, tmp_path, monkeypatch):
     """A bounded run still going at the wait bound is stopped and raises
     TimeoutError instead of handing back a partial table, and it leaves
-    no query running in the session."""
+    no query running in the session and nothing in the temp dir."""
     monkeypatch.setattr(jobs, "RUN_TIMEOUT_S", 1)
-    src = str(tmp_path / "src")
-    spark.range(1).write.parquet(src)
-    stream = spark.readStream.schema("id long").parquet(src)
-    # the one micro-batch sleeps 60 s in an interruptible JVM call
-    slow = stream.select(F.expr("reflect('java.lang.Thread', 'sleep', id + 60000)").alias("r"))
-    with pytest.raises(TimeoutError):
+    root = _empty_temp_root(tmp_path, monkeypatch)
+    with pytest.raises(TimeoutError), jobs.scratch() as tmp:
+        spark.range(1).write.parquet(f"{tmp}/src")
+        stream = spark.readStream.schema("id long").parquet(f"{tmp}/src")
+        # the one micro-batch sleeps 60 s in an interruptible JVM call
+        slow = stream.select(
+            F.expr("reflect('java.lang.Thread', 'sleep', id + 60000)").alias("r")
+        )
         run_to_memory(slow)
     assert spark.streams.active == []
+    assert list(root.iterdir()) == []
+
+
+def test_bounded_runs_leave_no_scratch_and_keep_their_result(spark, tmp_path, monkeypatch):
+    """A registry twin's replay input, foreachBatch output, state and
+    checkpoint are gone when it returns, and the DataFrame it returns
+    still collects: a memory table (st1), an eager localCheckpoint of a
+    foreachBatch output (reservoir, pack).  Its rows equal a fresh
+    run's, and the session keeps no memory-table view."""
+    from banking_streamprocessing_demos_spark.operators.message_domain import st1_streaming
+    from banking_streamprocessing_demos_spark.operators.streaming_queries import (
+        streaming_pack_sequences_q,
+        streaming_reservoir_sample_q,
+    )
+    from tests.conftest import SF_SMALL
+
+    root = _empty_temp_root(tmp_path, monkeypatch)
+    for run in (st1_streaming, streaming_reservoir_sample_q, streaming_pack_sequences_q):
+        out = run(spark, SF_SMALL)
+        assert list(root.iterdir()) == [], run.__name__
+        rows = sorted(map(tuple, out.collect()))
+        assert rows, run.__name__
+        assert rows == sorted(map(tuple, run(spark, SF_SMALL).collect())), run.__name__
+    # run_to_memory drops its memory table's view once the run is done
+    assert [t.name for t in spark.catalog.listTables() if t.name.startswith("run_")] == []
+
+
+def _calls_outside_jobs():
+    """(``module:line``, call node) for every call in a package module
+    other than ``streaming/jobs.py``."""
+    jobs_path = pathlib.Path(jobs.__file__).resolve()
+    pkg = jobs_path.parent.parent
+    for path in sorted(pkg.rglob("*.py")):
+        if path != jobs_path:
+            for node in ast.walk(ast.parse(path.read_text())):
+                if isinstance(node, ast.Call):
+                    yield f"{path.relative_to(pkg)}:{node.lineno}", node
 
 
 def test_only_jobs_waits_on_queries_or_overwrites_batches():
@@ -861,18 +908,23 @@ def test_only_jobs_waits_on_queries_or_overwrites_batches():
     streaming query (``finish``) or writes a batch with dynamic
     partition overwrite (``_write_batch``): no other module calls
     ``awaitTermination`` or passes ``partitionOverwriteMode``."""
-    jobs_path = pathlib.Path(jobs.__file__).resolve()
-    pkg = jobs_path.parent.parent
     found = []
-    for path in sorted(pkg.rglob("*.py")):
-        if path == jobs_path:
-            continue
-        for node in ast.walk(ast.parse(path.read_text())):
-            if not isinstance(node, ast.Call):
-                continue
-            if isinstance(node.func, ast.Attribute) and node.func.attr == "awaitTermination":
-                found.append(f"{path.relative_to(pkg)}:{node.lineno} awaitTermination")
-            for arg in node.args:
-                if isinstance(arg, ast.Constant) and "partitionOverwriteMode" in str(arg.value):
-                    found.append(f"{path.relative_to(pkg)}:{node.lineno} partitionOverwriteMode")
+    for where, node in _calls_outside_jobs():
+        if isinstance(node.func, ast.Attribute) and node.func.attr == "awaitTermination":
+            found.append(f"{where} awaitTermination")
+        for arg in node.args:
+            if isinstance(arg, ast.Constant) and "partitionOverwriteMode" in str(arg.value):
+                found.append(f"{where} partitionOverwriteMode")
+    assert not found, found
+
+
+def test_only_jobs_makes_temp_files():
+    """``jobs.scratch`` is the package's one temp dir: no other module
+    calls ``tempfile``'s dir or file makers."""
+    makers = {"mkdtemp", "mkstemp", "TemporaryDirectory", "NamedTemporaryFile"}
+    found = [
+        f"{where} {name}"
+        for where, node in _calls_outside_jobs()
+        if (name := getattr(node.func, "attr", getattr(node.func, "id", None))) in makers
+    ]
     assert not found, found

@@ -24,15 +24,13 @@ docs = st.lists(
 )
 
 
-def _write_docs(spark, corpus) -> str:
-    sf = tempfile.mkdtemp(prefix="stwin-")
+def _write_docs(spark, corpus, sf: str, langs: tuple[str, ...] = ("en",)) -> None:
     spark.createDataFrame(
-        [(i, " ".join(ws)) for i, ws in enumerate(corpus)],
-        "doc_id long, text string",
+        [(i, " ".join(ws), langs[i % len(langs)]) for i, ws in enumerate(corpus)],
+        "doc_id long, text string, lang string",
     ).selectExpr(
-        "doc_id", "text", "'en' AS lang", "'t' AS source", "length(text) AS n_chars"
+        "doc_id", "text", "lang", "'t' AS source", "length(text) AS n_chars"
     ).write.mode("overwrite").parquet(os.path.join(sf, "documents.parquet"))
-    return sf
 
 
 @settings(max_examples=fuzz_examples(4), deadline=None)
@@ -45,15 +43,16 @@ def test_streaming_boilerplate_matches_batch_on_random_corpora(spark, corpus) ->
         text_boilerplate_strip,
     )
 
-    sf = _write_docs(spark, corpus)
-    streamed = {
-        r.doc_id: (r.n_segments, r.n_removed, r.cleaned_text)
-        for r in streaming_boilerplate_strip_q(spark, sf).collect()
-    }
-    batch = {
-        r.doc_id: (r.n_segments, r.n_removed, r.cleaned_text)
-        for r in text_boilerplate_strip(spark, sf).collect()
-    }
+    with tempfile.TemporaryDirectory() as sf:
+        _write_docs(spark, corpus, sf)
+        streamed = {
+            r.doc_id: (r.n_segments, r.n_removed, r.cleaned_text)
+            for r in streaming_boilerplate_strip_q(spark, sf).collect()
+        }
+        batch = {
+            r.doc_id: (r.n_segments, r.n_removed, r.cleaned_text)
+            for r in text_boilerplate_strip(spark, sf).collect()
+        }
     assert streamed == batch
 
 
@@ -65,15 +64,16 @@ def test_streaming_bpe_encode_matches_batch_on_random_corpora(spark, corpus) -> 
     )
     from banking_streamprocessing_demos_spark.operators.text import pipe_bpe_encode
 
-    sf = _write_docs(spark, corpus)
-    streamed = {
-        r.doc_id: (r.n_words, r.n_tokens_bpe_fit)
-        for r in streaming_bpe_encode_q(spark, sf).collect()
-    }
-    batch = {
-        r.doc_id: (r.n_words, r.n_tokens_bpe_fit)
-        for r in pipe_bpe_encode(spark, sf).collect()
-    }
+    with tempfile.TemporaryDirectory() as sf:
+        _write_docs(spark, corpus, sf)
+        streamed = {
+            r.doc_id: (r.n_words, r.n_tokens_bpe_fit)
+            for r in streaming_bpe_encode_q(spark, sf).collect()
+        }
+        batch = {
+            r.doc_id: (r.n_words, r.n_tokens_bpe_fit)
+            for r in pipe_bpe_encode(spark, sf).collect()
+        }
     assert streamed == batch
 
 
@@ -92,14 +92,15 @@ def test_streaming_keep_best_matches_batch_on_random_corpora(spark, corpus) -> N
     )
     from banking_streamprocessing_demos_spark.streaming.jobs import streaming_keep_best
 
-    sf = _write_docs(spark, corpus)
-    streamed = {
-        (r.window_start_ms, r.sig_key): (r.doc_id, r.word_count, r.n_members)
-        for r in streaming_keep_best_q(spark, sf).collect()
-    }
-    # batch run of the SAME job over the same replay (sentinel's
-    # never-closed window excluded — the stream cannot emit it)
-    batch_rows = streaming_keep_best(_replay_corpus(spark, sf)).collect()
+    with tempfile.TemporaryDirectory() as sf:
+        _write_docs(spark, corpus, sf)
+        streamed = {
+            (r.window_start_ms, r.sig_key): (r.doc_id, r.word_count, r.n_members)
+            for r in streaming_keep_best_q(spark, sf).collect()
+        }
+        # batch run of the SAME job over the same replay (sentinel's
+        # never-closed window excluded — the stream cannot emit it)
+        batch_rows = streaming_keep_best(_replay_corpus(spark, sf)).collect()
     batch = {
         (r.window_start_ms, r.sig_key): (r.doc_id, r.word_count, r.n_members)
         for r in batch_rows
@@ -120,13 +121,11 @@ parts = st.lists(
 )
 
 
-def _write_parts(spark, corpus) -> str:
-    sf = tempfile.mkdtemp(prefix="stwin-er-")
+def _write_parts(spark, corpus, sf: str) -> None:
     spark.createDataFrame(
         [(i, " ".join(ws), f"Brand#{b}") for i, (ws, b) in enumerate(corpus)],
         "p_partkey long, p_name string, p_brand string",
     ).write.mode("overwrite").parquet(os.path.join(sf, "part.parquet"))
-    return sf
 
 
 @settings(max_examples=fuzz_examples(4), deadline=None)
@@ -141,15 +140,16 @@ def test_streaming_er_match_matches_batch_on_random_corpora(spark, corpus) -> No
         streaming_er_match_q,
     )
 
-    sf = _write_parts(spark, corpus)
-    streamed = {
-        (r.dirty_id, r.clean_id, r.brand, r.matched_name, r.lev)
-        for r in streaming_er_match_q(spark, sf).collect()
-    }
-    batch = {
-        (r.dirty_id, r.clean_id, r.brand, r.matched_name, r.lev)
-        for r in er_blocked_match(spark, sf).collect()
-    }
+    with tempfile.TemporaryDirectory() as sf:
+        _write_parts(spark, corpus, sf)
+        streamed = {
+            (r.dirty_id, r.clean_id, r.brand, r.matched_name, r.lev)
+            for r in streaming_er_match_q(spark, sf).collect()
+        }
+        batch = {
+            (r.dirty_id, r.clean_id, r.brand, r.matched_name, r.lev)
+            for r in er_blocked_match(spark, sf).collect()
+        }
     assert streamed == batch
 
 
@@ -178,14 +178,15 @@ def test_streaming_bm25_matches_batch_on_random_corpora(spark, corpus) -> None:
         streaming_bm25_match_q,
     )
 
-    sf = _write_docs(spark, corpus)
-    streamed = {
-        r.doc_id: (r.bm25, r.n_terms)
-        for r in streaming_bm25_match_q(spark, sf).collect()
-    }
-    batch = {
-        r.doc_id: (r.bm25, r.n_terms) for r in _bm25_scored(spark, sf).collect()
-    }
+    with tempfile.TemporaryDirectory() as sf:
+        _write_docs(spark, corpus, sf)
+        streamed = {
+            r.doc_id: (r.bm25, r.n_terms)
+            for r in streaming_bm25_match_q(spark, sf).collect()
+        }
+        batch = {
+            r.doc_id: (r.bm25, r.n_terms) for r in _bm25_scored(spark, sf).collect()
+        }
     originals = {k: v for k, v in streamed.items() if k < DUP_OFFSET}
     assert originals == batch
     for k, v in streamed.items():
@@ -200,31 +201,22 @@ def test_streaming_dsir_gate_matches_batch_on_random_corpora(spark, corpus) -> N
     the SAME frozen models (originals row-for-row; every late re-ingest
     scores exactly like its original), on corpora with a real
     target/source split (alternating en/de langs)."""
-    import os as _os
-    import tempfile as _tf
-
     from banking_streamprocessing_demos_spark.operators.streaming_queries import (
         DUP_OFFSET,
         streaming_dsir_gate_q,
     )
     from banking_streamprocessing_demos_spark.operators.text import pipe_dsir_weights
 
-    sf = _tf.mkdtemp(prefix="stwin-dsir-")
-    spark.createDataFrame(
-        [(i, " ".join(ws), "en" if i % 2 == 0 else "de") for i, ws in enumerate(corpus)],
-        "doc_id long, text string, lang string",
-    ).selectExpr(
-        "doc_id", "text", "lang", "'t' AS source", "length(text) AS n_chars"
-    ).write.mode("overwrite").parquet(_os.path.join(sf, "documents.parquet"))
-
-    streamed = {
-        r.doc_id: (r.n_feats, r.dsir_logw, r.kept)
-        for r in streaming_dsir_gate_q(spark, sf).collect()
-    }
-    batch = {
-        r.doc_id: (r.n_feats, r.dsir_logw, r.dsir_logw >= 0.0)
-        for r in pipe_dsir_weights(spark, sf).collect()
-    }
+    with tempfile.TemporaryDirectory() as sf:
+        _write_docs(spark, corpus, sf, langs=("en", "de"))
+        streamed = {
+            r.doc_id: (r.n_feats, r.dsir_logw, r.kept)
+            for r in streaming_dsir_gate_q(spark, sf).collect()
+        }
+        batch = {
+            r.doc_id: (r.n_feats, r.dsir_logw, r.dsir_logw >= 0.0)
+            for r in pipe_dsir_weights(spark, sf).collect()
+        }
     originals = {k: v for k, v in streamed.items() if k < DUP_OFFSET}
     assert originals == batch
     for k, v in streamed.items():
@@ -239,9 +231,6 @@ def test_streaming_ppl_gate_matches_batch_on_random_corpora(spark, corpus) -> No
     sampled-threshold twin's under the SAME frozen model + thresholds
     (originals row-for-row; every late re-ingest labels exactly like
     its original).  Single-word docs are unscorable on both sides."""
-    import os as _os
-    import tempfile as _tf
-
     from banking_streamprocessing_demos_spark.operators.streaming_queries import (
         DUP_OFFSET,
         streaming_ppl_gate_q,
@@ -251,26 +240,20 @@ def test_streaming_ppl_gate_matches_batch_on_random_corpora(spark, corpus) -> No
         text_bigram_lm_score,
     )
 
-    sf = _tf.mkdtemp(prefix="stwin-ppl-")
-    spark.createDataFrame(
-        [(i, " ".join(ws), "en" if i % 2 == 0 else "de") for i, ws in enumerate(corpus)],
-        "doc_id long, text string, lang string",
-    ).selectExpr(
-        "doc_id", "text", "lang", "'t' AS source", "length(text) AS n_chars"
-    ).write.mode("overwrite").parquet(_os.path.join(sf, "documents.parquet"))
-
-    streamed = {
-        r.doc_id: (r.n_bigrams, r.avg_logprob, r.bucket)
-        for r in streaming_ppl_gate_q(spark, sf).collect()
-    }
-    lm = {
-        r.doc_id: (r.n_bigrams, r.avg_logprob)
-        for r in text_bigram_lm_score(spark, sf).collect()
-    }
-    batch = {
-        r.doc_id: (lm[r.doc_id][0], r.avg_logprob, r.bucket)
-        for r in pipe_perplexity_buckets_sampled(spark, sf).collect()
-    }
+    with tempfile.TemporaryDirectory() as sf:
+        _write_docs(spark, corpus, sf, langs=("en", "de"))
+        streamed = {
+            r.doc_id: (r.n_bigrams, r.avg_logprob, r.bucket)
+            for r in streaming_ppl_gate_q(spark, sf).collect()
+        }
+        lm = {
+            r.doc_id: (r.n_bigrams, r.avg_logprob)
+            for r in text_bigram_lm_score(spark, sf).collect()
+        }
+        batch = {
+            r.doc_id: (lm[r.doc_id][0], r.avg_logprob, r.bucket)
+            for r in pipe_perplexity_buckets_sampled(spark, sf).collect()
+        }
     originals = {k: v for k, v in streamed.items() if k < DUP_OFFSET}
     assert originals == batch
     for k, v in streamed.items():
@@ -284,8 +267,6 @@ def test_streaming_gopher_gate_matches_batch_on_random_corpora(spark, corpus) ->
     """The per-window rule-failure counts equal an independent
     recomputation from the batch rule battery (originals + the
     every-10th re-ingest copies, windowed by arrival minute)."""
-    import os as _os
-    import tempfile as _tf
     from collections import Counter, defaultdict
 
     from banking_streamprocessing_demos_spark.operators.streaming_queries import (
@@ -295,15 +276,10 @@ def test_streaming_gopher_gate_matches_batch_on_random_corpora(spark, corpus) ->
     )
     from banking_streamprocessing_demos_spark.operators.text import pipe_gopher_rules
 
-    sf = _tf.mkdtemp(prefix="stwin-gopher-")
-    spark.createDataFrame(
-        [(i, " ".join(ws)) for i, ws in enumerate(corpus)],
-        "doc_id long, text string",
-    ).selectExpr(
-        "doc_id", "text", "'en' AS lang", "'t' AS source", "length(text) AS n_chars"
-    ).write.mode("overwrite").parquet(_os.path.join(sf, "documents.parquet"))
-
-    flags = {r.doc_id: r.asDict() for r in pipe_gopher_rules(spark, sf).collect()}
+    with tempfile.TemporaryDirectory() as sf:
+        _write_docs(spark, corpus, sf)
+        flags = {r.doc_id: r.asDict() for r in pipe_gopher_rules(spark, sf).collect()}
+        streamed = streaming_gopher_gate_q(spark, sf).collect()
     rules = [
         ("n_fail_word_count", "ok_word_count"),
         ("n_fail_mean_word_len", "ok_mean_word_len"),
@@ -323,6 +299,6 @@ def test_streaming_gopher_gate_matches_batch_on_random_corpora(spark, corpus) ->
         r.window_start_ms: {
             k: r[k] for k in ("n_docs", "n_passed", *[rc for rc, _ in rules])
         }
-        for r in streaming_gopher_gate_q(spark, sf).collect()
+        for r in streamed
     }
     assert got == {w: dict(c) for w, c in want.items()}

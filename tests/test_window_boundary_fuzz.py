@@ -60,8 +60,7 @@ offsets = st.lists(
 )
 
 
-def _write_events(spark, rows: list[tuple[int, int]]) -> str:
-    sf = tempfile.mkdtemp(prefix="wbf-")
+def _write_events(spark, rows: list[tuple[int, int]], sf: str) -> None:
     # alternate event types so j7 has error bursts; value = i%7 + 0.5 is
     # exactly representable, so DECIMAL sums match to the bit
     spark.createDataFrame(
@@ -74,29 +73,29 @@ def _write_events(spark, rows: list[tuple[int, int]]) -> str:
         "event_id", "user_id", "event_type",
         "timestamp_millis(ts_ms) AS ts", "value",
     ).write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    return sf
 
 
 @settings(max_examples=fuzz_examples(8), deadline=None)
 @given(offsets)
 def test_window_ops_match_oracle_on_boundary_lattice(spark, rows) -> None:
-    sf = _write_events(spark, rows)
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'"
-    )
-    for fn, name in [
-        (w1, "w1_hourly_event_counts"),
-        (w3, "w3_event_gaps"),
-        (w4, "w4_sessionization"),
-        (w5_session, "w5_session_window"),
-        (j7_range, "j7_range_join"),
-    ]:
-        spark_rows = sorted(tuple(r) for r in fn(spark, sf).collect())
-        oracle_rows = sorted(
-            tuple(r) for r in con.execute(REG.queries[name].oracle).fetchall()
+    with tempfile.TemporaryDirectory() as sf:
+        _write_events(spark, rows, sf)
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'"
         )
-        assert spark_rows == oracle_rows, name
+        for fn, name in [
+            (w1, "w1_hourly_event_counts"),
+            (w3, "w3_event_gaps"),
+            (w4, "w4_sessionization"),
+            (w5_session, "w5_session_window"),
+            (j7_range, "j7_range_join"),
+        ]:
+            spark_rows = sorted(tuple(r) for r in fn(spark, sf).collect())
+            oracle_rows = sorted(
+                tuple(r) for r in con.execute(REG.queries[name].oracle).fetchall()
+            )
+            assert spark_rows == oracle_rows, name
 
 
 funnel_offsets = st.lists(
@@ -123,23 +122,23 @@ def test_funnels_match_oracle_on_tie_heavy_lattice(spark, rows) -> None:
         w8_funnel_windowed,
     )
 
-    sf = tempfile.mkdtemp(prefix="wbf-fn-")
-    spark.createDataFrame(
-        [(i, u, et, BASE + off) for i, (u, et, off) in enumerate(rows)],
-        "event_id long, user_id long, event_type string, ts_ms long",
-    ).selectExpr(
-        "event_id", "user_id", "event_type", "timestamp_millis(ts_ms) AS ts"
-    ).write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'"
-    )
-    for fn, name in [(w7_funnel, "w7_funnel"), (w8_funnel_windowed, "w8_funnel_windowed")]:
-        spark_rows = sorted(tuple(r) for r in fn(spark, sf).collect())
-        oracle_rows = sorted(
-            tuple(r) for r in con.execute(REG.queries[name].oracle).fetchall()
+    with tempfile.TemporaryDirectory() as sf:
+        spark.createDataFrame(
+            [(i, u, et, BASE + off) for i, (u, et, off) in enumerate(rows)],
+            "event_id long, user_id long, event_type string, ts_ms long",
+        ).selectExpr(
+            "event_id", "user_id", "event_type", "timestamp_millis(ts_ms) AS ts"
+        ).write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'"
         )
-        assert spark_rows == oracle_rows, name
+        for fn, name in [(w7_funnel, "w7_funnel"), (w8_funnel_windowed, "w8_funnel_windowed")]:
+            spark_rows = sorted(tuple(r) for r in fn(spark, sf).collect())
+            oracle_rows = sorted(
+                tuple(r) for r in con.execute(REG.queries[name].oracle).fetchall()
+            )
+            assert spark_rows == oracle_rows, name
 
 
 TIMEOUT = 2 * 86_400_000  # j5's alert deadline
@@ -165,22 +164,22 @@ pairing_offsets = st.lists(
 def test_timeout_pairing_matches_oracle_on_deadline_edges(spark, rows) -> None:
     from banking_streamprocessing_demos_spark.operators.relational import j5
 
-    sf = tempfile.mkdtemp(prefix="wbf-j5-")
-    spark.createDataFrame(
-        [(i, u, et, BASE + off) for i, (u, et, off) in enumerate(rows)],
-        "event_id long, user_id long, event_type string, ts_ms long",
-    ).selectExpr(
-        "event_id", "user_id", "event_type", "timestamp_millis(ts_ms) AS ts"
-    ).write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'"
-    )
-    spark_rows = sorted(
-        tuple(r) for r in j5(spark, sf).collect()
-    )
-    oracle_rows = sorted(
-        tuple(r)
-        for r in con.execute(REG.queries["j5_timeout_pairing"].oracle).fetchall()
-    )
-    assert spark_rows == oracle_rows
+    with tempfile.TemporaryDirectory() as sf:
+        spark.createDataFrame(
+            [(i, u, et, BASE + off) for i, (u, et, off) in enumerate(rows)],
+            "event_id long, user_id long, event_type string, ts_ms long",
+        ).selectExpr(
+            "event_id", "user_id", "event_type", "timestamp_millis(ts_ms) AS ts"
+        ).write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'"
+        )
+        spark_rows = sorted(
+            tuple(r) for r in j5(spark, sf).collect()
+        )
+        oracle_rows = sorted(
+            tuple(r)
+            for r in con.execute(REG.queries["j5_timeout_pairing"].oracle).fetchall()
+        )
+        assert spark_rows == oracle_rows
