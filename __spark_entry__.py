@@ -1,13 +1,14 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""The engine's query surface: ``entry``, ``queries`` and ``oracle_sql``.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
-
-Queries are implemented in ``banking_streamprocessing_demos_spark/``;
-each module registers named Query objects (Spark fn + DuckDB oracle
-SQL twin) per SURVEY.md §2's operator inventory.
+``entry(spark)`` runs the flagship query as a smoke check.  Every
+operator module under ``banking_streamprocessing_demos_spark/operators/``
+registers named queries (a Spark fn plus its DuckDB oracle SQL twin)
+with ``@REG.add``; ``queries()`` and ``oracle_sql()`` merge those
+registries in ``_REGISTRIES`` order, so a new query needs only its
+``@REG.add``.  ``tools/check_correctness.py`` and
+``tests/test_oracle_parity.py`` run each ``queries()[name]`` and
+compare it with ``oracle_sql()[name]`` under DuckDB (row count, schema,
+order-insensitive values).
 """
 
 from __future__ import annotations
@@ -51,272 +52,6 @@ _REGISTRIES = [
     STREAMING_Q_REG,
 ]
 
-# The round driver checks the FIRST 50 queries() entries in insertion
-# order.  Round-7 rotation (standing policy from round-2 VERDICT #1,
-# re-ordered per round-3 VERDICT #3): slots go to (a) every query with
-# NO green driver row from any prior round; (b) every query new this
-# round; (c) flagship refreshes — the highest-value driver-green
-# queries, spanning every §2 + LLM-pipeline capability family,
-# re-earning rows on this round's regenerated testdata.  Demoted
-# queries stay registered and are hash-verified every round by
-# tools/check_correctness.py; the committed CORRECTNESS_FULL_r{N}.json
-# artifact records the whole registry, not just the driver's window.
-_PROMOTED_NEVER_CHECKED: list[str] = [
-    # round-12: no round-11 overflow to promote (the r11 window held
-    # all nine round-new queries; VERDICT r11 "Next round" #7)
-]
-
-# New this round — zero prior driver evidence by construction.
-_ROUND_NEW: list[str] = [
-    # round-12: learned quality classifier (Joulin et al. 2016
-    # fastText / the GPT-3 quality-filter pattern) — frozen NB-linear
-    # model over hashed bigrams, weak-labeled by the Gopher battery on
-    # a bounded seeded sample (round-11 VERDICT "Next round" #1)
-    "pipe_quality_classifier",
-    # round-12: the classifier as a frozen-model ingest gate (the
-    # GPT-3/CCNet deployment shape — streaming_ppl_gate's machinery
-    # with a weight vector + bias instead of an LM + thresholds)
-    "streaming_quality_classifier",
-    # round-12: LAION-style cross-modal alignment gate (CLIP-score
-    # filter over precomputed shared-space embeddings, planted
-    # mis-captioned pairs)
-    "mm_text_image_align",
-    # round-12: the alignment gate at ingest (stateless stream-static
-    # CLIP-score filter, frozen encoder side)
-    "streaming_mm_align",
-    # round-12: operating-point calibration sweep for the learned
-    # quality filter (PR table at 13 thresholds, one pass)
-    "pipe_quality_classifier_calibration",
-]
-
-# Driver-green flagships refreshed in the remaining slots, spanning the
-# capability families: stateful streaming, joins, aggs/windows, updates,
-# sampling, generator functions, dedup, ANN/embeddings, text, packing.
-_FLAGSHIP_REFRESH = [
-    # Round-12 window: 0 promotions + the round-new above + 49 here
-    # (slots cede to round-new queries as they land).  All twelve
-    # round-11 window earners rest in the tail; returning from the
-    # tail: the six r10 round-new earners that rested through r11, the
-    # twelve r9-overflow promotions, and eleven family-spanning
-    # flagships (joins/windows/updates/aggs/embeddings/packing/
-    # multimodal/sampling + streaming_ivf_assign, which round-12
-    # re-measures under the adopted BLAS assignment).
-    "sim_ann_ivfpq_sampled",
-    "sim_ann_opq_trained_sampled",
-    "rank_fusion_hybrid",
-    "pipe_perplexity_buckets",
-    "pipe_dsir_weights",
-    "priv_dp_release",
-    "sim_ann_binary",
-    "text_bm25_search",
-    "rank_fusion_rrf",
-    "streaming_bm25_match",
-    "rank_mmr_diversify",
-    "pipe_tokenizer_fertility",
-    "priv_k_anonymity",
-    "pipe_temperature_mix",
-    "priv_l_diversity",
-    "streaming_k_anonymity",
-    "sim_ann_ivf_binary",
-    "streaming_temperature_mix",
-    "j7_range_join",
-    "w5_session_window",
-    "u6_merge_upsert",
-    "a8_rollup_counts",
-    "emb_quantize_int8",
-    "pipe_domain_mix",
-    "pack_sequences",
-    "streaming_ivf_assign",
-    "mm_phash_clusters",
-    "w7_funnel",
-    "smp1_deterministic_sample",
-    "st1_streaming_detector",
-    "st1_join_variant",
-    "gen_messages_snapshot",
-    "j1_join_filter_groupby",
-    "a3_join_agg_revenue",
-    "a7_pricing_summary",
-    "w1_hourly_event_counts",
-    "u3_snapshot_last_event_wins",
-    "f_expressions",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "sim_topk_bruteforce",
-    "sim_ann_ivf",
-    "text_langid",
-    "text_tfidf_topk",
-    "pipe_bpe_merges",
-]
-
-# Round-new overflow (window full): registered and hash-verified via
-# tools/check_correctness.py -> CORRECTNESS_FULL_r{N}, promoted to the
-# driver window next round per the standing policy.
-_ROUND_OVERFLOW: list[str] = [
-    # round-12: fills if queries land after the window holds 50
-]
-
-# Demoted tail: every query with green driver rows from prior rounds
-# (regenerated round-12: the full r11 window — promotions, round-new
-# earners and flagship refreshes — rests here unless returned above).
-# Still hash-verified locally every round via tools/check_correctness.py
-# -> CORRECTNESS_FULL_r{N}.json.
-_DEMOTED_TAIL = [
-    "pipe_curate_end_to_end",
-    "sketch_hll_distinct",
-    "streaming_doc_dedup",
-    "er_blocked_match",
-    "streaming_dsir_gate",
-    "streaming_dp_release",
-    "pipe_dsir_resample",
-    "pipe_perplexity_buckets_sampled",
-    "pipe_gopher_rules",
-    "streaming_ppl_gate",
-    "sim_ann_ivf_arrow",
-    "streaming_gopher_gate",
-    "pipe_source_cap",
-    "streaming_source_cap",
-    "priv_release_end_to_end",
-    "pipe_gopher_repetition",
-    "mm_phash_dedup",
-    "w2_latency_quantiles",
-    "j3_anti_join",
-    "dedup_semantic_ivf",
-    "dedup_keep_best",
-    "pipe_bpe_encode",
-    "emb_pq_codebook_sampled",
-    "sim_ann_pq_sampled",
-    "sim_ann_sq8",
-    "sim_ann_lsh",
-    "sim_knn_graph",
-    "streaming_minhash_dedup",
-    "streaming_token_histogram",
-    "streaming_pack_sequences",
-    "streaming_quality_gate",
-    "streaming_phash_dedup",
-    "streaming_er_match",
-    "j6_asof_join",
-    "emb_hard_negatives",
-    "w10_anomaly_zscore",
-    "j9_full_outer_reconcile",
-    "a11_grouping_sets",
-    "gen_status_histogram",
-    "smp2_backpressure_topup",
-    "text_fingerprint",
-    "pipe_shard_assign",
-    "streaming_curriculum_histogram",
-    "text_boilerplate_strip",
-    "pipe_quality_gate",
-    "streaming_mrl_assign",
-    "sim_ann_opq_trained",
-    "mm_chunk_dedup",
-    "streaming_chunk_dedup",
-    "a9_distinct_aggs",
-    "gen_timeout_alerts",
-    "dedup_clusters",
-    "p2_filter_inequality",
-    "u1_insert_or_ignore",
-    "f12_json_props",
-    "streaming_sessionization",
-    "contamination_check",
-    "emb_pq_codebook",
-    "sim_ann_pq",
-    "streaming_pq_assign",
-    "sim_ann_ivfpq",
-    "sim_ann_matryoshka",
-    "streaming_keep_best",
-    "sim_ann_opq",
-    "streaming_boilerplate_strip",
-    "streaming_bpe_encode",
-    "streaming_epoch_plan",
-    "streaming_hll_distinct",
-    "w4_sessionization",
-    "dedup_ngram_jaccard",
-    "smp4_group_split",
-    "emb_random_project",
-    "w9_scd2_intervals",
-    "s8_set_operations",
-    "emb_label_centroids",
-    "text_pii_scrub",
-    "text_bigram_lm_score",
-    "smp5_weighted_sample",
-    "streaming_reservoir_sample",
-    "streaming_heavy_hitters",
-    "a12_exact_group_median",
-    "f13_morton_code",
-    "w6_retention_cohorts",
-    "streaming_cms_cells",
-    "streaming_contamination_check",
-    "p1_projection_sort_limit",
-    "p3_filter_eq_single_col",
-    "p4_filter_enum",
-    "p5_time_threshold",
-    "p6_branching_threshold",
-    "p7_null_as_status",
-    "p8_membership_sets",
-    "j2_scalar_correlated_subquery",
-    "j4_semi_join",
-    "a1_count_global",
-    "a2_groupby_count",
-    "a10_pivot_counts",
-    "w3_event_gaps",
-    "a4_group_stats",
-    "a6_running_counters",
-    "srt1_topn_by_time",
-    "u4_heartbeat_rollup",
-    "f8_weighted_classify",
-    "w8_funnel_windowed",
-    "gen_carrier_active_counts",
-    "gen_normal_delay_snapshot",
-    "gen_alert_rates_by_carrier",
-    "s5_console_dry_run",
-    "dedup_embedding_cosine",
-    "dedup_exact_normalized",
-    "text_repetition",
-    "doc_chunk_overlap",
-    "text_vocab_topk",
-    "pipe_length_filter",
-    "mm_frame_sample",
-    "mm_feature_extract",
-    "pipe_quality_prune",
-    "sketch_bloom_prefilter",
-    "text_stats_quality",
-    "dedup_simhash",
-    "dedup_semantic_clusters",
-    "dedup_substring_spans",
-    "text_containment",
-    "er_match_quality",
-    "er_cluster_entities",
-    "mm_resize",
-    "pipe_epoch_plan",
-    "pipe_curriculum_pack",
-    "j5_timeout_pairing",
-    "j8_salted_skew_join",
-    "smp3_stratified_split",
-    "sketch_cms_heavy_hitters",
-    "text_token_counts",
-    "pipe_curation",
-    "pipe_bpe_merges_batched",
-]
-
-_DRIVER_PRIORITY = (
-    _PROMOTED_NEVER_CHECKED
-    + _ROUND_NEW
-    + _FLAGSHIP_REFRESH
-    + _ROUND_OVERFLOW
-    + _DEMOTED_TAIL
-)
-
-
-def _all_queries():
-    merged = merge_registries(*_REGISTRIES)
-    missing = [n for n in _DRIVER_PRIORITY if n not in merged]
-    extra = [n for n in merged if n not in _DRIVER_PRIORITY]
-    if missing or extra:
-        raise ValueError(
-            f"_DRIVER_PRIORITY out of sync with registries: missing={missing} extra={extra}"
-        )
-    return {n: merged[n] for n in _DRIVER_PRIORITY}
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the 5-way star join +
@@ -328,10 +63,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return {name: q.fn for name, q in _all_queries().items()}
+    """Every registered query's Spark implementation, in registry order."""
+    return {name: q.fn for name, q in merge_registries(*_REGISTRIES).items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle SQL twin for each SQL-expressible query."""
-    return {name: q.oracle for name, q in _all_queries().items() if q.oracle is not None}
+    """Every registered query's DuckDB oracle SQL, in registry order."""
+    return {name: q.oracle for name, q in merge_registries(*_REGISTRIES).items()}

@@ -1,4 +1,4 @@
-"""Operator inventory — each module registers named queries with optional
+"""Operator inventory — each module registers named queries with their
 DuckDB oracle SQL twins (SURVEY §5 differential-testing strategy)."""
 
 from __future__ import annotations
@@ -13,18 +13,16 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 @dataclass(frozen=True)
 class Query:
-    """A named engine query: Spark implementation + optional oracle SQL.
+    """A named engine query: Spark implementation + oracle SQL.
 
     ``oracle`` is ANSI-ish SQL runnable by DuckDB against the testdata
     parquet views (region nation customer supplier part orders lineitem
-    events documents embeddings).  ``oracle=None`` marks genuinely
-    non-SQL-expressible ops (custom stateful streaming) → the driver
-    records a weaker rows-only check.
+    events documents embeddings).
     """
 
     name: str
     fn: QueryFn
-    oracle: str | None
+    oracle: str
     doc: str = ""
 
 
@@ -32,7 +30,7 @@ class Registry:
     def __init__(self) -> None:
         self._queries: dict[str, Query] = {}
 
-    def add(self, name: str, oracle: str | None, doc: str = "") -> Callable[[QueryFn], QueryFn]:
+    def add(self, name: str, oracle: str, doc: str = "") -> Callable[[QueryFn], QueryFn]:
         def deco(fn: QueryFn) -> QueryFn:
             if name in self._queries:
                 raise ValueError(f"duplicate query name {name!r}")

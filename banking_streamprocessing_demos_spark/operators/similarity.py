@@ -1204,7 +1204,7 @@ def _jl_oracle_sql() -> str:
         for j in range(JL_OUT_DIMS)
     )
     # One (vec_id, dim, proj) row per output component: scalar columns
-    # only — the round driver's canonicalizer cannot hash array-valued
+    # only — a pandas row-sort canonicalizer cannot hash array-valued
     # cells (round-3 red row), so the projection is exploded exactly
     # like emb_label_centroids.  The two UNNESTs zip positionally.
     return f"""

@@ -67,21 +67,27 @@ DUP_OFFSET = 10_000_000
 SENTINEL_ORD = 2 * DUP_OFFSET
 
 
-def _replay_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The deterministic ingest replay: every document, plus a late
+def _replay_corpus(
+    spark: SparkSession,
+    sf_dir: str,
+    cols: tuple[str, ...] = ("text",),
+    sentinel: Row | None = None,
+) -> DataFrame:
+    """The deterministic ingest replay of the document columns ``cols``
+    (the SQL twin is ``_replay_docs_sql``): every document, plus a late
     re-ingest of every 10th document (planted exact duplicates — the
-    sf0.01 corpus has none of its own), ingest_ts = BASE + ord seconds
-    with ord = doc_id (originals) / doc_id + DUP_OFFSET (copies)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    dups = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + DUP_OFFSET).alias("doc_id"), "text"
+    sf0.01 corpus has none of its own), plus the ``sentinel`` row if
+    given; ingest_ts = BASE + ord seconds with ord = doc_id (originals,
+    sentinel) / doc_id + DUP_OFFSET (copies)."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", *cols)
+    dups = docs.filter(F.col("doc_id") % 10 == 0).withColumn(
+        "doc_id", F.col("doc_id") + DUP_OFFSET
     )
-    return (
-        docs.unionByName(dups)
-        .withColumn(
-            "ingest_ts",
-            F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
-        )
+    replay = docs.unionByName(dups)
+    if sentinel is not None:
+        replay = replay.unionByName(spark.createDataFrame([sentinel]))
+    return replay.withColumn(
+        "ingest_ts", F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000)
     )
 
 
@@ -171,12 +177,8 @@ def _streaming_minhash_oracle() -> str:
 def streaming_minhash_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import streaming_minhash_dedup
 
-    sentinel = spark.createDataFrame(
-        [Row(doc_id=SENTINEL_ORD, text="sentinel flush document beyond every window")]
-    ).withColumn(
-        "ingest_ts", F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000)
-    )
-    replay = _replay_corpus(spark, sf_dir).unionByName(sentinel)
+    sentinel = Row(doc_id=SENTINEL_ORD, text="sentinel flush document beyond every window")
+    replay = _replay_corpus(spark, sf_dir, sentinel=sentinel)
     with scratch() as tmp:
         stream = replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
         out = run_to_memory(streaming_minhash_dedup(stream, window="1 minute", delay="2 minutes"))
@@ -237,12 +239,8 @@ def _streaming_keep_best_oracle() -> str:
 def streaming_keep_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import streaming_keep_best
 
-    sentinel = spark.createDataFrame(
-        [Row(doc_id=SENTINEL_ORD, text="sentinel flush document beyond every window")]
-    ).withColumn(
-        "ingest_ts", F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000)
-    )
-    replay = _replay_corpus(spark, sf_dir).unionByName(sentinel)
+    sentinel = Row(doc_id=SENTINEL_ORD, text="sentinel flush document beyond every window")
+    replay = _replay_corpus(spark, sf_dir, sentinel=sentinel)
     with scratch() as tmp:
         stream = replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
         out = run_to_memory(streaming_keep_best(stream, window="1 minute", delay="2 minutes"))
@@ -1250,15 +1248,8 @@ def _gate_verdict_stream(spark: SparkSession, sf_dir: str, path: str) -> DataFra
         .alias("logp"),
     )
 
-    sentinel = spark.createDataFrame(
-        [Row(doc_id=SENTINEL_ORD, text="sentinel flush document beyond every window")]
-    )
-    replay = _replay_corpus(spark, sf_dir).unionByName(
-        sentinel.withColumn(
-            "ingest_ts",
-            F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
-        )
-    )
+    sentinel = Row(doc_id=SENTINEL_ORD, text="sentinel flush document beyond every window")
+    replay = _replay_corpus(spark, sf_dir, sentinel=sentinel)
     stream = (
         replay_stream(path, replay, order=["ingest_ts", "doc_id"])
         .withWatermark("ingest_ts", "2 minutes")
@@ -2135,13 +2126,8 @@ def streaming_bm25_match_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert not set(BM25_QUERY) & set(sentinel_text.split()), (
         "sentinel must contain no query term"
     )
-    sentinel = spark.createDataFrame([Row(doc_id=SENTINEL_ORD, text=sentinel_text)])
-    replay = _replay_corpus(spark, sf_dir).unionByName(
-        sentinel.withColumn(
-            "ingest_ts",
-            F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
-        )
-    )
+    sentinel = Row(doc_id=SENTINEL_ORD, text=sentinel_text)
+    replay = _replay_corpus(spark, sf_dir, sentinel=sentinel)
     with scratch() as tmp:
         stream = (
             replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
@@ -2357,22 +2343,8 @@ def streaming_temperature_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     w = tmix_weights(spark, sf_dir)
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    dups = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + DUP_OFFSET).alias("doc_id"), "lang", "text"
-    )
-    sentinel = spark.createDataFrame(
-        [Row(doc_id=SENTINEL_ORD, lang="SENTINEL", text="sentinel flush")],
-        schema="doc_id long, lang string, text string",
-    )
-    replay = (
-        docs.unionByName(dups)
-        .unionByName(sentinel)
-        .withColumn(
-            "ingest_ts",
-            F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
-        )
-    )
+    sentinel = Row(doc_id=SENTINEL_ORD, lang="SENTINEL", text="sentinel flush")
+    replay = _replay_corpus(spark, sf_dir, ("lang", "text"), sentinel)
     with scratch() as tmp:
         stream = (
             replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
@@ -2487,13 +2459,8 @@ def streaming_dsir_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio = dsir_ratio_table(spark, sf_dir).localCheckpoint(eager=True)
 
     sentinel_text = "sentinel flush marker past the final minute"
-    sentinel = spark.createDataFrame([Row(doc_id=SENTINEL_ORD, text=sentinel_text)])
-    replay = _replay_corpus(spark, sf_dir).unionByName(
-        sentinel.withColumn(
-            "ingest_ts",
-            F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
-        )
-    )
+    sentinel = Row(doc_id=SENTINEL_ORD, text=sentinel_text)
+    replay = _replay_corpus(spark, sf_dir, sentinel=sentinel)
     with scratch() as tmp:
         stream = (
             replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
@@ -2718,22 +2685,8 @@ def streaming_ppl_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = bigram_lm_table(spark, sf_dir).localCheckpoint(eager=True)
     th = ppl_sampled_thresholds(spark, sf_dir).localCheckpoint(eager=True)
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    dups = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + DUP_OFFSET).alias("doc_id"), "text", "lang"
-    )
-    sentinel = spark.createDataFrame(
-        [Row(doc_id=SENTINEL_ORD, text="the a the a the", lang="en")],
-        schema="doc_id long, text string, lang string",
-    )
-    replay = (
-        docs.unionByName(dups)
-        .unionByName(sentinel)
-        .withColumn(
-            "ingest_ts",
-            F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
-        )
-    )
+    sentinel = Row(doc_id=SENTINEL_ORD, text="the a the a the", lang="en")
+    replay = _replay_corpus(spark, sf_dir, ("text", "lang"), sentinel)
     with scratch() as tmp:
         stream = (
             replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
@@ -2844,22 +2797,8 @@ def _streaming_gopher_oracle() -> str:
 def streaming_gopher_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import gopher_flagged
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    dups = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + DUP_OFFSET).alias("doc_id"), "text"
-    )
-    sentinel = spark.createDataFrame(
-        [Row(doc_id=SENTINEL_ORD, text="the a sentinel flush marker")],
-        schema="doc_id long, text string",
-    )
-    replay = (
-        docs.unionByName(dups)
-        .unionByName(sentinel)
-        .withColumn(
-            "ingest_ts",
-            F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
-        )
-    )
+    sentinel = Row(doc_id=SENTINEL_ORD, text="the a sentinel flush marker")
+    replay = _replay_corpus(spark, sf_dir, sentinel=sentinel)
     with scratch() as tmp:
         stream = (
             replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
@@ -2995,14 +2934,7 @@ def _streaming_source_cap_oracle() -> str:
     "Hash-matches the arrival-order SQL oracle.",
 )
 def streaming_source_cap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    dups = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + DUP_OFFSET).alias("doc_id"), "source"
-    )
-    replay = docs.unionByName(dups).withColumn(
-        "ingest_ts",
-        F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
-    )
+    replay = _replay_corpus(spark, sf_dir, ("source",))
     with scratch() as tmp:
         stream = replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])
         return run_to_memory(source_cap_stream(stream))
@@ -3082,22 +3014,8 @@ def streaming_quality_classifier_q(spark: SparkSession, sf_dir: str) -> DataFram
 
     from .text import qclf_feature
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    dups = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + DUP_OFFSET).alias("doc_id"), "text"
-    )
-    sentinel = spark.createDataFrame(
-        [Row(doc_id=SENTINEL_ORD, text="the a the a the")],
-        schema="doc_id long, text string",
-    )
-    replay = (
-        docs.unionByName(dups)
-        .unionByName(sentinel)
-        .withColumn(
-            "ingest_ts",
-            F.timestamp_millis(F.lit(INGEST_BASE_MS) + F.col("doc_id") * 1000),
-        )
-    )
+    sentinel = Row(doc_id=SENTINEL_ORD, text="the a the a the")
+    replay = _replay_corpus(spark, sf_dir, sentinel=sentinel)
     with scratch() as tmp:
         stream = (
             replay_stream(f"{tmp}/in", replay, order=["ingest_ts", "doc_id"])

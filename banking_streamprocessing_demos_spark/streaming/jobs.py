@@ -657,8 +657,6 @@ def run_streaming_pack(
     a batch, offsets come from the same recursive distributed prefix
     sum the batch op uses (doc_id order).  ``doc_stream`` needs
     (doc_id, text)."""
-    from pyspark.sql.utils import AnalysisException
-
     from ..operators.packing import exclusive_prefix_sum
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -666,11 +664,11 @@ def run_streaming_pack(
         spaces = F.length(F.col("text")) - F.length(F.expr("replace(text, ' ', '')"))
         toks = batch_df.select("doc_id", (spaces + 1).cast("long").alias("n_tokens"))
         local = exclusive_prefix_sum(toks, "doc_id", "n_tokens", "local_off")
-        try:
-            prev = spark.read.parquet(state_dir).filter(F.col("batch_id") < batch_id)
+        carry = 0
+        if batch_id > 0:
+            prev = spark.read.schema("batch_tokens long, batch_id long").parquet(state_dir)
+            prev = prev.filter(F.col("batch_id") < batch_id)
             carry = prev.agg(F.coalesce(F.sum("batch_tokens"), F.lit(0))).first()[0]
-        except AnalysisException:
-            carry = 0
         start = F.col("local_off") + F.lit(int(carry))
         # integer `div` (not float division, exact only < 2^53 cumulative
         # tokens) so the "pure integer arithmetic end-to-end" contract
@@ -721,8 +719,6 @@ def run_streaming_reservoir(
     (eager localCheckpoint decouples the read from the overwrite);
     state outside the store is ONE k-row table, and per-batch work is
     O(batch + k).  ``doc_stream`` needs (doc_id, text) columns."""
-    from pyspark.sql.utils import AnalysisException
-
     from ..functions.expressions import det_uniform
 
     spaces = F.length(F.col("text")) - F.length(F.expr("replace(text, ' ', '')"))
@@ -731,17 +727,17 @@ def run_streaming_reservoir(
     # smp5_weighted_sample and its DuckDB oracle (bit parity)
     u = det_uniform("doc_id", seed=seed)
     key = F.round(F.pow(u, F.lit(1.0) / n_tokens.cast("double")), 9)
-    scored_cols = ["doc_id", "n_tokens", "sample_key"]
+    scored_schema = "doc_id long, n_tokens long, sample_key double"
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         scored = batch_df.select(
             "doc_id", n_tokens.alias("n_tokens"), key.alias("sample_key")
         )
-        try:
-            current = spark.read.parquet(reservoir_dir).select(*scored_cols)
-        except AnalysisException:
-            current = spark.createDataFrame([], "doc_id long, n_tokens long, sample_key double")
+        if batch_id == 0:
+            current = spark.createDataFrame([], scored_schema)
+        else:
+            current = spark.read.schema(scored_schema).parquet(reservoir_dir)
         # foreachBatch is at-least-once: a replayed batch (reservoir
         # overwritten, checkpoint not yet committed) unions the same docs
         # in again.  dropDuplicates makes the merge a SET union, so a

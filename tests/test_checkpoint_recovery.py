@@ -177,3 +177,57 @@ def test_streams_sized_to_cores_old_checkpoint_keeps_its_count(
 
     assert 0 < len(phase1) < len(recovered), "alerts must span the restart"
     _assert_same_output_no_dupes(recovered, reference)
+
+
+def test_mid_batch_crash_replay_of_the_production_sink(spark, tmp_path_factory):
+    """A crash after ``run_detector_pipeline``'s sink wrote batch N but
+    before Spark logged ``commits/N``: on restart Spark runs batch N
+    again.  Its ``batch_id=N`` partitions are dynamically overwritten, so
+    the alerts equal an uninterrupted run's with no duplicate
+    ``(message_id, kind)``, and the per-kind summary counts add up to the
+    reference's."""
+    from banking_streamprocessing_demos_spark.streaming import jobs
+
+    def run_pipeline(events_dir, out_dir, ckpt):
+        stream = read_event_stream_from_files(spark, events_dir, max_files_per_trigger=1)
+        detected = detect_undelivered(stream, TIMEOUT_MS, watermark_delay="10 seconds")
+        alerts, summary = os.path.join(out_dir, "alerts"), os.path.join(out_dir, "summary")
+        q = finish(jobs.run_detector_pipeline(detected, alerts, summary, ckpt))
+        counts = spark.read.parquet(summary).toPandas().groupby("kind")["cnt"].sum().to_dict()
+        return q.recentProgress[0]["batchId"], spark.read.parquet(alerts).toPandas(), counts
+
+    full_dir = str(tmp_path_factory.mktemp("crash_full"))
+    part_dir = str(tmp_path_factory.mktemp("crash_part"))
+    out_dir = str(tmp_path_factory.mktemp("crash_out"))
+    ckpt = str(tmp_path_factory.mktemp("crash_ckpt"))
+    pdf = generate_events(spark, CFG).toPandas()
+    _write_time_ordered_chunks(pdf, full_dir)
+    chunks = sorted(glob.glob(os.path.join(full_dir, "*.parquet")))
+    # phase 1 ends before the earliest linger timer (see
+    # test_restart_after_linger_timer_no_dupes_no_loss)
+    cut = 5
+    assert len(chunks) > cut
+
+    _, reference, ref_counts = run_pipeline(
+        full_dir,
+        str(tmp_path_factory.mktemp("crash_ref_out")),
+        str(tmp_path_factory.mktemp("crash_ref_ckpt")),
+    )
+
+    for f in chunks[:cut]:
+        shutil.copy2(f, part_dir)
+    _, phase1, _ = run_pipeline(part_dir, out_dir, ckpt)
+    # the crash: the last batch's sink output is on disk, its commit is not
+    last = max(int(n) for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit())
+    assert os.path.isdir(os.path.join(out_dir, "summary", f"batch_id={last}"))
+    for name in (str(last), f".{last}.crc"):  # the entry and its local-FS checksum
+        os.remove(os.path.join(ckpt, "commits", name))
+
+    for f in chunks[cut:]:
+        shutil.copy2(f, part_dir)
+    first_batch, recovered, counts = run_pipeline(part_dir, out_dir, ckpt)
+
+    assert first_batch == last, "the restart must run the uncommitted batch again"
+    assert 0 < len(phase1) < len(recovered), "alerts must span the restart"
+    _assert_same_output_no_dupes(recovered, reference)
+    assert counts == ref_counts

@@ -326,3 +326,18 @@ def test_cited_files_exist(doc_text):
     }
     missing = {doc: names for doc, names in missing.items() if names}
     assert not missing, f"docs cite files that do not exist: {missing}"
+
+
+REGISTERED_COUNT = re.compile(r"\b(\d+)\s+registered\s+queries\b", re.I)
+
+
+def test_registered_query_counts_match_registry(doc_text):
+    """Every "<N> registered queries" in the live docs is the size of the
+    registry, so adding or removing a query cannot leave a stale count."""
+    import __spark_entry__ as entrymod
+
+    n = len(entrymod.queries())
+    cited = {doc: {int(m) for m in REGISTERED_COUNT.findall(text)} for doc, text in doc_text.items()}
+    assert any(cited.values()), "no doc cites a registered query count"
+    stale = {doc: sorted(counts - {n}) for doc, counts in cited.items() if counts - {n}}
+    assert not stale, f"docs cite registered query counts other than {n}: {stale}"

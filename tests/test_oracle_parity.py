@@ -1,6 +1,7 @@
-"""Differential tests: every registered SQL-expressible query must match
+"""Differential tests: every registered query must match
 its DuckDB oracle at sf0.001 (row count + column names + order-insensitive
-values) — the same gate the round driver applies at sf0.01 (SURVEY §5)."""
+values) — the same gate tools/check_correctness.py applies at sf0.01
+(SURVEY §5)."""
 
 from __future__ import annotations
 
@@ -59,99 +60,17 @@ def test_entry_smoke(spark):
 def test_every_query_has_fn():
     for name in QUERIES:
         assert callable(QUERIES[name])
-    # every oracle key must have a matching query
-    assert set(ORACLES) <= set(QUERIES)
-
-
-DRIVER_WINDOW = 50  # the round driver checks only the first 50 queries()
-
-
-def test_driver_window_rotation_invariants():
-    """Round-7 rotation policy (standing, from round-2 VERDICT #1 /
-    round-3 VERDICT #3): the driver verifies only the first 50 entries
-    of queries(); those slots belong to (a) every query with NO green
-    driver row from any prior round, (b) every query new this round,
-    (c) driver-green flagship refreshes — in that order.  Pin the
-    policy so additions can't silently push never-checked queries back
-    past slot 50."""
-    import __spark_entry__ as entrymod
-
-    window = list(QUERIES)[:DRIVER_WINDOW]
-    in_window = set(window)
-    assert len(window) == DRIVER_WINDOW
-    # (a) promoted never-driver-green queries occupy the head of the window
-    promoted = entrymod._PROMOTED_NEVER_CHECKED
-    assert window[: len(promoted)] == promoted
-    # (b) every round-new query sits inside the window
-    for name in entrymod._ROUND_NEW:
-        assert name in in_window, name
-    # (c) remaining slots are the declared flagship refreshes
-    assert in_window == set(promoted) | set(entrymod._ROUND_NEW) | set(
-        entrymod._FLAGSHIP_REFRESH
-    )
-    # the streaming detector (flagship) keeps earning driver rows
-    assert "st1_streaming_detector" in in_window
-    # every windowed query must have an oracle (full hash check, not rows-only)
-    assert in_window <= set(ORACLES)
-    # nothing demoted is unverified: every demoted query has a green
-    # driver row in SOME prior round's committed artifact
-    import glob
-    import json
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    green = set()
-    # every committed per-round driver artifact (the hardcoded r01..r08
-    # list silently excluded r09's earners once they demoted — glob so
-    # future rounds can't repeat that)
-    for art in sorted(glob.glob(str(root / "CORRECTNESS_r[0-9][0-9].json"))):
-        try:
-            with open(art) as f:
-                rows = json.load(f)
-        except (FileNotFoundError, ValueError):
-            continue
-        green |= {k for k, v in rows.items() if v.get("hash_match")}
-    for name in entrymod._DEMOTED_TAIL:
-        assert name in green, f"demoted without prior driver evidence: {name}"
-    # round-new overflow queries (window full) must carry committed
-    # full-registry evidence instead (the end-of-round artifact: overflow
-    # can land after the round-entry _pre gate was recorded)
-    if entrymod._ROUND_OVERFLOW:
-        # newest committed full-registry artifact (pre or final). Plain
-        # lexicographic order is wrong here: '.' < '_', so "r10.json"
-        # sorts BEFORE "r10_pre.json" and the round-entry _pre rows
-        # would overwrite the end-of-round final rows in update().
-        # Order by (round, is_pre-first) so each round's final artifact
-        # lands last and wins.
-        def _artifact_rank(path):
-            import re
-
-            stem = Path(path).stem  # CORRECTNESS_FULL_r10[_pre]
-            m = re.search(r"_r(\d+)", stem)
-            rnd = int(m.group(1)) if m else -1
-            return (rnd, 0 if stem.endswith("_pre") else 1)
-
-        full = {}
-        arts = glob.glob(str(root / "CORRECTNESS_FULL_r[0-9]*.json"))
-        for art in sorted(arts, key=_artifact_rank):
-            try:
-                with open(art) as f:
-                    full.update(json.load(f))
-            except (FileNotFoundError, ValueError):
-                continue
-        for name in entrymod._ROUND_OVERFLOW:
-            assert name in ORACLES, name
-            assert full.get(name, {}).get("hash_match"), (
-                f"overflow query {name} lacks committed full-registry evidence"
-            )
+    # every query has an oracle and every oracle a query
+    assert set(ORACLES) == set(QUERIES)
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_schema_spark_representable(duck, name):
     """Typed-schema gate (round-1's w4 lesson): every oracle output
     column's Arrow type must map onto a Spark-representable family —
-    DuckDB HUGEINT/DECIMAL/timestamp surfaces hash-mismatch under the
-    driver's typed normalization even when str(v) looks identical."""
+    DuckDB HUGEINT/DECIMAL/timestamp surfaces hash-mismatch under
+    tools/check_correctness.py's typed normalization even when str(v)
+    looks identical."""
     import sys
 
     sys.path.insert(0, ".")
@@ -166,10 +85,10 @@ def test_oracle_schema_spark_representable(duck, name):
         if "UNREPRESENTABLE" in _arrow_family(f.type)
     }
     assert not bad, f"{name}: oracle columns with no Spark twin: {bad} (describe={schema})"
-    # round-3 emb_random_project lesson: the ROUND DRIVER canonicalizes
-    # results via a pandas row sort, which throws on list/struct/map
-    # cells — every registered output must be scalar-only (the Spark
-    # side is held equivalent by the hash gate)
+    # round-3 emb_random_project lesson: canonicalizing results via a
+    # pandas row sort throws on list/struct/map cells — every registered
+    # output must be scalar-only (the Spark side is held equivalent by
+    # the hash gate)
     import pyarrow.types as pat
 
     nested = {
@@ -178,7 +97,7 @@ def test_oracle_schema_spark_representable(duck, name):
         if pat.is_nested(f.type)
     }
     assert not nested, (
-        f"{name}: nested (driver-unhashable) output columns: {nested} — "
+        f"{name}: nested (unhashable) output columns: {nested} — "
         "explode to scalar rows or name per-element columns"
     )
 

@@ -624,7 +624,9 @@ def test_reservoir_replay_idempotent(spark, tmp_path):
     is a SET union on doc_id, so a replayed batch can never seat the
     same document twice and evict a legitimate row.  Simulated by
     re-running the whole stream into the SAME reservoir dir with a
-    fresh checkpoint (every batch replays)."""
+    fresh checkpoint (every batch replays), and by restarting after the
+    last batch's commit entry is deleted (that batch replays against a
+    reservoir that already holds its docs)."""
     from banking_streamprocessing_demos_spark.streaming.jobs import (
         run_streaming_reservoir,
     )
@@ -655,6 +657,12 @@ def test_reservoir_replay_idempotent(spark, tmp_path):
     first = run("ck1")
     second = run("ck2")  # full replay against the populated reservoir
     assert first == second
+    commits = tmp_path / "ck2" / "commits"
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    assert last > 0
+    for name in (str(last), f".{last}.crc"):  # the entry and its local-FS checksum
+        (commits / name).unlink()
+    assert run("ck2") == first  # batch ``last`` merges into itself
 
 
 def test_streaming_gate_matches_batch_gate(spark):

@@ -1,24 +1,19 @@
-"""Local mini-driver: run every __spark_entry__ query on Spark AND its
+"""Parity check: run every __spark_entry__ query on Spark AND its
 DuckDB oracle at a given scale factor, compare row count + column names
-+ column TYPES + order-insensitive values.  Mimics the round driver's
-correctness gate so regressions surface before commit.
++ column TYPES + order-insensitive values.
 
-Typed comparison (round-2 hardening): the round-1 driver failed
-w4_sessionization on value-hash because DuckDB's window SUM over
-integers yields HUGEINT (INT128) — a type with no Spark twin — while
-this gate's str(v) normalization erased the difference.  The oracle
-result is now fetched via Arrow and each output column's type must map
-onto the same type family as the Spark column, with any
-non-Spark-representable type (decimal128 wider than 38, int128
-surfaces) rejected outright.
+Typed comparison: DuckDB's window SUM over integers yields HUGEINT
+(INT128) — a type with no Spark twin — and a str(v) normalization
+alone would hide the difference (w4_sessionization once failed a
+value-hash check this way).  The oracle result is fetched via Arrow
+and each output column's type must map onto the same type family as
+the Spark column, with any non-Spark-representable type (decimal128
+wider than 38, int128 surfaces) rejected outright.
 
 Usage: python tools/check_correctness.py [--json OUT.json] [sf_dir] [query ...]
 
-With --json, per-query results are also written in the round driver's
-CORRECTNESS_r{N}.json shape (rows/schema/hash match booleans + row
-counts) so full-registry runs can be committed as evidence artifacts
-(round-2 ADVICE: the driver window caps at 50 rows; the committed
-CORRECTNESS_FULL_r{N}.json records the whole registry).
+With --json, per-query results (rows/schema/hash match booleans + row
+counts + error) are also written to OUT.json.
 """
 
 from __future__ import annotations
@@ -37,7 +32,7 @@ from banking_streamprocessing_demos_spark.sources.tables import TABLE_NAMES
 
 
 def _arrow_family(t: pa.DataType) -> str:
-    """Collapse an Arrow type to the family the driver's typed
+    """Collapse an Arrow type to the family this check's typed
     normalization distinguishes.  Returns 'UNREPRESENTABLE:<type>' for
     anything with no Spark twin (the w4/HUGEINT class of bug)."""
     if pa.types.is_integer(t):
@@ -145,7 +140,7 @@ def main() -> int:
     for t in TABLE_NAMES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    n_pass = n_fail = n_rows_only = 0
+    n_pass = n_fail = 0
     results: dict[str, dict] = {}
     for name, fn in sorted(qs.items()):
         if only and name not in only:
@@ -160,11 +155,6 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {type(e).__name__}: {e}")
             results[name] = _result(False, False, False, None, None, f"spark: {type(e).__name__}: {e}")
             n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"ROWS-ONLY {name}: {len(srows)} rows, cols={scols} ({time.time()-t0:.1f}s)")
-            results[name] = _result(True, True, None, len(srows), None, "rows-only (no oracle)")
-            n_rows_only += 1
             continue
         try:
             rel = con.execute(oracles[name])
@@ -205,7 +195,7 @@ def main() -> int:
             results[name] = _result(True, True, True, len(srows), len(orows), None)
             n_pass += 1
 
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
+    print(f"\n{n_pass} pass, {n_fail} fail")
     if json_out:
         import json
 

