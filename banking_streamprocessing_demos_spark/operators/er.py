@@ -202,7 +202,11 @@ def _matched(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Spark, same algorithm in DuckDB).  The sorted-token pass "
     "(production practice for short/reordered names) closes the "
     "space-deletion blind spot the round-9 quality report surfaced: "
-    "planted recall is now 500/500 at sf0.01.  Output is every "
+    "every miss was a 7-char 'xxx yyy' name whose DELETED character "
+    "was the separator, breaking both substring keys at once.  The "
+    "sorted-token key is invariant to that, lifting planted recall "
+    "497/500 -> 500/500 (pinned in tests/test_er.py) with candidates "
+    "still bounded by the name-class collision volume.  Output is every "
     "verified (dirty record, clean record) link with the matched "
     "canonical name.  The standard Fellegi-Sunter two-stage shape: at "
     "100 TB all blocking passes are hash-partitioned joins on skinny "

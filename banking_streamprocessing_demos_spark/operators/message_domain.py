@@ -30,22 +30,6 @@ REG = Registry()
 CFG = GeneratorConfig(n_phones=300, n_messages=2000, seed="42")
 TIMEOUT_MS = (CFG.normal_delivery_ms + CFG.delayed_delivery_ms) // 2  # 105 s
 
-# The driver runs every registered query in one session; regenerating
-# (and re-shuffling) the fixture per query would dominate the gate's
-# wall-clock.  Memoize the generated event DataFrame per (session, cfg).
-_EVENTS_CACHE: dict[tuple[int, GeneratorConfig], "DataFrame"] = {}
-
-
-def _events(spark: SparkSession, cfg: GeneratorConfig) -> "DataFrame":
-    # frozen dataclass → hashable: the WHOLE config is the key (a seed+size
-    # key would silently alias configs differing in other fields)
-    key = (id(spark), cfg)
-    df = _EVENTS_CACHE.get(key)
-    if df is None:
-        df = generate_events(spark, cfg).cache()
-        _EVENTS_CACHE[key] = df
-    return df
-
 # ---------------------------------------------------------------------------
 # DuckDB re-implementation of the generator (same md5 derivations)
 # ---------------------------------------------------------------------------
@@ -152,7 +136,7 @@ _PRELUDE = _gen_prelude(CFG)
     "from the event stream, idempotent under at-least-once duplicates.",
 )
 def gen_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return messages_snapshot(_events(spark, CFG))
+    return messages_snapshot(generate_events(spark, CFG))
 
 
 @REG.add(
@@ -178,7 +162,7 @@ def gen_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     "undelivered-message alert set at timeout=105s.",
 )
 def gen_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return timeout_alerts_batch(_events(spark, CFG), TIMEOUT_MS)
+    return timeout_alerts_batch(generate_events(spark, CFG), TIMEOUT_MS)
 
 
 @REG.add(
@@ -197,7 +181,7 @@ def gen_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per carrier from the reconstructed snapshot.",
 )
 def gen_carrier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return carrier_active_counts(_events(spark, CFG))
+    return carrier_active_counts(generate_events(spark, CFG))
 
 
 @REG.add(
@@ -238,7 +222,7 @@ def st1_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import replay_stream, run_to_memory, scratch
 
     with scratch() as tmp:
-        stream = replay_stream(f"{tmp}/in", _events(spark, CFG), order=["timestamp"])
+        stream = replay_stream(f"{tmp}/in", generate_events(spark, CFG), order=["timestamp"])
         return run_to_memory(detect_undelivered(stream, TIMEOUT_MS, watermark_delay="30 seconds"))
 
 
@@ -272,7 +256,7 @@ _PRELUDE_NORMAL = _gen_prelude(CFG_NORMAL)
 def gen_normal_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    snap = messages_snapshot(_events(spark, CFG_NORMAL))
+    snap = messages_snapshot(generate_events(spark, CFG_NORMAL))
     return snap.select(
         "message_id",
         "sent_time",
@@ -304,7 +288,7 @@ def gen_normal_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gen_alert_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    alerts = timeout_alerts_batch(_events(spark, CFG), TIMEOUT_MS)
+    alerts = timeout_alerts_batch(generate_events(spark, CFG), TIMEOUT_MS)
     return alerts.groupBy(
         "carrier",
         (F.floor(F.col("alert_time") / 60000) * 60000).alias("window_ms"),
@@ -331,7 +315,7 @@ def gen_alert_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def smp2_topup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    snap = messages_snapshot(_events(spark, CFG))
+    snap = messages_snapshot(generate_events(spark, CFG))
     active = snap.filter(F.col("status") != "delivered").agg(F.count("*").alias("active_count"))
     return active.select(
         "active_count",
@@ -357,7 +341,7 @@ def smp2_topup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s5_console(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import console_dry_run
 
-    return console_dry_run(_events(spark, CFG))
+    return console_dry_run(generate_events(spark, CFG))
 
 
 @REG.add(
@@ -386,7 +370,7 @@ def s5_console(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st1_join_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.detector_join import detect_undelivered_join
 
-    return detect_undelivered_join(_events(spark, CFG), TIMEOUT_MS)
+    return detect_undelivered_join(generate_events(spark, CFG), TIMEOUT_MS)
 
 
 @REG.add(
@@ -401,4 +385,4 @@ def st1_join_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gen_status_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    return _events(spark, CFG).groupBy("status").agg(F.count("*").alias("cnt"))
+    return generate_events(spark, CFG).groupBy("status").agg(F.count("*").alias("cnt"))

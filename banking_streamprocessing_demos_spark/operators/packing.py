@@ -619,8 +619,9 @@ def tmix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     "policy that DERIVES the per-domain weights from the corpus itself "
     "(q_i proportional to p_i^alpha over token shares, the XLM-R/mT5 "
     "multilingual convention): rare domains up-sample toward uniform, "
-    "dominant ones down-sample, expected total samples preserved "
-    "(sum n_i*w_i = N).  The weight table is a 5-row broadcast derived "
+    "dominant ones down-sample, expected token budget preserved (sum "
+    "n_i*w_i = N over token counts, pytest-pinned within weight "
+    "rounding).  The weight table is a 5-row broadcast derived "
     "from one skinny per-domain token aggregate; replica counts use "
     "pipe_domain_mix's exact mechanics (floor(w) + md5-u16 Bernoulli "
     "against an INTEGER threshold derived in-engine from the DECIMAL "
@@ -716,7 +717,9 @@ SOURCE_CAP_SEED = "srccap"
     "pathological mega-source makes one hot partition, which at "
     "production scale is pre-split by the standing salting machinery "
     "(j8) or replaced by the sampled-threshold trick since ranks "
-    "beyond the cap only need 'kept=false'.",
+    "beyond the cap only need 'kept=false'.  Rank sequence, kept "
+    "counts, and the seeded order are pinned against an independent "
+    "recompute.",
 )
 def pipe_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.expressions import det_hash_hex

@@ -139,11 +139,6 @@ def _unit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return n.select("vec_id", F.transform("v", lambda x: x / F.col("nrm")).alias("u"))
 
 
-def _sub(col: str, m: int):
-    """Sub-vector of subspace m (1-based slice, PQ_SUBDIM dims)."""
-    return F.slice(col, m * PQ_SUBDIM + 1, PQ_SUBDIM)
-
-
 def _self_dot(c: list[float]) -> float:
     """|c|^2 as the engine would fold it: left-associative from 0.0.
     Python floats ARE IEEE doubles.  CAVEAT (round-7 rotation fuzz
@@ -191,7 +186,7 @@ def _dot_sql(a: str, b: str) -> str:
 
 
 def _sub_sql(col: str, m: int) -> str:
-    """SQL twin of _sub: 1-based slice of subspace m."""
+    """Sub-vector of subspace m as SQL (1-based slice, PQ_SUBDIM dims)."""
     return f"slice({col}, {m * PQ_SUBDIM + 1}, {PQ_SUBDIM})"
 
 
@@ -1483,15 +1478,11 @@ def _opq_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dec_sum(expr: F.Column) -> F.Column:
-    """round9 -> DECIMAL(20,9) sum -> double: the order-independent
-    cross-engine-exact aggregate every training statistic uses."""
-    return F.sum(F.round(expr, 9).cast("decimal(20,9)")).cast("double")
-
-
 def _dec_sum_sql(expr_sql: str) -> str:
-    """SQL twin of _dec_sum — the trained-OPQ build issues 153 of these
-    (24 Givens + 129 variance aggregates) and the DSL form cost ~10
+    """round9 -> DECIMAL(20,9) sum -> double as SQL: the
+    order-independent cross-engine-exact aggregate every training
+    statistic uses.  The trained-OPQ build issues 153 of these (24
+    Givens + 129 variance aggregates); a column-expression form cost ~10
     py4j round-trips each (round-13 profile: the whole build was ~70%
     driver-side socket time)."""
     return f"cast(sum(cast(round({expr_sql}, 9) as decimal(20,9))) as double)"
@@ -2095,7 +2086,10 @@ def _bq_oracle_sql() -> str:
     "0.96@64).  Training-free: the quantizer is the sign function — "
     "nothing to sample, broadcast, or retrain on drift, and encode is "
     "a zero-shuffle in-row fold.  Packing was prototyped bit-identical "
-    "across engines before wiring; recall pins in tests/test_pq.py.",
+    "across engines before wiring; recall pins in tests/test_pq.py.  "
+    "The symmetric XOR+popcount scorer ships alongside "
+    "(_bq_hamming_scored) as the right primitive when BOTH sides must "
+    "be compressed (code-inventory ingest gates, the mm_phash shape).",
 )
 def sim_ann_binary(spark: SparkSession, sf_dir: str, rerank: int = BQ_RERANK) -> DataFrame:
     unit = _unit(spark, sf_dir)
@@ -2179,8 +2173,12 @@ def _ivf_bq_oracle_sql() -> str:
     "BinaryIVF ships without one (vs IVF-PQ's residual codes).  "
     "Composes three already-hash-checked fragments (IVF assignment/"
     "probing, BQ packing/scoring, the rerank tail); cell-pruned "
-    "candidate volume x code-width compression multiply.  Recall "
-    "floor vs brute force pinned in tests/test_pq.py.",
+    "candidate volume x code-width compression multiply.  Measured "
+    "when authored: recall@5 = 0.92 at sf0.001 and sf0.01, equal to "
+    "plain sim_ann_ivf, so the binary prescreen at the 64-deep funnel "
+    "adds no loss on top of coarse pruning; the recall floor vs brute "
+    "force and that composition property are pinned in "
+    "tests/test_pq.py.",
 )
 def sim_ann_ivf_binary(
     spark: SparkSession,

@@ -68,13 +68,19 @@ BAL_BUCKET = 2000  # account-balance bucket width (range ~ -1k..10k -> ~6 bucket
                      ELSE 3 END AS BIGINT) AS gen_level
     FROM sized
     """,
-    doc=f"k-anonymity audit (k={K_ANON}) over the customer quasi-"
-    "identifiers (nation, market segment, balance bucket): per record, "
-    "the equivalence-class size at each level of the suppression ladder "
-    "and the first generalization level that reaches k — the decision "
-    "table a governance release job consumes (level 0 = releasable at "
-    "full detail, 3 = suppress entirely).  Three nested-key window "
-    "counts, each one skinny hash shuffle; no joins, nothing collected.",
+    doc=f"k-anonymity audit (Sweeney 2002, k={K_ANON}) over the customer "
+    "quasi-identifiers (nation, market segment, balance bucket): per "
+    "record, the equivalence-class size at each level of the "
+    "suppression ladder (full detail -> bucket suppressed -> segment "
+    "suppressed) and the first generalization level that reaches k — "
+    "the decision table a governance release job consumes before "
+    "customer-derived records enter a training pipeline (level 0 = "
+    "releasable at full detail, 3 = suppress entirely).  Three "
+    "nested-key window counts, each one skinny hash shuffle; no joins, "
+    "nothing collected.  "
+    "Ladder monotonicity, the first-level decision rule, independently "
+    "recomputed class sizes, and a multi-level (discriminative) "
+    "fixture pytest-pinned.",
 )
 def priv_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = load_table(spark, sf_dir, "customer").select(
@@ -132,14 +138,17 @@ L_DIVERSE = 3
     FROM q
     GROUP BY nation, bal_bucket
     """,
-    doc=f"l-diversity audit (l={L_DIVERSE}) over the (nation, balance "
-    "bucket) quasi-identifier classes with market segment as the "
-    "sensitive attribute — the homogeneity-attack check k-anonymity "
+    doc=f"l-diversity audit (Machanavajjhala et al. 2007, l={L_DIVERSE}) "
+    "over the (nation, balance bucket) quasi-identifier classes with "
+    "market segment as the sensitive attribute — the homogeneity-attack "
+    "check k-anonymity "
     "alone misses: a class of any size whose members all share one "
     "segment still discloses it.  One grouped count-distinct per "
     "class (map-side-combinable partial aggregation, one hash "
     "shuffle); pairs with priv_k_anonymity as the release gate's "
-    "second condition.",
+    "second condition.  Class sizes, distinct counts, and the flag are "
+    "recomputed independently in tests, and the fixture is "
+    "discriminative: both flags occur.",
 )
 def priv_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = load_table(spark, sf_dir, "customer").select(
@@ -268,7 +277,9 @@ def _dp_u16_sql(seed: str = DP_SEED) -> str:
     "Bernoulli idiom), so the noised release hash-matches the oracle.  "
     "One grouped count + one in-row CASE: map-side combinable, no "
     "joins, nothing collected; scale = the class-space cardinality, "
-    "independent of record volume.",
+    "independent of record volume.  Noise bound, replay determinism, "
+    "and CDF validity (strictly increasing, symmetric, ends at 65536) "
+    "pytest-pinned.",
 )
 def priv_dp_release(
     spark: SparkSession, sf_dir: str, seed: str = DP_SEED
@@ -362,7 +373,9 @@ def _release_e2e_oracle() -> str:
     "production passes secret randomness.  Scale shape: one grouped "
     "count + two window aggregates over the CELL table (bounded by "
     "class-space cardinality, not record volume) + in-row CASE — "
-    "nothing joins, nothing collected.",
+    "nothing joins, nothing collected.  Gates and noise bounds are "
+    "pinned against an independent recompute at sf0.01 (sf0.001's "
+    "150 customers suppress every class).",
 )
 def priv_release_end_to_end(
     spark: SparkSession, sf_dir: str, seed: str = "dpe"

@@ -183,8 +183,12 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-doc sum (exact, order-independent in both engines); ranking "
     "tiebreaks on doc_id.  Scale shape: the term filter rides the "
     "tokenize explode so the tf shuffle carries only query-term rows; "
-    "df and the length stats are skinny broadcast aggregates; one "
-    "ranking window.  Nothing quadratic, nothing collected.",
+    "df and the length stats are skinny broadcast aggregates; the "
+    "global top-N is TakeOrderedAndProject (per-partition partial "
+    "top-N, merged once — plan-asserted), never a corpus-wide "
+    "single-partition sort window.  Nothing quadratic, nothing "
+    "collected.  Score recomputed from first principles in "
+    "tests/test_retrieval.py.",
 )
 def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = _bm25_scored(spark, sf_dir)
@@ -258,8 +262,10 @@ RRF_SQL = f"""
     "score scales never need calibrating across sources; an ANN "
     "ranking drops into the same union unchanged.  Contributions are "
     "6dp-rounded into DECIMAL before summing (exact, order-free); "
-    "all tiebreaks on doc_id.  Scale shape: each source ranking is "
-    "the family's own bounded plan; the fusion itself touches only "
+    "all tiebreaks on doc_id; fusion arithmetic recomputed "
+    "independently in tests/test_retrieval.py.  Scale shape: each "
+    "source ranking is the family's own bounded plan; the fusion "
+    "itself touches only "
     f"2 x {RRF_DEPTH} rows.",
 )
 def rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -356,7 +362,8 @@ def _hybrid_oracle_sql() -> str:
     f"(vec_id={HYBRID_QUERY_VEC}) through the IDENTICAL 1/(k+rank) "
     "union as rank_fusion_rrf — the executed proof that an ANN ranking "
     "drops into the fusion unchanged, and the actual production hybrid-"
-    "search merge (lexical + vector, rank-only, no score calibration).  "
+    "search merge (lexical + vector, rank-only, no score calibration; "
+    "embedding ids are document ids, the standard RAG layout).  "
     "Contributions are 6dp-rounded into DECIMAL before summing; all "
     "tiebreaks on doc_id.  Scale shape: each source ranking is its "
     "family's own bounded plan (BM25's term-filtered explode, IVF's "
@@ -484,7 +491,10 @@ def _mmr_oracle_sql() -> str:
     "driver-side over <=20 rows (the BPE-merge bounded-collect "
     "precedent); all scoring is exact DECIMAL(18,6) with doc_id "
     "tiebreaks, so the Python greedy and the oracle's unrolled "
-    f"{MMR_K}-step CTE chain agree digit-for-digit.",
+    f"{MMR_K}-step CTE chain agree digit-for-digit.  Pinned: score "
+    "arithmetic identity, monotone non-increasing pick sequence, "
+    "first-pick = relevance argmax, and a planted-clone fixture where "
+    "the penalty displaces a near-duplicate.",
 )
 def rank_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from decimal import ROUND_HALF_UP, Decimal

@@ -731,7 +731,8 @@ ARROW_GATE_CELLS = 32  # smallest above-floor sizing: routes to arrow
     "at the same sizing, so every assignment, probe, and rerank the "
     "arrow stage produces is value-hash-checked against DuckDB — the "
     "cross-engine proof that BLAS association-order ULP never flips a "
-    "rank on this corpus, not just a pytest pin.",
+    "rank on this corpus, beyond the pytest row-for-row pins at 16/64 "
+    "cells.",
 )
 def sim_ann_ivf_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim_ann_ivf(spark, sf_dir, n_cells=ARROW_GATE_CELLS)

@@ -37,12 +37,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.generator import generate_events
 from ..sources.tables import load_table
 from ..streaming.jobs import finish, replay_stream, run_to_memory, scratch
 from . import Registry
 # the MinHash constants are dedup.minhash_lsh_oracle's family
 from .dedup import MINHASH_BANDS, NGRAM_N, _band_sql, _minhash_sig_sql, _shingles_raw_sql
-from .message_domain import CFG, _PRELUDE, _events
+from .message_domain import CFG, _PRELUDE
 from .sketches import (
     CMS_D,
     HLL_REM_MOD,
@@ -795,7 +796,7 @@ def _events_replay(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
     from ``path``.  The sentinel advances the global watermark past
     every real session/window so append-mode state flushes; returns
     (stream, max real event ts)."""
-    events = _events(spark, CFG)
+    events = generate_events(spark, CFG)
     max_ts = events.agg(F.max("timestamp")).first()[0]
     sentinel_ts = max_ts + SESSION_GAP_MS + 120_000 + 60_000
     sentinel = spark.createDataFrame(
@@ -2092,7 +2093,9 @@ def _streaming_bm25_oracle() -> str:
     "arrivals per ingest minute with matched = score >= the standing "
     "threshold (engine-exact: the 6dp DECIMAL contribution sum is "
     "compared in DECIMAL).  Late re-ingests are scored like any "
-    "arrival — a percolator routes every document it sees.  State: "
+    "arrival — a percolator routes every document it sees (batch == "
+    "stream and copy == original fuzz-pinned in "
+    "tests/test_streaming_twin_fuzz.py).  State: "
     "one row per in-flight (window, doc).  The no-query-term sentinel "
     "is explicitly EXEMPTED from the pre-agg row filter (the predicate "
     "is pushed below the EventTimeWatermark node, so a filtered "
@@ -2243,8 +2246,10 @@ def _streaming_kanon_oracle() -> str:
     "volume.  A far-future sentinel with an out-of-domain nation "
     "closes every real window; it is filtered from the MATERIALIZED "
     "result (a pre-agg filter on a grouping column would be pushed "
-    "past the watermark — the round-8 pushdown trap).  Integer "
-    "counts, closed-form windows: hash-matches the SQL oracle.",
+    "past the watermark — the round-8 pushdown trap).  Per-cohort "
+    "counts reconcile with the batch audit's corpus-wide class sizes "
+    "(pytest-pinned).  Integer counts, closed-form windows: "
+    "hash-matches the SQL oracle.",
 )
 def streaming_k_anonymity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .privacy import BAL_BUCKET, K_ANON
@@ -2443,7 +2448,9 @@ def _streaming_dsir_oracle() -> str:
     "a windowed per-doc aggregation sums the exact DECIMAL "
     "contributions, and kept = (sum >= tau * n_feats) with tau on the "
     "per-feature mean — an exact DECIMAL compare, so the gate boundary "
-    "is engine-exact.  Late re-ingests are scored like any arrival.  "
+    "is engine-exact.  Late re-ingests are scored like any arrival: "
+    "original == re-ingest and batch == stream scores are pinned in "
+    "tests/test_llm_ops.py.  "
     "State: one row per in-flight (window, doc); single-word arrivals "
     "are filtered out before the explode by an explicit size>=2 guard "
     "(matching the batch twin, so 'no feature rows' holds by "
@@ -2552,7 +2559,8 @@ def _streaming_dp_oracle() -> str:
     "randomness or any reader recomputes the noise exactly.  State: "
     "one count cell per in-flight (window, class), bounded by class-"
     "space cardinality; the out-of-domain sentinel closes every real "
-    "window and is filtered from the materialized result.  "
+    "window and is filtered from the materialized result.  The "
+    "per-cohort noise bound is pinned in tests/test_llm_ops.py.  "
     "Hash-matches the SQL oracle.",
 )
 def streaming_dp_release_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2929,7 +2937,9 @@ def _streaming_source_cap_oracle() -> str:
     "Rows emit per processed batch (no watermark dependency, "
     "NoTimeout); within a batch each group sorts by (ingest_ts, "
     "doc_id) so replay batching cannot reorder ranks (the detector's "
-    "determinism discipline).  State: one bigint per source — bounded "
+    "determinism discipline); the counter carrying across micro-batch "
+    "boundaries is pinned by a maxFilesPerTrigger=1 multi-file replay "
+    "test.  State: one bigint per source — bounded "
     "by source cardinality, the smallest keyed state in the repo.  "
     "Hash-matches the arrival-order SQL oracle.",
 )

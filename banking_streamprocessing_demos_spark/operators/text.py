@@ -1427,7 +1427,8 @@ def _fertility_oracle() -> str:
     "the broadcast-sized fitted vocab mapping, one lang groupBy; the "
     "ratios use the exact-integer round6 recipe (no double detour), "
     "and the oracle extends the fit's shared generated CTE chain so "
-    "fit and audit cannot drift.",
+    "fit and audit cannot drift.  Totals reconcile with "
+    "pipe_bpe_encode's per-doc sums (pytest-pinned).",
 )
 def pipe_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     _merges, vocab = _bpe_fit(spark, sf_dir)
@@ -1505,7 +1506,8 @@ PPL_BUCKETS = ("head", "middle", "tail")
     "bucket-EXACT formulation; at 100 TB production follows CCNet "
     "itself — tercile thresholds from a bounded seeded sample, "
     "broadcast back as a compare (the smp1 machinery) — trading "
-    "boundary-exactness for a shuffle-free assignment.",
+    "boundary-exactness for a shuffle-free assignment.  Tercile-size "
+    "and score-ordering invariants pytest-pinned.",
 )
 def pipe_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     lm = text_bigram_lm_score(spark, sf_dir).select("doc_id", "avg_logprob")
@@ -1849,7 +1851,9 @@ def dsir_ratio_table(
     "the corpus — one grouped count each, broadcast back over the "
     "per-doc feature counts (map-side combined); nothing corpus-"
     "quadratic, nothing collected.  That fixed-size property is why "
-    "DSIR scales to full CommonCrawl in the paper.",
+    "DSIR scales to full CommonCrawl in the paper.  Discriminative "
+    "property (target-language docs score higher mean log-weight) and "
+    "bigram-count reconciliation pytest-pinned.",
 )
 def pipe_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE explode+md5 pass: the checkpointed docfeat feeds the ratio
@@ -1916,11 +1920,15 @@ def _dsir_resample_oracle() -> str:
     "the Gumbel-max trick makes top-K selection equal to sampling "
     "without replacement proportional to the importance weight, "
     "entirely in log domain (weights spanning e^-30..e^10 never "
-    "overflow).  Composes pipe_dsir_weights end-to-end: this is the "
-    "table a data-selection run actually materializes.  Keys are "
+    "overflow; u is mapped to (0,1) as (u16+1)/65537 so neither log "
+    "endpoint is reachable).  Composes pipe_dsir_weights end-to-end: "
+    "this is the table a data-selection run actually materializes.  "
+    "Keys are "
     "9dp-rounded (the smp5 convention) with doc_id tiebreaks; the "
     f"top-{DSIR_SAMPLE_K} rides TakeOrderedAndProject (per-partition "
-    "heaps + merge, plan-asserted) — never a corpus-wide sort.",
+    "heaps + merge, plan-asserted) — never a corpus-wide sort.  "
+    "Selection-bias property (sample mean log-weight > corpus mean) "
+    "pytest-pinned.",
 )
 def pipe_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.expressions import det_hash_hex, hex4_to_int
@@ -2045,8 +2053,10 @@ def _gopher_oracle_sql() -> str:
     "All comparisons are on doubles both engines derive identically "
     "from exact integer counts (IEEE division is correctly rounded, so "
     "no cross-engine boundary exists); reported ratios are 6dp-rounded "
-    "for display only.  Pure per-row expressions: no shuffle, no join, "
-    "fully pushed into the parquet scan at any corpus size.",
+    "for display only.  Complements pipe_quality_gate: these are the "
+    "cheap rules a pipeline runs FIRST, before anything needing a "
+    "model or a shuffle.  Pure per-row expressions: no shuffle, no "
+    "join, fully pushed into the parquet scan at any corpus size.",
 )
 def pipe_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gopher_flagged(load_table(spark, sf_dir, "documents").select("doc_id", "text"))

@@ -11,6 +11,10 @@ loops — the generator itself scales to billions of rows):
 - ``sent`` at t0, heartbeats every 30 s while undelivered (ST2,
   py:540-568), ``delivered`` after the per-type delay (ST3, py:570-608)
 - at-least-once duplicate injection (ST6, py:354-358)
+- the event stream in one pass over the message table: each message's
+  lifecycle (``sent``, its heartbeats, then ``delivered``) is one array
+  exploded once, and a second explode over a copy count of 1 or 2 emits
+  the duplicates — one ``Range`` scan per table, no union
 - production-mode semantics: fresh unique message id per message
   (py:503), NOT the dry-run's reuse (py:732) — SURVEY §7 risk item 6.
 
@@ -141,42 +145,24 @@ def generate_events(spark: SparkSession, cfg: GeneratorConfig) -> DataFrame:
     first ``sent`` + heartbeat ``sent`` re-emissions + optional
     ``delivered``, plus injected exact duplicates.  Columns match
     MESSAGE_EVENT_SCHEMA."""
-    msgs = generate_messages(spark, cfg)
+    def event(status: str, ts: F.Column) -> F.Column:
+        return F.struct(F.lit(status).alias("status"), ts.alias("timestamp"))
 
-    first_sent = msgs.select(
-        "message_id",
-        F.lit("sent").alias("status"),
-        "phone_number",
-        "carrier",
-        F.col("sent_time").alias("timestamp"),
+    # sent at sent_time + k * interval for k in 0..n_heartbeats (the first
+    # sent, then its heartbeats); delivered, if it happened in the horizon
+    sent = F.transform(
+        F.sequence(F.lit(0).cast("long"), F.col("n_heartbeats")),
+        lambda k: event("sent", F.col("sent_time") + k * cfg.heartbeat_interval_ms),
     )
-    heartbeats = (
-        msgs.filter(F.col("n_heartbeats") > 0)
-        .select(
-            "message_id",
-            "phone_number",
-            "carrier",
-            "sent_time",
-            F.explode(F.sequence(F.lit(1), F.col("n_heartbeats"))).alias("k"),
-        )
-        .select(
-            "message_id",
-            F.lit("sent").alias("status"),
-            "phone_number",
-            "carrier",
-            (F.col("sent_time") + F.col("k") * cfg.heartbeat_interval_ms).alias("timestamp"),
-        )
+    delivered = F.filter(
+        F.array(event("delivered", F.col("delivered_time"))), lambda e: e["timestamp"].isNotNull()
     )
-    delivered = msgs.filter(F.col("delivered_time").isNotNull()).select(
-        "message_id",
-        F.lit("delivered").alias("status"),
-        "phone_number",
-        "carrier",
-        F.col("delivered_time").alias("timestamp"),
+    events = (
+        generate_messages(spark, cfg)
+        .select("message_id", "phone_number", "carrier", F.explode(F.concat(sent, delivered)).alias("e"))
+        .select("message_id", "e.status", "phone_number", "carrier", "e.timestamp")
     )
-    events = first_sent.unionByName(heartbeats).unionByName(delivered)
     # at-least-once: re-emit a deterministic ~duplicate_rate slice verbatim
-    dups = events.filter(
-        det_uniform("message_id", "timestamp", seed=cfg.seed + "-dup") < cfg.duplicate_rate
-    )
-    return events.unionByName(dups)
+    dup = det_uniform("message_id", "timestamp", seed=cfg.seed + "-dup") < cfg.duplicate_rate
+    copies = F.sequence(F.lit(1), F.when(dup, 2).otherwise(1))
+    return events.select("*", F.explode(copies).alias("copy")).drop("copy")

@@ -4,6 +4,8 @@ event stream, idempotently under duplicates."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -85,6 +87,19 @@ def test_events_deterministic(spark, events):
     again = generate_events(spark, CFG)
     assert events.exceptAll(again).count() == 0
     assert again.exceptAll(events).count() == 0
+
+
+def test_events_scan_the_message_table_once(spark):
+    """generate_events is one pass over the message table: its executed
+    plan holds one Range over the messages and one over the phones.  A
+    union of the lifecycle branches plus a duplicate re-scan would plan
+    the message table (messages and phones) once per branch.  Its own
+    config, so the module's cached ``events`` cannot stand in for the
+    plan."""
+    cfg = GeneratorConfig(n_phones=20, n_messages=50, seed="t1-plan")
+    plan = generate_events(spark, cfg)._jdf.queryExecution().executedPlan().toString()
+    ranges = sorted(int(end) for end in re.findall(r"\bRange \(0, (\d+),", plan))
+    assert ranges == [cfg.n_phones, cfg.n_messages], plan
 
 
 def test_snapshot_reconstructs_ground_truth(msgs, events):

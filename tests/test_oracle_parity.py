@@ -103,14 +103,10 @@ def test_oracle_schema_spark_representable(duck, name):
 
 
 def test_queries_md_documents_every_registered_query():
-    """QUERIES.md <-> registry 1:1 (round-9 close-out pin): every
-    registered query has a `## name [✓]` section and no section
-    documents a query that no longer exists — additions can't silently
-    skip the docs and removals can't leave stale sections."""
-    import re
-    from pathlib import Path
+    """QUERIES.md is exactly `tools/dump_queries.py`'s output: one
+    `## name [✓]` section per registered query, its body the query's
+    `doc=` string — additions can't silently skip the docs, removals
+    can't leave stale sections, and a doc and its section can't drift."""
+    from tools.dump_queries import QUERIES_MD, render
 
-    queries_md = Path(__file__).resolve().parent.parent / "QUERIES.md"
-    doc = set(re.findall(r"^## (\S+) \[", queries_md.read_text(), re.M))
-    assert set(QUERIES) - doc == set(), f"undocumented: {sorted(set(QUERIES) - doc)}"
-    assert doc - set(QUERIES) == set(), f"stale sections: {sorted(doc - set(QUERIES))}"
+    assert QUERIES_MD.read_text() == render(), "QUERIES.md is stale: run python tools/dump_queries.py"

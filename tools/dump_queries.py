@@ -8,11 +8,15 @@ Usage: python tools/dump_queries.py
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, ".")
+ROOT = Path(__file__).resolve().parent.parent
+QUERIES_MD = ROOT / "QUERIES.md"
 
 
-def main() -> None:
+def render() -> str:
+    """QUERIES.md's text: a header, then one section per registered
+    query in registry order, its body the registry ``doc=`` string."""
     from banking_streamprocessing_demos_spark.operators import merge_registries
     import __spark_entry__ as entry
 
@@ -26,7 +30,9 @@ def main() -> None:
         "(✓) that `tools/check_correctness.py` hash-checks (row count +",
         "schema + order-insensitive value hash).",
         "",
-        f"{len(qs)} queries, all hash-checked.",
+        f"{len(qs)} queries, all hash-checked.  Edit a query's `doc=` in",
+        "its registry and rerun the tool; a test fails when this file",
+        "differs from the tool's output.",
         "",
     ]
     for name, q in qs.items():
@@ -34,8 +40,13 @@ def main() -> None:
         lines.append("")
         lines.append(q.doc or "(no doc)")
         lines.append("")
-    open("QUERIES.md", "w").write("\n".join(lines))
-    print(f"wrote QUERIES.md ({len(qs)} queries)")
+    return "\n".join(lines)
+
+
+def main() -> None:
+    sys.path.insert(0, str(ROOT))
+    QUERIES_MD.write_text(render())
+    print(f"wrote {QUERIES_MD}")
 
 
 if __name__ == "__main__":
