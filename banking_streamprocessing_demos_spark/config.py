@@ -1,10 +1,12 @@
-"""Engine configuration — mirrors the reference's Config dataclass
-(phone_message_producer.py:25-67) including rate validation (F11,
-py:64-67).  Times are milliseconds throughout (the wire unit,
-py:406-408); the reference's seconds-based knobs are converted."""
+"""Engine configuration.  GeneratorConfig is the producer: the
+reference's Config dataclass (phone_message_producer.py:25-67) with its
+rate validation (F11, py:64-67), times in milliseconds (the wire unit,
+py:406-408).  EngineConfig is the consumer, read from the environment
+like the reference's env wiring (S6, py:930-953)."""
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 
@@ -61,63 +63,24 @@ class GeneratorConfig:
 
 @dataclass(frozen=True)
 class EngineConfig:
-    """Runtime configuration sourced from the environment, mirroring the
-    reference's Config + env wiring (phone_message_producer.py:25-67,
-    930-953: BOOTSTRAP_URL, SCHEMA_REGISTRY_URL, rates, timings)."""
+    """The consumer's settings: where the topic is and how the detector
+    times messages out.  The producer's knobs live in GeneratorConfig."""
 
     bootstrap_url: str = "localhost:9092"
-    schema_registry_url: str = "http://localhost:8081"
-    topic: str = "message_status"
-
-    total_phone_numbers: int = 1000
-    max_active_messages: int = 100
-    messages_per_batch: int = 50
-    batch_interval_s: int = 60
-    heartbeat_interval_s: int = 30
-
-    delivery_rate: float = 0.85
-    delayed_delivery_rate: float = 0.10
-    never_deliver_rate: float = 0.05
-    normal_delivery_time_s: int = 30
-    delayed_delivery_time_s: int = 180
-
-    # detector knobs (the consumer side the reference never built)
+    topic: str = "message_status"  # phone_message_producer.py:36,942
     timeout_s: int = 105
     watermark_delay_s: int = 30
 
-    def __post_init__(self) -> None:
-        total = self.delivery_rate + self.delayed_delivery_rate + self.never_deliver_rate
-        if abs(total - 1.0) > 1e-9:  # F11, py:64-67
-            raise ValueError(f"delivery rates must sum to 1.0, got {total}")
-
 
 def engine_config_from_env(env: dict[str, str] | None = None) -> EngineConfig:
-    """S6 (py:930-953): build EngineConfig from environment variables,
-    falling back to reference defaults."""
-    import os
-
+    """S6 (py:930-953): read EngineConfig from ``BOOTSTRAP_URL``,
+    ``TOPIC``, ``DETECTOR_TIMEOUT`` and ``WATERMARK_DELAY`` (``env``, or
+    the process environment), falling back to the defaults."""
     e = os.environ if env is None else env
-
-    def geti(k: str, d: int) -> int:
-        return int(e.get(k, d))
-
-    def getf(k: str, d: float) -> float:
-        return float(e.get(k, d))
-
+    d = EngineConfig()
     return EngineConfig(
-        bootstrap_url=e.get("BOOTSTRAP_URL", "localhost:9092"),
-        schema_registry_url=e.get("SCHEMA_REGISTRY_URL", "http://localhost:8081"),
-        topic=e.get("TOPIC", "message_status"),
-        total_phone_numbers=geti("TOTAL_PHONE_NUMBERS", 1000),
-        max_active_messages=geti("MAX_ACTIVE_MESSAGES", 100),
-        messages_per_batch=geti("MESSAGES_PER_BATCH", 50),
-        batch_interval_s=geti("BATCH_INTERVAL", 60),
-        heartbeat_interval_s=geti("HEARTBEAT_INTERVAL", 30),
-        delivery_rate=getf("DELIVERY_RATE", 0.85),
-        delayed_delivery_rate=getf("DELAYED_DELIVERY_RATE", 0.10),
-        never_deliver_rate=getf("NEVER_DELIVER_RATE", 0.05),
-        normal_delivery_time_s=geti("NORMAL_DELIVERY_TIME", 30),
-        delayed_delivery_time_s=geti("DELAYED_DELIVERY_TIME", 180),
-        timeout_s=geti("DETECTOR_TIMEOUT", 105),
-        watermark_delay_s=geti("WATERMARK_DELAY", 30),
+        bootstrap_url=e.get("BOOTSTRAP_URL", d.bootstrap_url),
+        topic=e.get("TOPIC", d.topic),
+        timeout_s=int(e.get("DETECTOR_TIMEOUT", d.timeout_s)),
+        watermark_delay_s=int(e.get("WATERMARK_DELAY", d.watermark_delay_s)),
     )

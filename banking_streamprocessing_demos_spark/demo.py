@@ -22,7 +22,7 @@ import sys
 import time
 
 from .config import GeneratorConfig, engine_config_from_env
-from .session import get_spark, machine_cpus, start_stream
+from .session import get_spark, start_stream
 from .sources.generator import generate_events
 from .sources.rate_stream import message_rate_stream
 from .streaming.detector import detect_undelivered
@@ -30,7 +30,7 @@ from .streaming.jobs import console_dry_run, replay_stream, run_to_memory, scrat
 
 
 def dry_run(args: argparse.Namespace) -> None:
-    spark = get_spark("demo-dry-run", master=f"local[{args.cpus}]")
+    spark = get_spark("demo-dry-run")
     spark.sparkContext.setLogLevel("ERROR")
     cfg = GeneratorConfig(
         n_phones=args.phones, n_messages=args.messages, seed=args.seed
@@ -67,7 +67,7 @@ def dry_run(args: argparse.Namespace) -> None:
 
 
 def live(args: argparse.Namespace) -> None:
-    spark = get_spark("demo-live", master=f"local[{args.cpus}]")
+    spark = get_spark("demo-live")
     spark.sparkContext.setLogLevel("ERROR")
     cfg = GeneratorConfig(seed=args.seed)
     stream = message_rate_stream(
@@ -116,7 +116,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--show", type=int, default=20, help="console lines to print in dry-run")
     ap.add_argument("--rate", type=int, default=10_000, help="events/s in live mode")
     ap.add_argument("--seconds", type=int, default=30, help="live-mode duration")
-    ap.add_argument("--cpus", type=int, default=machine_cpus())
     args = ap.parse_args(argv)
     if args.live:
         live(args)

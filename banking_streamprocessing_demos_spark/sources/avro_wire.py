@@ -26,7 +26,9 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
+from pyspark.sql.types import BinaryType, StructField, StructType
+
+from ..schemas import MESSAGE_EVENT_SCHEMA
 
 MAGIC_BYTE = b"\x00"
 
@@ -132,16 +134,6 @@ WIRE_SCHEMA = StructType(
     ]
 )
 
-DECODED_SCHEMA = StructType(
-    [
-        StructField("message_id", StringType(), False),
-        StructField("status", StringType(), False),
-        StructField("phone_number", LongType(), False),
-        StructField("carrier", StringType(), False),
-        StructField("timestamp", LongType(), False),
-    ]
-)
-
 
 def to_wire(events: DataFrame, key_schema_id: int = 1, value_schema_id: int = 2) -> DataFrame:
     """MESSAGE_EVENT_SCHEMA rows → Confluent-framed (key, value) binary
@@ -185,4 +177,4 @@ def from_wire(wire: DataFrame) -> DataFrame:
                 }
             )
 
-    return wire.mapInPandas(dec, DECODED_SCHEMA)
+    return wire.mapInPandas(dec, MESSAGE_EVENT_SCHEMA)

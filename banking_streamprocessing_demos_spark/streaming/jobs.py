@@ -376,22 +376,12 @@ def streaming_minhash_dedup(
     they bypass the state store entirely and are NOT in the output —
     callers pass them through as trivially kept.
     """
-    from ..operators.dedup import MINHASH_BANDS, NGRAM_N, minhash_bands
+    from ..operators.dedup import MINHASH_BANDS, NGRAM_N, _grams_expr, minhash_bands
 
     grams_df = (
         docs.withColumn("words", F.split("text", " "))
         .filter(F.size("words") >= NGRAM_N)
-        .withColumn(
-            "grams",
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("words") - NGRAM_N),
-                    lambda i: F.concat_ws(
-                        " ", *[F.get("words", i + k) for k in range(NGRAM_N)]
-                    ),
-                )
-            ),
-        )
+        .withColumn("grams", _grams_expr())
     )
     banded = minhash_bands(grams_df, "doc_id", "ingest_ts")
     if docs.isStreaming:
@@ -447,23 +437,13 @@ def streaming_keep_best(
     (trivially their own representatives) — same contract as
     streaming_minhash_dedup.
     """
-    from ..operators.dedup import NGRAM_N, minhash_sig_key, minhash_sigs
+    from ..operators.dedup import NGRAM_N, _grams_expr, minhash_sig_key, minhash_sigs
 
     grams_df = (
         docs.withColumn("words", F.split("text", " "))
         .filter(F.size("words") >= NGRAM_N)
         .withColumn("word_count", F.size("words").cast("long"))
-        .withColumn(
-            "grams",
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("words") - NGRAM_N),
-                    lambda i: F.concat_ws(
-                        " ", *[F.get("words", i + k) for k in range(NGRAM_N)]
-                    ),
-                )
-            ),
-        )
+        .withColumn("grams", _grams_expr())
     )
     keyed = minhash_sigs(grams_df, "doc_id", "ingest_ts", "word_count").select(
         "doc_id", "ingest_ts", "word_count", minhash_sig_key().alias("sig_key")

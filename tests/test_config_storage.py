@@ -20,18 +20,16 @@ from banking_streamprocessing_demos_spark.sources.storage import (
 
 
 def test_env_config_defaults_and_overrides():
-    cfg = engine_config_from_env({})
-    assert cfg.messages_per_batch == 50 and cfg.delivery_rate == 0.85
-    cfg2 = engine_config_from_env(
-        {"BOOTSTRAP_URL": "k:9092", "MESSAGES_PER_BATCH": "10", "DELIVERY_RATE": "0.80",
-         "DELAYED_DELIVERY_RATE": "0.15"}
+    assert engine_config_from_env({}) == EngineConfig(
+        bootstrap_url="localhost:9092", topic="message_status", timeout_s=105, watermark_delay_s=30
     )
-    assert cfg2.bootstrap_url == "k:9092" and cfg2.messages_per_batch == 10
+    cfg = engine_config_from_env(
+        {"BOOTSTRAP_URL": "k:9092", "TOPIC": "alerts", "DETECTOR_TIMEOUT": "60", "WATERMARK_DELAY": "5"}
+    )
+    assert cfg == EngineConfig(bootstrap_url="k:9092", topic="alerts", timeout_s=60, watermark_delay_s=5)
 
 
 def test_rates_must_sum_to_one():
-    with pytest.raises(ValueError, match="sum to 1.0"):
-        EngineConfig(delivery_rate=0.9, delayed_delivery_rate=0.2, never_deliver_rate=0.05)
     with pytest.raises(ValueError, match="sum to 1.0"):
         GeneratorConfig(normal_rate=0.5, delayed_rate=0.1, never_rate=0.1)
 

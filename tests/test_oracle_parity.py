@@ -1,38 +1,18 @@
 """Differential tests: every registered query must match
-its DuckDB oracle at sf0.001 (row count + column names + order-insensitive
-values) — the same gate tools/check_correctness.py applies at sf0.01
-(SURVEY §5)."""
+its DuckDB oracle at sf0.001 (column names + column type families + row
+count + order-insensitive values) — the same comparison, with the same
+helpers, that tools/check_correctness.py applies at sf0.01 (SURVEY §5)."""
 
 from __future__ import annotations
-
-import math
 
 import pytest
 
 import __spark_entry__ as entrymod
 from tests.conftest import SF_SMALL
+from tools.check_correctness import _arrow_family, normalize, type_problems
 
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
-
-
-def _normalize(rows, cols):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in idx:
-            v = r[i]
-            if isinstance(v, float):
-                vals.append("nan" if math.isnan(v) else f"{v:.6g}")
-            elif isinstance(v, bool):
-                vals.append(str(v).lower())
-            elif v is None:
-                vals.append("\0null")
-            else:
-                vals.append(str(v))
-        out.append("|".join(vals))
-    return sorted(out)
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
@@ -41,13 +21,14 @@ def test_oracle_parity(spark, duck, name):
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
 
-    rel = duck.execute(ORACLES[name])
-    ocols = [d[0] for d in rel.description]
-    orows = rel.fetchall()
+    otable = duck.execute(ORACLES[name]).arrow()
+    ocols = otable.schema.names
+    orows = list(zip(*[c.to_pylist() for c in otable.columns]))
 
     assert sorted(scols) == sorted(ocols), f"{name}: column names differ"
+    assert not type_problems(sdf.dtypes, otable.schema), f"{name}: column types differ"
     assert len(srows) == len(orows), f"{name}: row counts differ"
-    assert _normalize(srows, scols) == _normalize(orows, ocols), f"{name}: values differ"
+    assert normalize(srows, scols) == normalize(orows, ocols), f"{name}: values differ"
 
 
 def test_entry_smoke(spark):
@@ -71,11 +52,6 @@ def test_oracle_schema_spark_representable(duck, name):
     DuckDB HUGEINT/DECIMAL/timestamp surfaces hash-mismatch under
     tools/check_correctness.py's typed normalization even when str(v)
     looks identical."""
-    import sys
-
-    sys.path.insert(0, ".")
-    from tools.check_correctness import _arrow_family
-
     schema = duck.execute(f"DESCRIBE {ORACLES[name]}").fetchall()
     # DESCRIBE gives DuckDB type names; map via a LIMIT 0 arrow fetch
     table = duck.execute(f"SELECT * FROM ({ORACLES[name]}) q LIMIT 0").arrow()

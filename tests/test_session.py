@@ -25,11 +25,27 @@ def test_default_master_has_one_slot_per_cpu(options, monkeypatch):
     assert get_spark()["spark.master"] == "local[3]"
 
 
-def test_demo_cpus_default_is_the_machine(monkeypatch):
-    seen = []
-    monkeypatch.setattr(demo, "dry_run", lambda args: seen.append(args.cpus))
-    demo.main([])
-    assert seen == [machine_cpus()]
+def test_demo_session_uses_get_sparks_default_master(monkeypatch):
+    """Both demo modes leave the master to ``get_spark``, so they honour
+    ``SPARK_GRAFT_CPUS`` like every other entry point."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    masters = []
+
+    class Built(Exception):
+        pass
+
+    def built(self):
+        masters.append(self._options["spark.master"])
+        raise Built
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", built)
+    for argv in ([], ["--live"]):
+        with pytest.raises(Built):
+            demo.main(argv)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    with pytest.raises(Built):
+        demo.main([])
+    assert masters == [f"local[{machine_cpus()}]"] * 2 + ["local[3]"]
 
 
 def test_local_sessions_run_the_package_daemon(options):

@@ -936,3 +936,18 @@ def test_only_jobs_makes_temp_files():
         if (name := getattr(node.func, "attr", getattr(node.func, "id", None))) in makers
     ]
     assert not found, found
+
+
+def test_only_config_and_session_read_the_environment():
+    """``config.py`` (the consumer's settings) and ``session.py`` (the
+    Spark session's) are the package's only readers of ``os.environ``."""
+    pkg = pathlib.Path(jobs.__file__).resolve().parent.parent
+    found = [
+        f"{path.relative_to(pkg)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        if str(path.relative_to(pkg)) not in {"config.py", "session.py"}
+        for node in ast.walk(ast.parse(path.read_text()))
+        if (isinstance(node, ast.Attribute) and node.attr in {"environ", "getenv"})
+        or (isinstance(node, ast.alias) and node.name in {"environ", "getenv"})
+    ]
+    assert not found, found

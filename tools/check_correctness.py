@@ -10,10 +10,10 @@ and each output column's type must map onto the same type family as
 the Spark column, with any non-Spark-representable type (decimal128
 wider than 38, int128 surfaces) rejected outright.
 
-Usage: python tools/check_correctness.py [--json OUT.json] [sf_dir] [query ...]
+Usage: python tools/check_correctness.py [sf_dir] [query ...]
 
-With --json, per-query results (rows/schema/hash match booleans + row
-counts + error) are also written to OUT.json.
+tests/test_oracle_parity.py applies the same comparison (``normalize``,
+``type_problems``) at sf0.001.
 """
 
 from __future__ import annotations
@@ -123,10 +123,6 @@ def normalize(rows, cols):
 
 def main() -> int:
     argv = sys.argv[1:]
-    json_out = None
-    if argv and argv[0] == "--json":
-        json_out = argv[1]
-        argv = argv[2:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
@@ -141,7 +137,6 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     n_pass = n_fail = 0
-    results: dict[str, dict] = {}
     for name, fn in sorted(qs.items()):
         if only and name not in only:
             continue
@@ -153,19 +148,15 @@ def main() -> int:
             srows = sdf.collect()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {type(e).__name__}: {e}")
-            results[name] = _result(False, False, False, None, None, f"spark: {type(e).__name__}: {e}")
             n_fail += 1
             continue
         try:
             rel = con.execute(oracles[name])
             otable = rel.arrow()
             ocols = otable.schema.names
-            orows = [tuple(r) for r in zip(*[c.to_pylist() for c in otable.columns])]
-            if not otable.columns:
-                orows = []
+            orows = list(zip(*[c.to_pylist() for c in otable.columns]))
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: duckdb error: {type(e).__name__}: {e}")
-            results[name] = _result(False, False, False, len(srows), None, f"duckdb: {type(e).__name__}: {e}")
             n_fail += 1
             continue
         problems = []
@@ -182,38 +173,15 @@ def main() -> int:
                     (a, b) for a, b in zip(s_norm, o_norm) if a != b
                 ][:3]
                 problems.append(f"values differ; first diffs={diffs}")
-        rows_ok = len(srows) == len(orows)
-        schema_ok = sorted(scols) == sorted(ocols) and not type_problems(sdtypes, otable.schema)
         if problems:
             print(f"FAIL {name}: {'; '.join(problems)}")
-            results[name] = _result(
-                rows_ok, schema_ok, False, len(srows), len(orows), "; ".join(problems)
-            )
             n_fail += 1
         else:
             print(f"PASS {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
-            results[name] = _result(True, True, True, len(srows), len(orows), None)
             n_pass += 1
 
     print(f"\n{n_pass} pass, {n_fail} fail")
-    if json_out:
-        import json
-
-        with open(json_out, "w") as f:
-            json.dump(results, f, indent=2)
-        print(f"wrote {json_out} ({len(results)} queries)")
     return 1 if n_fail else 0
-
-
-def _result(rows_match, schema_match, hash_match, spark_rows, oracle_rows, err):
-    return {
-        "rows_match": rows_match,
-        "schema_match": schema_match,
-        "hash_match": hash_match,
-        "spark_rows": spark_rows,
-        "oracle_rows": oracle_rows,
-        "err": err,
-    }
 
 
 if __name__ == "__main__":
