@@ -657,8 +657,7 @@ def _streaming_contamination_oracle() -> str:
     "closed-form ingest window column.",
 )
 def streaming_contamination_check_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import CONTAM_BENCH_MOD, CONTAM_TAU
-    from .dedup import _shingles
+    from .dedup import CONTAM_BENCH_MOD, CONTAM_TAU, _grams_expr, _shingles
 
     # static benchmark side: distinct shingles of every MODth doc
     bench = (
@@ -686,17 +685,10 @@ def streaming_contamination_check_q(spark: SparkSession, sf_dir: str) -> DataFra
             .filter(F.col("doc_id") % CONTAM_BENCH_MOD != 0)
             .withWatermark("ingest_ts", "2 minutes")
         )
-        grams = F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(F.split("text", " ")) - NGRAM_N),
-                lambda i: F.concat_ws(
-                    " ", *[F.get(F.split("text", " "), i + k) for k in range(NGRAM_N)]
-                ),
-            )
-        )
         shingled = (
-            stream.filter(F.size(F.split("text", " ")) >= NGRAM_N)
-            .select("doc_id", "ingest_ts", F.explode(grams).alias("s"))
+            stream.withColumn("words", F.split("text", " "))
+            .filter(F.size("words") >= NGRAM_N)
+            .select("doc_id", "ingest_ts", F.explode(_grams_expr()).alias("s"))
         )
         marked = shingled.join(F.broadcast(bench), "s", "left")
         agg = marked.groupBy(F.window("ingest_ts", "1 minute"), "doc_id").agg(
@@ -818,8 +810,9 @@ def _streaming_sessions_oracle() -> str:
     # session_window touch-merge semantics (pinned by the batch w5 twin's
     # boundary test): a new session starts only when the gap to the
     # previous event EXCEEDS the gap duration; session end = last event
-    # + gap.  new_session is 0 across equal timestamps, so the tie order
-    # inside the running sum cannot move a session boundary.
+    # + gap.  new_session is 0 across equal timestamps, and the running
+    # sum's RANGE frame gives every row of one timestamp the same sum, so
+    # the tie order (exact duplicates included) cannot move a boundary.
     return (
         _PRELUDE
         + f"""
@@ -834,8 +827,7 @@ def _streaming_sessions_oracle() -> str:
     sess AS (
         SELECT phone_number, timestamp,
                CAST(SUM(new_session) OVER (PARTITION BY phone_number
-                    ORDER BY timestamp, message_id, status
-                    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
+                    ORDER BY timestamp) AS BIGINT) AS session_id
         FROM flagged
     )
     SELECT MIN(timestamp) AS session_start_ms,

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import MESSAGES_SCHEMA, PHONE_NUMBERS_SCHEMA
@@ -43,32 +43,33 @@ def insert_or_ignore(
     spark: SparkSession, base_dir: str, name: str, rows: DataFrame, key: str
 ) -> int:
     """U1 (py:133-152): append only rows whose ``key`` is absent — both
-    within the incoming batch (first wins) and against the stored table.
-    Returns the number of rows actually inserted.
+    within the incoming batch (one arbitrary row per key) and against
+    the stored table.  Returns the inserted count = rows this write
+    committed, observed on the write's own single evaluation (so exact
+    even for non-deterministic ids).  AQE sizes the ``rebalance``d
+    output: a small insert writes one file, an empty one none.
 
-    Scale note: the anti-join shuffles on the key unless the incoming
-    batch is small enough to drive a broadcast of its key set; at 100 TB
-    the stored side would be bucketed on the key so the probe is
-    shuffle-free.  (Delta/Iceberg MERGE replaces this whole function when
-    a table format is available.)
+    One writer at a time is assumed: two concurrent writers each
+    anti-join against the table as they listed it, so both can insert a
+    key.  A failed write leaves the table as it was (Spark's commit
+    protocol).  At 100 TB the stored side would be bucketed on the key
+    for a shuffle-free probe, or a Delta/Iceberg MERGE would replace this.
     """
-    existing = read_table(spark, base_dir, name).select(key)
+    path = os.path.join(base_dir, name)
+    obs = Observation()
     fresh = (
-        rows.dropDuplicates([key])  # one arbitrary row per in-batch key
-        .join(existing, key, "left_anti")
-        .persist()  # pin ONE evaluation: count and write must see the
-        # same rows (the plan re-reads the stored table and may contain
-        # non-deterministic ids; recomputation between count and write
-        # could write rows that were never counted)
+        rows.dropDuplicates([key])
+        .join(read_table(spark, base_dir, name).select(key), key, "left_anti")
+        .select(*TABLE_SCHEMAS[name].fieldNames())
+        .hint("rebalance")
+        .observe(obs, F.count(F.lit(1)).alias("n"))
     )
-    try:
-        n = fresh.count()
-        if n:
-            fresh.select(*[f.name for f in TABLE_SCHEMAS[name].fields]).write.mode(
-                "append"
-            ).parquet(os.path.join(base_dir, name))
-    finally:
-        fresh.unpersist()
+    before = set(os.listdir(path))
+    fresh.write.mode("append").parquet(path)
+    n = obs.get["n"]
+    if not n:
+        for f in set(os.listdir(path)) - before:  # Spark's zero-row file + its .crc
+            os.remove(os.path.join(path, f))
     return n
 
 

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from banking_streamprocessing_demos_spark.config import (
@@ -49,9 +52,111 @@ def test_insert_or_ignore(spark, tmp_path):
     stored = read_table(spark, base, "phone_numbers")
     assert stored.count() == 50
     assert stored.select("phone_number").distinct().count() == 50
-    # in-batch duplicate collapse: first wins
+    # in-batch duplicates of stored keys add nothing
     dup_batch = rows.unionByName(rows)
     assert insert_or_ignore(spark, base, "phone_numbers", dup_batch, "phone_number") == 0
+
+
+def _messages(ids):
+    """``messages`` rows keyed ``m<id>`` from a frame with a long ``id``."""
+    return ids.select(
+        F.concat(F.lit("m"), F.col("id").cast("string")).alias("message_id"),
+        (F.lit(5_550_000) + F.col("id")).alias("phone_number"),
+        F.lit("att").alias("carrier"),
+        F.lit("sent").alias("status"),
+        F.lit("normal").alias("delivery_type"),
+        (F.lit(1_700_000_000_000) + F.col("id")).alias("sent_time"),
+        F.lit(None).cast("long").alias("delivered_time"),
+        F.lit(1_700_000_000_000).alias("last_heartbeat"),
+        F.timestamp_millis(F.lit(1_700_000_000_000)).alias("created_at"),
+    )
+
+
+def _messages_table(spark, tmp_path, lo=0, hi=0):
+    base = str(tmp_path)
+    create_table(spark, base, "messages")
+    if hi > lo:
+        assert insert_or_ignore(spark, base, "messages", _messages(spark.range(lo, hi)), "message_id") == hi - lo
+    return base
+
+
+def _files(base):
+    return sorted(os.listdir(os.path.join(base, "messages")))
+
+
+def _parts(base):
+    return [f for f in _files(base) if f.startswith("part-") and f.endswith(".parquet")]
+
+
+def _insert(spark, base, rows):
+    return insert_or_ignore(spark, base, "messages", rows, "message_id")
+
+
+def test_small_insert_writes_one_file(spark, tmp_path):
+    base = _messages_table(spark, tmp_path)
+    before = _parts(base)
+    assert _insert(spark, base, _messages(spark.range(0, 300))) == 300
+    assert len(set(_parts(base)) - set(before)) == 1
+    assert read_table(spark, base, "messages").count() == 300
+
+
+def test_insert_of_stored_keys_returns_zero_and_adds_no_file(spark, tmp_path):
+    base = _messages_table(spark, tmp_path, 0, 300)
+    before = _files(base)
+    stored_again = _messages(spark.range(0, 300)).withColumn("carrier", F.lit("ignored"))
+    assert _insert(spark, base, stored_again) == 0
+    assert _files(base) == before
+    assert read_table(spark, base, "messages").filter(F.col("carrier") == "ignored").count() == 0
+
+
+def test_empty_insert_returns_zero_and_adds_no_file(spark, tmp_path):
+    base = _messages_table(spark, tmp_path, 0, 10)
+    before = _files(base)
+    assert _insert(spark, base, _messages(spark.range(0))) == 0
+    assert _files(base) == before
+
+
+def test_insert_count_with_in_batch_and_stored_duplicates(spark, tmp_path):
+    base = _messages_table(spark, tmp_path, 0, 200)
+    batch = (
+        _messages(spark.range(100, 300))  # 100 stored keys, 100 fresh
+        .unionByName(_messages(spark.range(250, 300)))  # in-batch duplicates
+        .unionByName(_messages(spark.range(300, 320)))
+    )
+    n = _insert(spark, base, batch)
+    stored = read_table(spark, base, "messages")
+    assert n == 120 == stored.count() - 200
+    assert stored.select("message_id").distinct().count() == 320
+
+
+def test_insert_count_is_rows_stored_for_autoincrement_keys(spark, tmp_path):
+    """Keys from ``with_autoincrement_ids`` depend on the partitioning:
+    the count must be the rows this one evaluation wrote."""
+    base = _messages_table(spark, tmp_path)
+    one_part = with_autoincrement_ids(spark.range(0, 300, numPartitions=1))
+    assert _insert(spark, base, _messages(one_part)) == 300
+    three_parts = with_autoincrement_ids(spark.range(0, 300, numPartitions=3))
+    n = _insert(spark, base, _messages(three_parts))
+    stored = read_table(spark, base, "messages")
+    assert n == stored.count() - 300 == 200  # ids 0-99 were stored
+    assert stored.select("message_id").distinct().count() == 500
+
+
+def test_failed_insert_leaves_the_table_as_it_was(spark, tmp_path):
+    base = _messages_table(spark, tmp_path, 0, 100)
+    before_files, before_rows = _files(base), sorted(read_table(spark, base, "messages").collect())
+
+    @F.udf("string")
+    def poison(message_id):
+        if message_id == "m150":
+            raise ValueError("poison row")
+        return "att"
+
+    rows = _messages(spark.range(50, 200)).withColumn("carrier", poison("message_id"))
+    with pytest.raises(PythonException, match="poison row"):
+        _insert(spark, base, rows)
+    assert _files(base) == before_files
+    assert sorted(read_table(spark, base, "messages").collect()) == before_rows
 
 
 def test_robust_json_ingestion_quarantines_poison_pills(spark, tmp_path):
