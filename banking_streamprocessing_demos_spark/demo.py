@@ -22,7 +22,7 @@ import sys
 import time
 
 from .config import GeneratorConfig, engine_config_from_env
-from .session import get_spark, start_stream
+from .session import get_spark
 from .sources.generator import generate_events
 from .sources.rate_stream import message_rate_stream
 from .streaming.detector import detect_undelivered
@@ -80,12 +80,12 @@ def live(args: argparse.Namespace) -> None:
     )
     det = detect_undelivered(stream, timeout_ms=60_000, watermark_delay="5 seconds")
     with scratch() as tmp:
-        q = start_stream(
+        q = (
             det.writeStream.format("memory")
             .queryName("demo_live_out")
             .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt"),
-            spark,
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .start()
         )
         print(f"== live: {args.rate} events/s for {args.seconds}s (Ctrl-C to stop) ==")
         deadline = time.time() + args.seconds

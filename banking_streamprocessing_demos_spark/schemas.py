@@ -11,11 +11,6 @@ StructTypes, no inference, Avro schema JSON kept verbatim for
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    BinaryType,
-    DoubleType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -46,17 +41,6 @@ MESSAGE_STATUS_AVRO_JSON = """{
         {"name": "timestamp", "type": "long"}
     ]
 }"""
-
-MESSAGE_KEY_SCHEMA = StructType([StructField("messageId", StringType(), False)])
-
-MESSAGE_STATUS_SCHEMA = StructType(
-    [
-        StructField("status", StringType(), False),
-        StructField("phoneNumber", LongType(), False),
-        StructField("carrier", StringType(), False),
-        StructField("timestamp", LongType(), False),  # event time, ms epoch
-    ]
-)
 
 # Flattened key+value event record as the engine's canonical stream table
 # (FIXTURES.md §1).  `timestamp` is ms-epoch BIGINT exactly as on the wire
@@ -104,55 +88,4 @@ MESSAGES_SCHEMA = StructType(
     ]
 )
 
-# Alert output of the flagship detector (FIXTURES.md §4).
-ALERT_SCHEMA = StructType(
-    [
-        StructField("message_id", StringType(), False),
-        StructField("phone_number", LongType(), False),
-        StructField("carrier", StringType(), False),
-        StructField("first_sent_time", LongType(), False),
-        StructField("alert_time", LongType(), False),
-        StructField("resolved_late", BooleanType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# LLM-pipeline extension schemas (north-star ops over documents/embeddings)
-# ---------------------------------------------------------------------------
-
-DOCUMENTS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("text", StringType(), True),
-        StructField("lang", StringType(), True),
-        StructField("source", StringType(), True),
-        StructField("n_chars", LongType(), True),
-    ]
-)
-
-EMBEDDINGS_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType(), False),
-        StructField("embedding", ArrayType(FloatType()), True),
-        StructField("label", IntegerType(), True),
-    ]
-)
-
-# Multimodal: opaque binary payload + typed metadata (SURVEY §7.5 stance:
-# media bytes are an opaque `binary` column; decode/feature-extract runs
-# as Arrow-batched pandas over mapInPandas).
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("content", BinaryType(), True),
-        StructField("media_type", StringType(), True),  # image|audio|video|text
-        StructField("n_bytes", LongType(), True),
-        StructField("meta_width", IntegerType(), True),
-        StructField("meta_height", IntegerType(), True),
-        StructField("meta_duration_s", DoubleType(), True),
-    ]
-)
-
 CARRIERS = ["verizon", "att", "t-mobile"]  # py:62; message-tracking.json:28-34
-STATUS_DOMAIN = ["sent", "delivered"]  # py:513,552,592 — wire statuses only
-DELIVERY_TYPES = ["normal", "delayed", "never"]  # py:463-472 (internal)

@@ -6,12 +6,12 @@ Local tests run on ``local[N]`` but every knob here is chosen for the
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing)
 - Arrow on (the stateful streaming operator and any pandas UDF cross the
   JVM/Python boundary in columnar batches, not rows)
-- shuffle partitions: batch queries start at a high initial count
-  (``DEFAULT_SHUFFLE_PARTITIONS``) and AQE coalesces it per stage.
-  Streaming queries run with AQE off, so every micro-batch pays for
-  every partition of every state store; ``start_stream`` starts them at
-  ``defaultParallelism`` (one partition per core), and their checkpoint
-  then pins that count for every restart
+- shuffle partitions: ``defaultParallelism`` (one per core), set on the
+  session once it exists.  Streaming queries run with AQE off, so every
+  micro-batch pays for every partition of every state store; each query
+  copies the session's count when it starts, and its checkpoint then
+  pins that count for every restart.  Batch queries start there too and
+  AQE coalesces per stage
 - RocksDB state store for streaming state that exceeds heap: set
   ``spark.sql.streaming.stateStore.providerClass`` to Spark's
   ``RocksDBStateStoreProvider`` (through ``extra_conf``, or on the
@@ -30,9 +30,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
 MAX_PARTITION_BYTES = 128 * 1024 * 1024
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -47,23 +45,22 @@ def machine_cpus() -> int:
 def get_spark(
     app_name: str = "banking-streamprocessing-engine",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, or one slot per
-    CPU of ``machine_cpus()`` when that is unset.
+    CPU of ``machine_cpus()`` when that is unset.  The session's
+    ``spark.sql.shuffle.partitions`` is set to its ``defaultParallelism``
+    after ``getOrCreate``, so ``extra_conf`` cannot override it: set
+    another count on the returned session.
     """
     if master is None:
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS') or machine_cpus()}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -89,24 +86,6 @@ def get_spark(
         ).config(key, python_path)
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
-
-
-def start_stream(writer: DataStreamWriter, spark: SparkSession) -> StreamingQuery:
-    """``writer.start()`` with ``spark.sql.shuffle.partitions`` set to
-    ``defaultParallelism`` for this query only.
-
-    ``start()`` clones the session conf into the query, so the count is
-    set around the call and the session's own value is put back in a
-    ``finally``.  A query restarted from a checkpoint keeps the count its
-    first start wrote there (Spark restores it from the offset log).
-    A ``foreachBatch`` sink's writes run in the query's session, so they
-    use the same count.  Do not start streams concurrently from two threads on one session:
-    the other thread could start with, or put back, the wrong value."""
-    key = "spark.sql.shuffle.partitions"
-    session_value = spark.conf.get(key)
-    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
-    try:
-        return writer.start()
-    finally:
-        spark.conf.set(key, session_value)
+    spark = builder.getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
+    return spark

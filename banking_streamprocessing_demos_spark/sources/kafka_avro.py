@@ -4,9 +4,10 @@ plain pyspark install, and tests run Kafka-less (SURVEY §7 Phase 3).
 
 When the connector is present (any real cluster), these helpers wire
 the same detector/monitoring jobs to the live topic with the exact
-Confluent-framed Avro serde from avro_wire.py.  Messages are framed
-with ``to_wire``'s default schema ids (1 for the key, 2 for the value);
-these helpers do not contact a schema registry.  The broker and topic
+Confluent-framed Avro serde from avro_wire.py.  The sink registers the
+key and value schemas under the topic's subjects (``<topic>-key``,
+``<topic>-value``) with the schema registry it is given, and frames
+every record with the ids the registry returns.  The broker and topic
 come from ``config.engine_config_from_env`` (S6,
 phone_message_producer.py:930-953).
 """
@@ -17,8 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import engine_config_from_env
-from ..session import start_stream
 from .avro_wire import from_wire, to_wire
+from .schema_registry import SchemaRegistryClient, register_message_schemas
 
 
 def kafka_available(spark: SparkSession) -> bool:
@@ -53,19 +54,23 @@ def read_message_stream(spark: SparkSession, starting_offsets: str = "latest") -
     return from_wire(raw.select("key", "value"))
 
 
-def write_message_stream(events: DataFrame, checkpoint: str) -> StreamingQuery:
+def write_message_stream(
+    events: DataFrame, registry: SchemaRegistryClient, checkpoint: str
+) -> StreamingQuery:
     """MESSAGE_EVENT_SCHEMA stream → Confluent-framed Avro → Kafka sink
     (S1 semantics: keyed by messageId; at-least-once like the reference's
-    acks=all producer, py:354-358 — dedup is the consumer's job, ST6)."""
-    spark = events.sparkSession
-    if not kafka_available(spark):
+    acks=all producer, py:354-358 — dedup is the consumer's job, ST6).
+    Records carry the schema ids ``registry`` assigns to the topic's
+    subjects, as the reference's ``AvroSerializer`` does (py:325-343)."""
+    if not kafka_available(events.sparkSession):
         raise RuntimeError("spark-sql-kafka connector not on classpath")
-    wire = to_wire(events)
     cfg = engine_config_from_env()
-    return start_stream(
+    key_id, value_id = register_message_schemas(registry, cfg.topic)
+    wire = to_wire(events, key_schema_id=key_id, value_schema_id=value_id)
+    return (
         wire.writeStream.format("kafka")
         .option("kafka.bootstrap.servers", cfg.bootstrap_url)
         .option("topic", cfg.topic)
-        .option("checkpointLocation", checkpoint),
-        spark,
+        .option("checkpointLocation", checkpoint)
+        .start()
     )

@@ -3,10 +3,9 @@
 harness used by tests in place of Kafka.
 
 This module is the package's one bounded-run path: ``run_to_memory``
-runs an ``availableNow`` query (started through
-``session.start_stream``) into a memory table, ``finish`` waits on one
-already started, and both fail loudly when the query does not end in
-``RUN_TIMEOUT_S``.  ``_write_batch`` is the one idempotent
+runs an ``availableNow`` query into a memory table, ``finish`` waits
+on one already started, and both fail loudly when the query does not
+end in ``RUN_TIMEOUT_S``.  ``_write_batch`` is the one idempotent
 ``foreachBatch`` write.  ``scratch`` is the package's one temp dir: a
 bounded run's replay input (written by ``replay_stream``), outputs,
 state and checkpoint live under it and are removed when the run ends.
@@ -32,7 +31,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..schemas import MESSAGE_EVENT_SCHEMA
-from ..session import start_stream
 
 # the one wait bound of every bounded (availableNow) run in the package
 RUN_TIMEOUT_S = 300
@@ -166,13 +164,11 @@ def run_to_memory(df: DataFrame, output_mode: str = "append") -> DataFrame:
     spark = df.sparkSession
     try:
         finish(
-            start_stream(
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True),
-                spark,
-            )
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
         )
         return spark.table(name)
     finally:
@@ -232,11 +228,11 @@ def run_detector_pipeline(
         finally:
             batch_df.unpersist()
 
-    return start_stream(
+    return (
         detected.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True),
-        detected.sparkSession,
+        .trigger(availableNow=True)
+        .start()
     )
 
 
@@ -605,11 +601,11 @@ def run_streaming_heavy_hitters(
         finally:
             batch_df.unpersist()
 
-    return start_stream(
+    return (
         cells.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True),
-        cells.sparkSession,
+        .trigger(availableNow=True)
+        .start()
     )
 
 
@@ -671,11 +667,11 @@ def run_streaming_pack(
         totals = spark.createDataFrame([(int(total),)], "batch_tokens long")
         _write_batch(totals, batch_id, state_dir)
 
-    return start_stream(
+    return (
         doc_stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True),
-        doc_stream.sparkSession,
+        .trigger(availableNow=True)
+        .start()
     )
 
 
@@ -731,9 +727,9 @@ def run_streaming_reservoir(
         )
         merged.write.mode("overwrite").parquet(reservoir_dir)
 
-    return start_stream(
+    return (
         doc_stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True),
-        doc_stream.sparkSession,
+        .trigger(availableNow=True)
+        .start()
     )

@@ -41,7 +41,6 @@ def spark():
     s = get_spark(
         "engine-tests",
         master="local[4]",
-        shuffle_partitions=4,
         extra_conf={"spark.sql.autoBroadcastJoinThreshold": "10485760"},
     )
     yield s

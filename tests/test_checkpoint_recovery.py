@@ -109,13 +109,10 @@ def _state_partitions(q) -> set[int]:
     }
 
 
-def test_streams_sized_to_cores_old_checkpoint_keeps_its_count(
-    spark, tmp_path_factory, monkeypatch
-):
-    """``start_stream`` starts a fresh detector pipeline at
-    ``defaultParallelism`` shuffle partitions without touching the
-    session's own value.  A checkpoint first written at another count (an
-    older build started it at the session's 32) restarts at that count —
+def test_streams_sized_to_cores_old_checkpoint_keeps_its_count(spark, tmp_path_factory):
+    """A fresh detector pipeline runs at the session's shuffle partition
+    count, ``defaultParallelism``.  A checkpoint first written at another
+    count (an older build's session held 32) restarts at that count —
     Spark restores it from the offset log — and the restarted query
     emits the same alerts as an uninterrupted run, none twice."""
     from banking_streamprocessing_demos_spark.streaming import jobs
@@ -130,11 +127,11 @@ def test_streams_sized_to_cores_old_checkpoint_keeps_its_count(
         # partitions costs seconds
         stream = read_event_stream_from_files(spark, events_dir, max_files_per_trigger=3)
         detected = detect_undelivered(stream, TIMEOUT_MS, watermark_delay="10 seconds")
-        q = jobs.run_detector_pipeline(
-            detected, os.path.join(out_dir, "alerts"), os.path.join(out_dir, "summary"), ckpt
+        q = finish(
+            jobs.run_detector_pipeline(
+                detected, os.path.join(out_dir, "alerts"), os.path.join(out_dir, "summary"), ckpt
+            )
         )
-        assert spark.conf.get(key) == str(old_count)
-        finish(q)
         return _state_partitions(q), spark.read.parquet(os.path.join(out_dir, "alerts")).toPandas()
 
     full_dir = str(tmp_path_factory.mktemp("sized_full"))
@@ -152,28 +149,26 @@ def test_streams_sized_to_cores_old_checkpoint_keeps_its_count(
     cut = 5
     assert len(chunks) > cut
 
+    partitions, reference = run_pipeline(full_dir, fresh_out, fresh_ckpt)
+    assert partitions == {cores}
+
+    # phase 1 as an older build ran it: a session set to 32
+    for f in chunks[:cut]:
+        shutil.copy2(f, part_dir)
     session_value = spark.conf.get(key)
     spark.conf.set(key, str(old_count))
     try:
-        partitions, reference = run_pipeline(full_dir, fresh_out, fresh_ckpt)
-        assert partitions == {cores}
-
-        # phase 1 as an older build ran it: a plain start() at the
-        # session's count
-        for f in chunks[:cut]:
-            shutil.copy2(f, part_dir)
-        with monkeypatch.context() as m:
-            m.setattr(jobs, "start_stream", lambda writer, _spark: writer.start())
-            partitions, phase1 = run_pipeline(part_dir, old_out, old_ckpt)
-        assert partitions == {old_count}
-
-        # phase 2: the rest arrives and this build restarts the checkpoint
-        for f in chunks[cut:]:
-            shutil.copy2(f, part_dir)
-        partitions, recovered = run_pipeline(part_dir, old_out, old_ckpt)
-        assert partitions == {old_count}
+        partitions, phase1 = run_pipeline(part_dir, old_out, old_ckpt)
     finally:
         spark.conf.set(key, session_value)
+    assert partitions == {old_count}
+
+    # phase 2: the rest arrives and this build restarts the checkpoint from
+    # a session at one partition per core
+    for f in chunks[cut:]:
+        shutil.copy2(f, part_dir)
+    partitions, recovered = run_pipeline(part_dir, old_out, old_ckpt)
+    assert partitions == {old_count}
 
     assert 0 < len(phase1) < len(recovered), "alerts must span the restart"
     _assert_same_output_no_dupes(recovered, reference)

@@ -160,3 +160,34 @@ def test_registered_ids_flow_into_confluent_framing(client, spark):
     assert framed_key_id == key_id
     assert framed_value_id == value_id
     assert client.get_schema(framed_value_id) == MESSAGE_STATUS_AVRO_JSON
+
+
+def test_kafka_sink_frames_with_the_registrys_ids(client, fake, spark, monkeypatch):
+    """``write_message_stream`` registers both schemas under the subjects
+    of ``TOPIC`` and frames every record with the ids the registry
+    returns, not ``to_wire``'s defaults.  The connector is absent here,
+    so the test stops the sink at ``to_wire`` with the framed rows."""
+    from banking_streamprocessing_demos_spark.sources import avro_wire, kafka_avro
+
+    class Framed(Exception):
+        pass
+
+    def to_wire(events, **ids):
+        raise Framed(avro_wire.to_wire(events, **ids))
+
+    # an unrelated schema takes id 1, so the message schemas get 2 and 3
+    client.register("other-value", '"string"')
+    monkeypatch.setenv("TOPIC", "alerts_eu")
+    monkeypatch.setattr(kafka_avro, "kafka_available", lambda _spark: True)
+    monkeypatch.setattr(kafka_avro, "to_wire", to_wire)
+    events = spark.createDataFrame(
+        [("m-1", "sent", 2125550000, "verizon", 1700000000000)],
+        "message_id string, status string, phone_number long, carrier string, timestamp long",
+    )
+    with pytest.raises(Framed) as framed:
+        kafka_avro.write_message_stream(events, client, "unused-checkpoint")
+
+    row = framed.value.args[0].collect()[0]
+    assert confluent_unframe(bytes(row.key))[0] == 2
+    assert confluent_unframe(bytes(row.value))[0] == 3
+    assert fake.subjects == {"other-value": [1], "alerts_eu-key": [2], "alerts_eu-value": [3]}

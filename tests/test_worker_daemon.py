@@ -114,7 +114,7 @@ def test_daemon_starts_without_package_on_pythonpath(tmp_path):
         from pyspark.sql.functions import pandas_udf
         from banking_streamprocessing_demos_spark.session import get_spark
 
-        spark = get_spark("daemon-path", master="local[1]", shuffle_partitions=1)
+        spark = get_spark("daemon-path", master="local[1]")
 
         @pandas_udf("long")
         def plus_one(s: pd.Series) -> pd.Series:

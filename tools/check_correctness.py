@@ -131,7 +131,7 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    spark = get_spark("parity-check", shuffle_partitions=8)
+    spark = get_spark("parity-check")
     con = duckdb.connect()
     for t in TABLE_NAMES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

@@ -143,7 +143,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    spark = get_spark("plan-dump", shuffle_partitions=32)
+    spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
 
     out = [
